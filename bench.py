@@ -36,7 +36,11 @@ from concurrent.futures import ThreadPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from wallet_and_risky_features_data_pipeline_spark.caching import cache_scope
+from wallet_and_risky_features_data_pipeline_spark.caching import (
+    cache_scope,
+    reset_session_memos,
+    timed_isolated,
+)
 from wallet_and_risky_features_data_pipeline_spark.plans.registry import QUERIES
 from wallet_and_risky_features_data_pipeline_spark.session import get_spark
 
@@ -152,10 +156,6 @@ def main() -> None:
     # from reading as a 2x regression on an unlucky sample. Both raw
     # walls are recorded, and the policy is stamped into the JSON
     # ("passes"/"wall_policy") so rounds compare like-for-like.
-    from wallet_and_risky_features_data_pipeline_spark.plans.llm_ops import (
-        reset_session_memos,
-    )
-
     wall_runs: list[float] = []
     passes: list[dict[str, float]] = []
     for _ in range(max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2")))):
@@ -203,18 +203,13 @@ def main() -> None:
     def run_isolated(name: str, runs: int) -> None:
         best = None
         for _ in range(runs):
-            # drop session memos (cluster assignment) so memoized
-            # queries time their real pipeline, not a noop write of the
-            # concurrent tier's checkpointed result
-            reset_session_memos(spark)
-            t0 = time.perf_counter()
+            # memos reset so memoized queries time their real pipeline,
+            # not a noop write of the concurrent tier's memoized result
             try:
-                with cache_scope():
-                    QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+                took = timed_isolated(spark, QUERIES[name], sf_dir)
             except Exception:
                 isolated_errors[name] = traceback.format_exc(limit=3).splitlines()[-1]
                 break  # keep any timing already measured
-            took = time.perf_counter() - t0
             best = took if best is None else min(best, took)
         if best is not None:
             prior = isolated.get(name)
@@ -246,17 +241,13 @@ def main() -> None:
     paired_errors: dict[str, str] = {}
 
     def _timed_once(name: str) -> float | None:
-        reset_session_memos(spark)
-        t0 = time.perf_counter()
         try:
-            with cache_scope():
-                QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            return timed_isolated(spark, QUERIES[name], sf_dir)
         except Exception:
             paired_errors.setdefault(
                 name, traceback.format_exc(limit=3).splitlines()[-1]
             )
             return None
-        return time.perf_counter() - t0
 
     paired_scaled: dict[str, dict] = {}
 

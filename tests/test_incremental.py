@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from wallet_and_risky_features_data_pipeline_spark.caching import reset_session_memos
 from wallet_and_risky_features_data_pipeline_spark.plans.wallet_features import (
     contract_state_from,
 )
@@ -163,7 +164,7 @@ def _fresh_warm(spark, tmp_path, monkeypatch):
     import wallet_and_risky_features_data_pipeline_spark.plans.incremental_plans as inc
 
     monkeypatch.setenv("SPARK_GRAFT_WARM_STATE_DIR", str(tmp_path))
-    inc.reset_lpa_warm_memo(spark)
+    reset_session_memos(spark)
     return inc
 
 
@@ -202,7 +203,7 @@ def test_lpa_warm_state_committed_and_read_back(spark, tmp_path, monkeypatch):
     assert inc.warm_state_meta(store)["n_old"] > 0
 
     # second run with a cold memo: read-back only, NO second build
-    inc.reset_lpa_warm_memo(spark)
+    reset_session_memos(spark)
     again = {
         tuple(r) for r in inc.wallet_label_propagation_warm(spark, SF_SMALL).collect()
     }
@@ -226,7 +227,7 @@ def test_lpa_warm_state_fingerprint_invalidates(spark, tmp_path, monkeypatch):
     assert list_generations(store) == ["gen-000001"]
 
     monkeypatch.setattr(inc, "_LPA_STATE_VERSION", "v1-test-bump")
-    inc.reset_lpa_warm_memo(spark)
+    reset_session_memos(spark)
     inc.wallet_label_propagation_warm(spark, SF_SMALL).collect()
     assert list_generations(store) == ["gen-000001", "gen-000002"]
     assert inc._warm_tag_fp(generation_tag(store)).startswith(

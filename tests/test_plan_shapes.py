@@ -8,6 +8,10 @@ from __future__ import annotations
 
 import pytest
 
+from wallet_and_risky_features_data_pipeline_spark.caching import (
+    peek_session_memo,
+    reset_session_memos,
+)
 from wallet_and_risky_features_data_pipeline_spark.plans.registry import QUERIES
 
 from .conftest import SF_MEDIUM
@@ -532,8 +536,8 @@ def test_warm_tier_delta_scans_push_ts_predicate(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_WARM_STATE_DIR", str(tmp_path))
     # populate the session memo FIRST so the cache-substitution
     # hazard is live during the check
+    reset_session_memos(spark)
     wallet_transactions(spark, SF_MEDIUM).count()
-    inc.reset_lpa_warm_memo(spark)
     try:
         for fn in (
             inc.wallet_coin_balances_warm,
@@ -559,7 +563,7 @@ def test_warm_tier_delta_scans_push_ts_predicate(spark, tmp_path, monkeypatch):
                 f"read pre-split history (no ts pushdown)"
             )
     finally:
-        inc.reset_lpa_warm_memo(spark)
+        reset_session_memos(spark)
 
 
 def test_delta_scan_prunes_date_partitions(spark, tmp_path):
@@ -618,9 +622,6 @@ def test_single_consumer_plans_stream_without_memo_cache(spark):
     memo frame once a nightly session has warmed it, without building
     it themselves."""
     from wallet_and_risky_features_data_pipeline_spark.plans import wallet_model as wm
-    from wallet_and_risky_features_data_pipeline_spark.plans.llm_ops import (
-        reset_session_memos,
-    )
 
     reset_session_memos(spark)
     for name in (
@@ -650,8 +651,7 @@ def test_single_consumer_plans_stream_without_memo_cache(spark):
         "salted cache carries full-width legs — the projection regressed"
     )
     # merely PLANNING the queries above must not have built the memo
-    with wm._WT_LOCK:
-        assert SF_MEDIUM not in wm._WT_MEMO.get(spark, {})
+    assert peek_session_memo(spark, (wm.WT_MEMO, SF_MEDIUM)) is None
 
     # warm the memo the way a nightly (runner.run_features) does...
     wm.wallet_transactions(spark, SF_MEDIUM)

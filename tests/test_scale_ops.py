@@ -98,7 +98,9 @@ def test_read_csv_with_schema(spark, tmp_path):
     assert df.schema == schema and df.count() == 2
 
 
-def test_export_pages_and_foreach_sink(spark, tmp_path):
+def test_export_pages_and_foreach_sink(spark, tmp_path, monkeypatch):
+    import uuid
+
     df = spark.createDataFrame(
         [(i, f"w{i}", float(i)) for i in range(25)], "ts long, wallet string, score double"
     )
@@ -110,6 +112,18 @@ def test_export_pages_and_foreach_sink(spark, tmp_path):
     )
     store = DictStoreClient.read_store(uri)
     assert len(store) == 25 and store["w7"]["score"] == 7.0
+
+    # a later sync of changed values wins the merge even when its
+    # file's uuid sorts before every earlier one
+    monkeypatch.setattr(uuid, "uuid4", lambda: uuid.UUID(int=0))
+    client = DictStoreClient(uri)
+    client.bulk_upsert(
+        [{"ts": i, "wallet": f"w{i}", "score": 10.0 * i} for i in range(25)], "wallet"
+    )
+    client.close()
+    store = DictStoreClient.read_store(uri)
+    assert len(store) == 25
+    assert all(store[f"w{i}"]["score"] == 10.0 * i for i in range(25))
 
 
 def test_ivf_exhaustive_probe_equals_brute_force(spark):

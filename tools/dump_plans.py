@@ -38,9 +38,7 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("wrf-dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
-    from wallet_and_risky_features_data_pipeline_spark.plans.llm_ops import (
-        reset_session_memos,
-    )
+    from wallet_and_risky_features_data_pipeline_spark.caching import reset_session_memos
 
     for name in names:
         # memo reset so each plan shows its ISOLATED (cold-session)

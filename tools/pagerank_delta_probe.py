@@ -14,18 +14,17 @@ Usage:
 from __future__ import annotations
 
 import os
-import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 os.environ.setdefault("SPARK_GRAFT_SCALE_MODE", "local-delta")
 
 from tools import scale_probe as SP  # noqa: E402
-from wallet_and_risky_features_data_pipeline_spark.caching import cache_scope  # noqa: E402
-from wallet_and_risky_features_data_pipeline_spark.plans.llm_ops import (  # noqa: E402
+from wallet_and_risky_features_data_pipeline_spark.caching import (  # noqa: E402
+    cache_scope,
     reset_session_memos,
+    timed_isolated,
 )
 from wallet_and_risky_features_data_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -40,22 +39,11 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     SP.build_replica(spark, {"events"})
 
-    def timed(fn, d):
-        reset_session_memos(spark)
-        t0 = time.perf_counter()
-        with cache_scope():
-            fn(spark, d).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
     for label, d in (("sf0.1", SP.SRC), (f"{SP.COPIES}x", SP.DST)):
         # commit state once (build excluded from the refresh timing)
-        reset_session_memos(spark)
-        with cache_scope():
-            inc.wallet_pagerank_warm(spark, d).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        runs_full = [timed(wallet_pagerank, d) for _ in range(3)]
-        runs_warm = [timed(inc.wallet_pagerank_warm, d) for _ in range(3)]
+        timed_isolated(spark, inc.wallet_pagerank_warm, d)
+        runs_full = [timed_isolated(spark, wallet_pagerank, d) for _ in range(3)]
+        runs_warm = [timed_isolated(spark, inc.wallet_pagerank_warm, d) for _ in range(3)]
         t_full, t_warm = min(runs_full), min(runs_warm)
         print(
             f"pagerank_delta {label:6s} full={t_full:7.2f} s "

@@ -25,7 +25,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from wallet_and_risky_features_data_pipeline_spark.caching import cache_scope
+from wallet_and_risky_features_data_pipeline_spark.caching import (
+    cache_scope,
+    reset_session_memos,
+    timed_isolated,
+)
 from wallet_and_risky_features_data_pipeline_spark.plans.registry import QUERIES
 from wallet_and_risky_features_data_pipeline_spark.session import get_spark
 
@@ -324,41 +328,18 @@ def local_delta_probe(spark) -> None:
     warm dirty-frontier refresh — and hold warm ≡ full at the scaled
     data. The deployed claim is (c) ≪ (a) under local deltas."""
     import wallet_and_risky_features_data_pipeline_spark.plans.incremental_plans as inc
-    from wallet_and_risky_features_data_pipeline_spark.plans.llm_ops import (
-        reset_session_memos,
-    )
     from wallet_and_risky_features_data_pipeline_spark.plans.risk_features import (
         wallet_label_propagation,
     )
 
+    warm_lpa = inc.wallet_label_propagation_warm
     for label, d in (("sf0.1", SRC), (f"{COPIES}x", DST)):
-        # full recompute
-        reset_session_memos(spark)
-        start = time.perf_counter()
-        with cache_scope():
-            wallet_label_propagation(spark, d).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        t_full = time.perf_counter() - start
-
+        t_full = timed_isolated(spark, wallet_label_propagation, d)
         # state build: force a rebuild by clearing this input's store
-        reset_session_memos(spark)
         shutil.rmtree(inc._lpa_state_store(d), ignore_errors=True)
-        start = time.perf_counter()
-        with cache_scope():
-            inc.wallet_label_propagation_warm(spark, d).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        t_build_plus = time.perf_counter() - start
-
+        t_build_plus = timed_isolated(spark, warm_lpa, d)
         # warm refresh only (state committed above)
-        reset_session_memos(spark)
-        start = time.perf_counter()
-        with cache_scope():
-            inc.wallet_label_propagation_warm(spark, d).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        t_warm = time.perf_counter() - start
+        t_warm = timed_isolated(spark, warm_lpa, d)
 
         # date-partitioned-store column (VERDICT r12 #3): materialize
         # the SAME events table hive-partitioned by date (the engine's
@@ -386,19 +367,9 @@ def local_delta_probe(spark) -> None:
             # partitioned writes emit no _SUCCESS at the root with
             # dynamic overwrite on some layouts — stamp completion
             open(os.path.join(dpart, "events.parquet", "_SUCCESS"), "a").close()
-        reset_session_memos(spark)
         shutil.rmtree(inc._lpa_state_store(dpart), ignore_errors=True)
-        with cache_scope():  # state build for the partitioned input
-            inc.wallet_label_propagation_warm(spark, dpart).write.format(
-                "noop"
-            ).mode("overwrite").save()
-        reset_session_memos(spark)
-        start = time.perf_counter()
-        with cache_scope():
-            inc.wallet_label_propagation_warm(spark, dpart).write.format(
-                "noop"
-            ).mode("overwrite").save()
-        t_warm_dp = time.perf_counter() - start
+        timed_isolated(spark, warm_lpa, dpart)  # state build for the partitioned input
+        t_warm_dp = timed_isolated(spark, warm_lpa, dpart)
         print(
             f"local_delta {label:6s} full={t_full:7.2f} s  "
             f"build+refresh={t_build_plus:7.2f} s  warm_refresh={t_warm:7.2f} s  "
@@ -486,10 +457,6 @@ def main() -> None:
         if not os.path.exists(f"{DST}/{t}.parquet"):
             shutil.copyfile(f"{SRC}/{t}.parquet", f"{DST}/{t}.parquet")
 
-    from wallet_and_risky_features_data_pipeline_spark.plans.llm_ops import (
-        reset_session_memos,
-    )
-
     from wallet_and_risky_features_data_pipeline_spark.operators import dedup as _dd
     from wallet_and_risky_features_data_pipeline_spark.plans import (
         risk_features as _rf,
@@ -503,17 +470,11 @@ def main() -> None:
         with cache_scope():
             fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
         for label, d in (("sf0.1", SRC), (f"{COPIES}x", DST)):
-            # memos (cluster assignment, wallet leg table) would let a
-            # later query ride an earlier one's cached pipeline —
-            # reset so every timed run pays its own full cost, exactly
-            # like bench.py's isolated tier
-            reset_session_memos(spark)
+            # isolated like bench.py's tier: memos reset, so a later
+            # query cannot ride an earlier one's cached pipeline
             _dd.LAST_CC_ROUNDS = None
             _rf.LAST_KCORE_ROUNDS = None
-            start = time.perf_counter()
-            with cache_scope():
-                fn(spark, d).write.format("noop").mode("overwrite").save()
-            took = time.perf_counter() - start
+            took = timed_isolated(spark, fn, d)
             rounds = ""
             if _dd.LAST_CC_ROUNDS is not None:
                 rounds += f"  cc_rounds={_dd.LAST_CC_ROUNDS}"

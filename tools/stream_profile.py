@@ -23,10 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pyspark.sql.readwriter as RW
 import pyspark.sql.streaming.query as SQ
 
-from wallet_and_risky_features_data_pipeline_spark.caching import cache_scope
-from wallet_and_risky_features_data_pipeline_spark.plans.llm_ops import (
-    reset_session_memos,
-)
+from wallet_and_risky_features_data_pipeline_spark.caching import timed_isolated
 from wallet_and_risky_features_data_pipeline_spark.plans.registry import QUERIES
 from wallet_and_risky_features_data_pipeline_spark.session import get_spark
 from wallet_and_risky_features_data_pipeline_spark.streaming import stream_jobs as SJ
@@ -94,15 +91,9 @@ def main() -> None:
     for name in names:
         fn = QUERIES[name]
         # one warm pass (codegen/JIT), then the profiled pass
-        reset_session_memos(spark)
-        with cache_scope():
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        timed_isolated(spark, fn, SF_DIR)
         EVENTS.clear()
-        reset_session_memos(spark)
-        t0 = time.perf_counter()
-        with cache_scope():
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        total = round(time.perf_counter() - t0, 3)
+        total = round(timed_isolated(spark, fn, SF_DIR), 3)
         print(f"\n=== {name}: total {total}s ===")
         accounted = 0.0
         for kind, label, val in EVENTS:

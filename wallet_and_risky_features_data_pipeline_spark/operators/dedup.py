@@ -416,7 +416,7 @@ def ngram_capped_shingles(
     )
     if broadcast_dims:
         hot = F.broadcast(hot)
-    # r16 rejected A/Bs, kept for the record (tools/ngram_ab.py):
+    # r16 rejected A/Bs (OPTIMIZATION_r16.md):
     # (a) persisting this stream pre-partitioned on ``shingle`` (so the
     # pair self-join could reuse the cache's layout) measured 1.07× —
     # at bench scale that join is a BroadcastHashJoin (no exchange to

@@ -13,12 +13,11 @@ incremental(b1) + b2 ≡ full(b1 ∪ b2).
 from __future__ import annotations
 
 import os
-import threading
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import session_memo
 from ..streaming.incremental import (
     incremental_auc_rollup,
     incremental_contract_state,
@@ -536,22 +535,6 @@ _LPA_STATE_VERSION = "v6"
 # the adaptive switch in _lpa_warm_final). 5% ≈ where a 3-hop grown
 # frontier on a well-mixed graph stops being a strict subset of it.
 _LPA_DIRTY_MAX_FRACTION = 0.05
-# per-(session, sf_dir) memo for the warm refresh — the warm LPA
-# partition and the incremental modularity share one refresh, like a
-# deployed nightly. WeakKey so dead sessions don't pin plans.
-_LPA_WARM_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-_LPA_WARM_LOCK = threading.Lock()
-
-
-def reset_lpa_warm_memo(spark: SparkSession) -> None:
-    """Drop the session's memoized warm-LPA refresh (bench isolation:
-    each timed run must pay the real store read + dirty rounds, not a
-    memo noop). The STORED generation is untouched — that persistence
-    is the point of the warm tier."""
-    with _LPA_WARM_LOCK:
-        _LPA_WARM_MEMO.pop(spark, None)
 
 
 def _state_fingerprint(sf_dir: str, *params: object, table: str = "events") -> str:
@@ -806,15 +789,9 @@ def _lpa_warm_final(spark: SparkSession, sf_dir: str):
     ``wallet_transactions``: the warm LPA partition and the
     incremental modularity evaluation share one refresh, exactly as
     a deployed nightly would."""
-    with _LPA_WARM_LOCK:
-        per_session = _LPA_WARM_MEMO.setdefault(spark, {})
-        hit = per_session.get(sf_dir)
-        if hit is not None:
-            return hit
-    out = _lpa_refresh_from_store(spark, sf_dir)
-    with _LPA_WARM_LOCK:
-        _LPA_WARM_MEMO.setdefault(spark, {})[sf_dir] = out
-    return out
+    return session_memo(
+        spark, ("lpa_warm", sf_dir), lambda: _lpa_refresh_from_store(spark, sf_dir)
+    )
 
 
 def _lpa_refresh_from_store(spark: SparkSession, sf_dir: str):

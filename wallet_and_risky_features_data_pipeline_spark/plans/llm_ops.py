@@ -9,10 +9,13 @@ value-verified, not just smoke-tested.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import persist_tracked
+from ..caching import persist_tracked, session_memo
+# re-exported: callers that measure the pipeline import it from here
+from ..caching import reset_session_memos  # noqa: F401
 from ..functions.text import (
     LANG_MARKERS,
     ROLLING_HASH_SQL,
@@ -44,34 +47,6 @@ from ..operators.similarity import (
 )
 from ..sources.readers import fan_out, read_table
 
-# Per-session memo for the near-dup cluster assignment (see
-# _cluster_assignment): weak keys so a stopped session's entry is
-# collectable; the lock serializes first computation across the
-# bench's concurrent query threads.
-import threading
-import weakref
-
-_ASSIGN_LOCK = threading.Lock()
-_ASSIGN_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-# Per-session memo for the df-capped trigram INTERSECTION table
-# SHARED by dedup_ngram_jaccard and dedup_containment (VERDICT r14
-# #1): within one query the df-capped shingle stream already persists
-# (the df count, the per-doc sizes and both pair-join sides all read
-# it), so memoizing it costs nothing extra cold — the memo just keeps
-# that materialization alive for the sibling query in a warmed
-# session instead of letting cache_scope release it at query end.
-# The memo grain is the CAPPED STREAM, not the aggregated pair table
-# (r15 №2): the pair table is |pairs|-sized and persisting it was the
-# dominant cost of a cold run, while the stream is what both measures
-# actually share.
-_NGRAM_LOCK = threading.Lock()
-_NGRAM_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
-
 
 def _ngram_dims_broadcastable(sf_dir: str) -> bool:
     """Scale-adaptive dim-broadcast decision from parquet FOOTER
@@ -88,34 +63,34 @@ def _ngram_dims_broadcastable(sf_dir: str) -> bool:
         return False
 
 
+# Session memo of the df-capped trigram stream SHARED by
+# dedup_ngram_jaccard and dedup_containment (VERDICT r14 #1): within
+# one query the df-capped shingle stream already persists (the df
+# count, the per-doc sizes and both pair-join sides all read it), so
+# memoizing it costs nothing extra cold — the memo just keeps that
+# materialization alive for the sibling query in a warmed session
+# instead of letting cache_scope release it at query end. The memo
+# grain is the CAPPED STREAM, not the aggregated pair table (r15 №2):
+# the pair table is |pairs|-sized and persisting it was the dominant
+# cost of a cold run, while the stream is what both measures actually
+# share.
 def _ngram_capped_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The df-capped (doc, shingle) stream at the registry's
     parameters (n=3, max_df=100), computed once per (session, table)."""
     from ..operators.dedup import ngram_capped_shingles
-    from .wallet_model import _memo_storage_level
 
-    with _NGRAM_LOCK:
-        per_session = _NGRAM_MEMO.setdefault(spark, {})
-        idx = per_session.get(sf_dir)
-        if idx is None:
-            docs = fan_out(read_table(spark, sf_dir, "documents"))
-            # persist=False + an untracked persist: the memo must
-            # survive the building query's cache_scope so the sibling
-            # consumer reads it (persist_tracked would release it at
-            # that query's end); reset_session_memos unpersists it.
-            idx = ngram_capped_shingles(
-                docs, "doc_id", "text", n=3, max_df=100, persist=False,
-                broadcast_dims=_ngram_dims_broadcastable(sf_dir),
-            ).persist(_memo_storage_level())
-            per_session[sf_dir] = idx
-        return idx
+    def build() -> DataFrame:
+        docs = fan_out(read_table(spark, sf_dir, "documents"))
+        # persist=False + an untracked persist: the memo must survive
+        # the building query's cache_scope so the sibling consumer
+        # reads it (persist_tracked would release it at that query's
+        # end); reset_session_memos unpersists it.
+        return ngram_capped_shingles(
+            docs, "doc_id", "text", n=3, max_df=100, persist=False,
+            broadcast_dims=_ngram_dims_broadcastable(sf_dir),
+        ).persist(StorageLevel.MEMORY_AND_DISK)
 
-
-def _reset_ngram_memo(spark: SparkSession) -> None:
-    with _NGRAM_LOCK:
-        dropped = _NGRAM_MEMO.pop(spark, None)
-    for df in (dropped or {}).values():
-        df.unpersist()
+    return session_memo(spark, ("ngram_capped", sf_dir), build)
 
 
 # --------------------------------------------------------------------------
@@ -1111,57 +1086,26 @@ def _cluster_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Both registry consumers — ``dedup_cluster_assign`` (the assignment
     itself) and ``dedup_decisions`` (the keep/drop table derived from
-    it) — share this memo, so the expensive MinHash → LSH →
+    it) — share this session memo, so the expensive MinHash → LSH →
     connected-components pipeline runs once per session instead of
     once per consumer (it was the bench's two slowest entries, ~11 s
     each, purely from the recompute). The memo holds the eagerly
     ``localCheckpoint``-ed RESULT (one (doc_id, cluster_id) row per
-    doc — corpus-row-count sized, tiny next to the pair table), keyed
-    weakly by session so a stopped session drops its entry. The lock
-    makes concurrent first callers (the bench warms both consumers in
+    doc — corpus-row-count sized, tiny next to the pair table);
+    concurrent first callers (the bench warms both consumers in
     parallel) wait for one computation rather than racing two.
-
-    Staleness contract: the assignment reflects the table as of the
-    first call in this session — same as any cached/checkpointed
-    DataFrame. A pipeline that rewrites ``documents`` mid-session
-    restarts its session (ours do).
     """
     from ..operators.dedup import connected_components
 
-    with _ASSIGN_LOCK:
-        per_session = _ASSIGN_MEMO.setdefault(spark, {})
-        assigned = per_session.get(sf_dir)
-        if assigned is None:
-            docs = fan_out(read_table(spark, sf_dir, "documents"))
-            signed = minhash_signature(docs, "doc_id", "text")
-            pairs = lsh_candidate_pairs(signed, "doc_id").filter(
-                F.col("est_jaccard") >= 0.5
-            )
-            assigned = connected_components(pairs, docs, "doc_id").localCheckpoint(
-                eager=True
-            )
-            per_session[sf_dir] = assigned
-        return assigned
+    def build() -> DataFrame:
+        docs = fan_out(read_table(spark, sf_dir, "documents"))
+        signed = minhash_signature(docs, "doc_id", "text")
+        pairs = lsh_candidate_pairs(signed, "doc_id").filter(
+            F.col("est_jaccard") >= 0.5
+        )
+        return connected_components(pairs, docs, "doc_id").localCheckpoint(eager=True)
 
-
-def reset_session_memos(spark: SparkSession) -> None:
-    """Drop this session's memoized frames (cluster assignment + the
-    wallet leg table).
-
-    For callers that need to MEASURE the pipeline rather than consume
-    it — bench.py's isolated tier calls this before each timed run so
-    dedup_cluster_assign/dedup_decisions time the real MinHash → LSH →
-    CC computation (and the wallet family its real scan + explosion)
-    instead of a noop write of the memoized result."""
-    from .wallet_model import reset_wallet_memo
-
-    from .incremental_plans import reset_lpa_warm_memo
-
-    with _ASSIGN_LOCK:
-        _ASSIGN_MEMO.pop(spark, None)
-    _reset_ngram_memo(spark)
-    reset_wallet_memo(spark)
-    reset_lpa_warm_memo(spark)
+    return session_memo(spark, ("cluster_assignment", sf_dir), build)
 
 
 def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:

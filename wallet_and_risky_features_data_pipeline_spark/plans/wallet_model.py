@@ -27,12 +27,11 @@ model, shared by every feature-plan oracle.
 
 from __future__ import annotations
 
-import threading
-import weakref
-
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import peek_session_memo, session_memo
 from ..functions.scalars import VALUE_DECIMAL, bucket_key
 from ..sources.readers import read_table
 
@@ -44,19 +43,13 @@ from ..sources.readers import read_table
 ORDER_COLS = ("ts", "priority", "transaction_index", "role_rank", "event_id")
 
 
-# Per-session memo for the role-exploded leg table: ~a dozen registry
+# The memo key of the role-exploded leg table: ~a dozen registry
 # queries (feature rollups, DQ gates, every window family, the
 # incremental engine) all start from the same scan → JSON-extract →
 # inline() explosion; memoizing the persisted legs per (session,
 # sf_dir) computes that base once per session instead of once per
-# query. Same discipline as llm_ops._ASSIGN_MEMO: weak session keys,
-# lock for concurrent first callers, reset_session_memos clears it so
-# the bench's isolated tier still times the real pipeline. Blacklisted
-# variants bypass the memo (different row set).
-_WT_LOCK = threading.Lock()
-_WT_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary()
-)
+# query. Blacklisted variants bypass the memo (different row set).
+WT_MEMO = "wallet_transactions"
 
 
 def wallet_transactions(
@@ -70,47 +63,17 @@ def wallet_transactions(
     ``operators.skew.salted_running_sum`` when dropping them isn't
     acceptable.
 
-    Memo contract: the per-(session, sf_dir) memo assumes the source
-    parquet at ``sf_dir`` is IMMUTABLE for the session's lifetime (the
-    benchmark corpus is; lakehouse stores are read via generation
-    pointers instead, never through this path). If a caller rewrites
-    the events table in-session it must call ``reset_wallet_memo``
-    (or ``reset_session_memos``) first, or it will read stale legs."""
+    The unblacklisted legs are a session memo (``caching`` module
+    docstring: the source must be immutable in-session)."""
     if blacklist:
         return _wallet_transactions_build(spark, sf_dir, blacklist)
-    with _WT_LOCK:
-        per_session = _WT_MEMO.setdefault(spark, {})
-        wt = per_session.get(sf_dir)
-        if wt is None:
-            wt = _wallet_transactions_build(spark, sf_dir, ()).persist(
-                _memo_storage_level()
-            )
-            per_session[sf_dir] = wt
-        return wt
-
-
-def _memo_storage_level():
-    """Storage level for the leg-table memo. Default MEMORY_AND_DISK;
-    ``SPARK_GRAFT_MEMO_STORAGE=disk`` pins it to DISK_ONLY for
-    memory-tight executors — the cached explosion is the largest
-    resident block in the wallet family, and under ~1 GB/core heap at
-    100× density, keeping it off-heap-pressure is the difference
-    between spilling and an executor OOM (PLANS.md §memory-per-core)."""
-    import os
-
-    from pyspark import StorageLevel
-
-    if os.environ.get("SPARK_GRAFT_MEMO_STORAGE", "").lower() == "disk":
-        return StorageLevel.DISK_ONLY
-    return StorageLevel.MEMORY_AND_DISK
-
-
-def reset_wallet_memo(spark: SparkSession) -> None:
-    """Drop (and unpersist) this session's memoized leg tables."""
-    with _WT_LOCK:
-        dropped = _WT_MEMO.pop(spark, None)
-    for df in (dropped or {}).values():
-        df.unpersist()
+    return session_memo(
+        spark,
+        (WT_MEMO, sf_dir),
+        lambda: _wallet_transactions_build(spark, sf_dir, ()).persist(
+            StorageLevel.MEMORY_AND_DISK
+        ),
+    )
 
 
 def wallet_transactions_shared_or_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -122,8 +85,7 @@ def wallet_transactions_shared_or_lazy(spark: SparkSession, sf_dir: str) -> Data
     cannot amortize a cache write it will read exactly once). Never
     BUILDS the memo itself — that choice stays with callers that know
     they fan out (``wallet_transactions``)."""
-    with _WT_LOCK:
-        hit = _WT_MEMO.get(spark, {}).get(sf_dir)
+    hit = peek_session_memo(spark, (WT_MEMO, sf_dir))
     return hit if hit is not None else _wallet_transactions_build(spark, sf_dir, ())
 
 

@@ -49,16 +49,21 @@ class DictStoreClient:
     be pymongo in production; same upsert contract). Each client
     appends JSONL to its own file under the ``uri`` directory —
     executor partitions run in separate worker processes, so shared
-    state must go through storage, exactly like a real sink.
+    state must go through storage, exactly like a real sink. File names
+    start with the zero-padded creation time, so ``read_store``'s
+    name-ordered merge applies later syncs last.
     """
 
     def __init__(self, uri: str) -> None:
         import os
+        import time
         import uuid
 
         self.dir = uri.removeprefix("file://")
         os.makedirs(self.dir, exist_ok=True)
-        self.path = os.path.join(self.dir, f"part-{uuid.uuid4().hex}.jsonl")
+        self.path = os.path.join(
+            self.dir, f"part-{time.time_ns():020d}-{uuid.uuid4().hex}.jsonl"
+        )
         self._fh = None
 
     def bulk_upsert(self, docs: list[dict], key: str) -> int:

@@ -106,6 +106,7 @@ def test_incremental_stitch_under_ansi(ansi_spark):
     property the incremental suite states, now under ANSI)."""
     from pyspark.sql import functions as F
 
+    from wallet_and_risky_features_data_pipeline_spark.operators.joins import upsert_rows
     from wallet_and_risky_features_data_pipeline_spark.plans.risk_features import (
         wallet_auc_rollup,
     )
@@ -131,9 +132,11 @@ def test_incremental_stitch_under_ansi(ansi_spark):
     split = F.lit("2024-01-15").cast("timestamp")
 
     full_state = contract_state_from(wt)
-    merged_state = incremental_contract_state(
-        contract_state_from(wt.filter(F.col("ts") < split)),
-        wt.filter(F.col("ts") >= split),
+    prior_state = contract_state_from(wt.filter(F.col("ts") < split))
+    merged_state = upsert_rows(
+        prior_state,
+        incremental_contract_state(prior_state, wt.filter(F.col("ts") >= split)),
+        ["wallet_address", "contract_address"],
     )
     assert rows(merged_state) == rows(full_state)
 

@@ -6,6 +6,7 @@ shared test session."""
 
 from __future__ import annotations
 
+import gc
 import sys
 import threading
 import time
@@ -94,10 +95,13 @@ def _settled_blocks(spark, done, timeout: float = 30.0) -> dict[int, int]:
     """Cached blocks once ``done(blocks, previous)`` holds or
     ``timeout`` passes: unpersists run async, and JVM GC lets the
     context cleaner drop the blocks of unreachable RDDs (iterative
-    rounds' lineage-cut checkpoints)."""
+    rounds' lineage-cut checkpoints). A Python DataFrame caught in a
+    reference cycle keeps its JVM plan reachable until Python's cycle
+    collector runs, so that runs first."""
     deadline = time.monotonic() + timeout
     last = None
     while True:
+        gc.collect()
         spark._jvm.System.gc()
         time.sleep(0.5)
         blocks = _cached_blocks(spark)

@@ -19,6 +19,44 @@ def work_dir(tmp_path_factory):
     return str(tmp_path_factory.mktemp("wrf_lifecycle"))
 
 
+@pytest.fixture(scope="module")
+def base_sf(tmp_path_factory):
+    """A copy of SF_SMALL's events below the 95th-percentile ts, plus
+    the event_ids left out. A run on it followed by a run on SF_SMALL
+    is a cold build and then a nightly over a late ~5% delta."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(f"{SF_SMALL}/events.parquet")
+    ts = events.column("ts").cast(pa.int64())
+    cut = sorted(ts.to_pylist())[int(0.95 * len(ts))]
+    d = tmp_path_factory.mktemp("sf_base")
+    pq.write_table(events.filter(pc.less(ts, cut)), f"{d}/events.parquet")
+    delta_ids = events.filter(pc.greater_equal(ts, cut)).column("event_id").to_pylist()
+    return str(d), delta_ids
+
+
+def _run_layers(spark, sf_dir, wd):
+    for run in (runner.run_stage, runner.run_features, runner.run_serve):
+        run(spark, sf_dir, wd)
+
+
+def _partition_inodes(gen_dir):
+    """{partition dir: {file name: inode}} of one generation."""
+    import os
+
+    return {
+        part: {
+            f: os.stat(os.path.join(gen_dir, part, f)).st_ino
+            for f in os.listdir(os.path.join(gen_dir, part))
+            if f.endswith(".parquet")
+        }
+        for part in os.listdir(gen_dir)
+        if part.startswith("address_partition=")
+    }
+
+
 def test_full_lifecycle(spark, work_dir):
     from wallet_and_risky_features_data_pipeline_spark.sources.writers import read_store
 
@@ -117,7 +155,7 @@ def test_erase_layer_removes_wallet(spark, work_dir):
     assert read_store(spark, store).count() == total - doomed
 
 
-def test_erase_expires_generation_history(spark, work_dir):
+def test_erase_expires_generation_history(spark, tmp_path, base_sf):
     """Erasure on a generational store must expire old snapshots first:
     after N merges the victim's rows live in every generation, and an
     erase that rewrote only the live one would leave them recoverable
@@ -132,17 +170,19 @@ def test_erase_expires_generation_history(spark, work_dir):
         read_store,
     )
 
-    runner.run_stage(spark, SF_SMALL, work_dir)
-    runner.run_features(spark, SF_SMALL, work_dir)
-    runner.run_features(spark, SF_SMALL, work_dir)  # second merge -> 2nd gen
-    store = f"{work_dir}/features/contract_state"
+    wd = str(tmp_path)
+    base, _ = base_sf
+    for sf_dir in (base, SF_SMALL):  # cold build, then a real delta -> 2nd gen
+        runner.run_stage(spark, sf_dir, wd)
+        runner.run_features(spark, sf_dir, wd)
+    store = f"{wd}/features/contract_state"
     assert len(list_generations(store)) >= 2
 
     feats = read_store(spark, store)
     victim = feats.select("wallet_address").first()[0]
     assert feats.filter(F.col("wallet_address") == victim).count() > 0
 
-    runner.run_erase(spark, SF_SMALL, work_dir, wallets=victim)
+    runner.run_erase(spark, SF_SMALL, wd, wallets=victim)
 
     # live view clean
     assert (
@@ -290,7 +330,7 @@ def test_serve_names_committed_features_generation(spark, tmp_path_factory):
     target2 = f"{wd2}/features/contract_state"
     os.makedirs(f"{target2}/gen-000001")
     open(f"{target2}/gen-000001/part-ghost.parquet", "w").close()
-    with pytest.raises(RuntimeError, match="no\n?.*committed pointer|committed pointer"):
+    with pytest.raises(RuntimeError, match="no committed generation"):
         runner.run_serve(spark, SF_SMALL, wd2)
     assert not os.path.exists(f"{wd2}/watermarks.json") or (
         "serving_last_tx_us" not in json.load(open(f"{wd2}/watermarks.json"))
@@ -314,6 +354,86 @@ def test_serve_refuses_when_recorded_store_vanished(spark, tmp_path_factory):
         runner.run_serve(spark, SF_SMALL, wd)
     with open(f"{wd}/watermarks.json") as f:
         assert json.load(f)["serving_features_generation"] == "gen-000001"
+
+
+def test_serve_refuses_without_committed_features(spark, tmp_path):
+    """Serving on a fresh work dir (features never ran) refuses and
+    writes no serving watermark."""
+    import os
+
+    with pytest.raises(RuntimeError, match="no committed generation"):
+        runner.run_serve(spark, SF_SMALL, str(tmp_path))
+    assert not os.path.exists(f"{tmp_path}/watermarks.json")
+
+
+def test_nightly_merges_touched_pairs_and_empty_nightly_is_noop(
+    spark, tmp_path, base_sf
+):
+    """stage → features → serve chained through the committed stores:
+    the nightly's generation hardlinks every partition its delta did
+    not touch, and a second run over the same source commits no
+    generation, exports no document and leaves the watermarks as
+    they were."""
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+
+    from wallet_and_risky_features_data_pipeline_spark.functions.scalars import (
+        bucket_key,
+    )
+    from wallet_and_risky_features_data_pipeline_spark.plans.wallet_features import (
+        contract_state,
+    )
+    from wallet_and_risky_features_data_pipeline_spark.plans.wallet_model import (
+        wallet_transactions,
+    )
+    from wallet_and_risky_features_data_pipeline_spark.sources.writers import (
+        list_generations,
+        read_store,
+    )
+
+    wd = str(tmp_path)
+    base, delta_ids = base_sf
+    target = f"{wd}/features/contract_state"
+    _run_layers(spark, base, wd)
+    _run_layers(spark, SF_SMALL, wd)
+    assert list_generations(target) == ["gen-000001", "gen-000002"]
+
+    touched = {
+        f"address_partition={r[0]}"
+        for r in wallet_transactions(spark, SF_SMALL)
+        .filter(F.col("event_id").isin(delta_ids))
+        .select(bucket_key(F.col("wallet_address")))
+        .distinct()
+        .collect()
+    }
+    old = _partition_inodes(f"{target}/gen-000001")
+    new = _partition_inodes(f"{target}/gen-000002")
+    untouched = set(old) - touched
+    assert touched and untouched
+    assert {p: new.get(p) for p in untouched} == {p: old[p] for p in untouched}
+
+    def rows(df):
+        cols = sorted(df.columns)
+        return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+    full = contract_state(spark, SF_SMALL)
+    assert rows(read_store(spark, target).select(*full.columns)) == rows(full)
+
+    with open(f"{wd}/watermarks.json") as f:
+        marks = json.load(f)
+    serve_dir = f"{wd}/serving_store"
+    synced = set(os.listdir(serve_dir))
+    _run_layers(spark, SF_SMALL, wd)
+    assert list_generations(target) == ["gen-000001", "gen-000002"]
+    docs = 0
+    for name in set(os.listdir(serve_dir)) - synced:
+        with open(os.path.join(serve_dir, name)) as f:
+            docs += sum(1 for _ in f)
+    assert docs == 0
+    with open(f"{wd}/watermarks.json") as f:
+        assert json.load(f) == marks
 
 
 def test_monitor_layer_writes_reports(spark, tmp_path_factory):

@@ -2,10 +2,12 @@
 
 Equi joins are plain ``df.join`` — Catalyst picks broadcast vs
 shuffled-hash vs sort-merge, with AQE re-planning at runtime. This
-module packages the three shapes that need deliberate design:
+module packages the shapes that need deliberate design:
 
 - ``anti_dedup``   — J9: the reference's ``INSERT ... WHERE NOT EXISTS``
   incremental dedup (stage/transformations/ethereum_transactions.sql:70-77).
+- ``upsert_rows``  — U5: the in-memory MERGE, target rows carried over
+  unless an update replaces their key.
 - ``band_join``    — J7: equality + date-band theta join against the
   rugpull market table (analytics/transformations/
   ethereum_normal_transactions.sql:91-104).
@@ -44,6 +46,13 @@ from pyspark.sql import functions as F
 def anti_dedup(new: DataFrame, target: DataFrame, natural_key: Sequence[str]) -> DataFrame:
     """Rows of ``new`` whose natural key does not appear in ``target``."""
     return new.join(target.select(*natural_key), on=list(natural_key), how="left_anti")
+
+
+def upsert_rows(target: DataFrame, updates: DataFrame, key: Sequence[str]) -> DataFrame:
+    """``target`` with every row whose ``key`` appears in ``updates``
+    replaced by the ``updates`` row (MERGE ... WHEN MATCHED UPDATE WHEN
+    NOT MATCHED INSERT), in ``target``'s column order."""
+    return anti_dedup(target, updates, key).unionByName(updates.select(*target.columns))
 
 
 def semi_filter(df: DataFrame, other: DataFrame, key: Sequence[str]) -> DataFrame:

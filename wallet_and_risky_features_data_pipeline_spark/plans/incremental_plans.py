@@ -2,8 +2,8 @@
 the full recompute — so its oracle IS the full-computation SQL.
 
 ``wallet_coin_balances_incremental`` splits the event stream at a fixed
-date, computes the prior snapshot from batch 1, then applies
-``incremental_contract_state`` with batch 2 — and is checked against
+date, computes the prior snapshot from batch 1, then upserts the
+``incremental_contract_state`` MERGE batch of batch 2 — and is checked against
 the same DuckDB oracle as the full ``wallet_coin_balances`` query. This
 verifies, through the driver's own gate, the invariant the reference
 never tests mechanically (SURVEY.md §5):
@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import session_memo
+from ..operators.joins import upsert_rows
 from ..streaming.incremental import (
     incremental_auc_rollup,
     incremental_contract_state,
@@ -42,17 +43,7 @@ def wallet_coin_balances_incremental(spark: SparkSession, sf_dir: str) -> DataFr
     wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
     split = F.lit(SPLIT_AT).cast("timestamp")
     prior = contract_state_from(wt.filter(F.col("ts") < split))
-    merged = incremental_contract_state(prior, wt.filter(F.col("ts") >= split))
-    return merged.select(
-        "wallet_address",
-        "contract_address",
-        F.col("final_balance").cast("double").alias("final_balance"),
-        F.col("incoming_value").cast("double").alias("incoming_value"),
-        F.col("outgoing_value").cast("double").alias("outgoing_value"),
-        "contract_tx",
-        F.unix_micros("first_ts").alias("first_ts_us"),
-        F.unix_micros("last_ts").alias("last_ts_us"),
-    )
+    return _upsert_projection(prior, wt.filter(F.col("ts") >= split))
 
 
 # identical result contract as the full computation → same oracle
@@ -1028,13 +1019,14 @@ def wallet_coin_balances_warm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.writers import read_store
 
     prior = read_store(spark, _ensure_contract_state(spark, sf_dir))
-    merged = incremental_contract_state(
-        prior, wallet_transactions_delta(spark, sf_dir, SPLIT_AT)
-    )
-    return _coin_balances_projection(merged)
+    return _upsert_projection(prior, wallet_transactions_delta(spark, sf_dir, SPLIT_AT))
 
 
-def _coin_balances_projection(merged: DataFrame) -> DataFrame:
+def _upsert_projection(prior: DataFrame, delta: DataFrame) -> DataFrame:
+    """The full contract state after the delta (prior upserted with the
+    delta's MERGE batch), projected to the coin-balances contract."""
+    key = ["wallet_address", "contract_address"]
+    merged = upsert_rows(prior, incremental_contract_state(prior, delta), key)
     return merged.select(
         "wallet_address",
         "contract_address",
@@ -1060,10 +1052,9 @@ def wallet_coin_balances_warm_scaled(spark: SparkSession, sf_dir: str) -> DataFr
     prior = read_store(
         spark, _ensure_contract_state(spark, sf_dir, split_at=SCALED_SPLIT_AT)
     )
-    merged = incremental_contract_state(
+    return _upsert_projection(
         prior, wallet_transactions_delta(spark, sf_dir, SCALED_SPLIT_AT)
     )
-    return _coin_balances_projection(merged)
 
 
 WALLET_COIN_BALANCES_WARM_ORACLE = WALLET_COIN_BALANCES_ORACLE

@@ -11,11 +11,13 @@ Layers:
 - **stage**    — watermark-filtered, anti-join-deduped append of the
   event stream into a month-partitioned parquet table (EP2's
   CTAS/INSERT template loop as a library call).
-- **features** — wallet/contract state + per-wallet feature rollup;
-  first run writes the snapshot, later runs apply the exact
-  incremental seeding path and MERGE-upsert only touched partitions
-  (EP3's 20-chunk Iceberg MERGE, minus the chunk choreography — the
-  shuffle partitioner replaces it).
+- **features** — wallet/contract state; the first run writes the
+  snapshot, later runs apply the exact incremental seeding path and
+  MERGE only the pairs the new events touched (EP3's 20-chunk Iceberg
+  MERGE, minus the chunk choreography — the shuffle partitioner
+  replaces it).
+- **serve**    — per-wallet feature rollup of the committed features
+  generation, exported to the document store past its watermark.
 - **stats**    — corpus-stats cron: token counts merged into the
   generation-committed freq store, vocab/funnel reports published.
 - **curate**   — training-set snapshot: quality gate → exact dedup →
@@ -33,8 +35,9 @@ import sys
 
 from pyspark.sql import functions as F
 
+from .functions.scalars import bucket_key
 from .operators.quality import enforce, feature_constraints
-from .plans.wallet_features import contract_state_from
+from .plans.wallet_features import contract_state_from, wallet_features_from
 from .plans.wallet_model import wallet_transactions
 from .session import get_spark
 from .sources.readers import normalize_event_ts
@@ -59,6 +62,11 @@ def run_stage(spark, sf_dir: str, work_dir: str) -> None:
 
 
 def run_features(spark, sf_dir: str, work_dir: str) -> None:
+    """Features MERGE (EP3 step 1): the first run commits the full
+    contract state; later runs stitch the events past ``features_ts``
+    onto the committed state and MERGE only the pairs they touched.
+    ``merge_upsert`` carries every other row forward, so an empty delta
+    commits no generation."""
     store = WatermarkStore(f"{work_dir}/watermarks.json")
     target = f"{work_dir}/features/contract_state"
     wt = wallet_transactions(spark, sf_dir)
@@ -66,30 +74,11 @@ def run_features(spark, sf_dir: str, work_dir: str) -> None:
     if wm is None:
         state = contract_state_from(wt)
     else:
-        prior = read_store(spark, target)
         new_events = wt.filter(F.col("ts") > F.lit(wm).cast("timestamp"))
-        state = incremental_contract_state(
-            prior.select(
-                "wallet_address",
-                "contract_address",
-                F.col("final_balance").cast("decimal(38,9)").alias("final_balance"),
-                F.col("incoming_value").cast("decimal(38,9)").alias("incoming_value"),
-                F.col("outgoing_value").cast("decimal(38,9)").alias("outgoing_value"),
-                F.col("contract_fees").cast("decimal(38,9)").alias("contract_fees"),
-                "contract_tx",
-                "first_ts",
-                "last_ts",
-                F.col("max_balance").cast("decimal(38,9)").alias("max_balance"),
-                F.col("min_pos_balance").cast("decimal(38,9)").alias("min_pos_balance"),
-            ),
-            new_events,
-        )
-    out = state.withColumn(
-        "address_partition", F.substring(F.md5("wallet_address"), 1, 2)
-    )
+        state = incremental_contract_state(read_store(spark, target), new_events)
     n = merge_upsert(
         spark,
-        out,
+        state.withColumn("address_partition", bucket_key(F.col("wallet_address"))),
         target,
         key=["wallet_address", "contract_address"],
         partition_cols=["address_partition"],
@@ -101,55 +90,31 @@ def run_features(spark, sf_dir: str, work_dir: str) -> None:
 
 
 def run_serve(spark, sf_dir: str, work_dir: str) -> None:
-    """Serving sync (EP3 step 3): watermark-gated export of feature
-    rows into a document store via a per-partition sink.
+    """Serving sync (EP3 step 3): watermark-gated export of the
+    per-wallet feature rows of the COMMITTED features generation into
+    a document store via a per-partition sink.
 
-    Cross-store publish contract: the features layer and the serving
-    export commit independently, so a crash between the two layers
-    must never leave serving claiming a features state that was not
-    actually committed. The sync therefore (a) REFUSES to run while
-    the features store is in the crashed-first-commit state (gen dirs,
-    no ``_LATEST`` pointer — ``resolve_store``'s rule), and (b)
-    records the COMMITTED features generation it observed together
-    with the serving watermark in ONE atomic ``set_many`` rename —
-    the bookkeeping can only ever name a committed generation, and
-    watermark + generation advance or stay together.
-
-    Provenance semantics (ADVICE r8): ``serving_features_generation``
-    is the contract-state generation OBSERVED at sync time — a
-    consistency marker ("serving was synced while gen-N was live"),
-    NOT the provenance of the exported rows. The export itself is
-    ``wallet_features`` recomputed from ``sf_dir`` (a different,
-    wallet-grained table than the (wallet, contract) state the store
-    holds); if the features store lags the source, the exported rows
-    are NEWER than the named generation."""
-    from .plans.wallet_features import wallet_features
+    The features layer and the serving export commit independently,
+    so the sync reads one generation through one ``resolve_store``
+    call: the rows it exports and the ``serving_features_generation``
+    it records are the same snapshot. It refuses to run, leaving its
+    bookkeeping untouched, while the features store has no committed
+    generation. The serving watermark and the generation advance
+    together in ONE atomic ``set_many`` rename."""
     from .sources.serving import DictStoreClient, foreach_partition_upsert
-    from .sources.writers import list_generations, store_committed
+    from .sources.writers import store_committed
 
     store = WatermarkStore(f"{work_dir}/watermarks.json")
     features_target = f"{work_dir}/features/contract_state"
-    feat_gen = None
-    if store_committed(features_target):
-        feat_gen = os.path.basename(resolve_store(features_target))
-    elif list_generations(features_target):
+    if not store_committed(features_target):
         raise RuntimeError(
-            f"features store {features_target} has generation dirs but no "
-            "committed pointer (a commit crashed); re-run --layer features "
-            "before serving"
+            f"features store {features_target} has no committed generation "
+            "(features never ran, its first commit crashed, or the store no "
+            "longer exists); run --layer features before serving"
         )
-    elif store.get("serving_features_generation") is not None:
-        # Bookkeeping names a committed generation but the store is
-        # GONE — refusing beats silently overwriting the record with
-        # None, which would erase the only evidence of what serving
-        # currently holds.
-        raise RuntimeError(
-            f"serving bookkeeping names features generation "
-            f"{store.get('serving_features_generation')!r} but "
-            f"{features_target} no longer exists; restore the store or "
-            "re-run --layer features before serving"
-        )
-    feats = wallet_features(spark, sf_dir)
+    gen_dir = resolve_store(features_target)
+    feat_gen = os.path.basename(gen_dir)
+    feats = wallet_features_from(spark.read.parquet(gen_dir))
     wm = store.get("serving_last_tx_us")
     newer = feats if wm is None else feats.filter(F.col("last_tx_us") > F.lit(wm))
     uri = f"{work_dir}/serving_store"
@@ -159,12 +124,7 @@ def run_serve(spark, sf_dir: str, work_dir: str) -> None:
     new_wm = feats.agg(F.max("last_tx_us")).first()[0]
     if new_wm is not None:
         store.set_many(
-            {
-                "serving_last_tx_us": int(new_wm),
-                # generation OBSERVED at sync time, not row
-                # provenance — see the docstring (ADVICE r8)
-                "serving_features_generation": feat_gen,
-            }
+            {"serving_last_tx_us": int(new_wm), "serving_features_generation": feat_gen}
         )
     print(
         f"serve: upserted {newer.count()} wallets into {uri} "

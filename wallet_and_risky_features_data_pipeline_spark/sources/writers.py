@@ -53,6 +53,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.joins import upsert_rows
+
 _LATEST = "_LATEST"
 _GEN_PREFIX = "gen-"
 _STAGE_PREFIX = ".tmp-gen-"
@@ -1132,41 +1134,9 @@ def evolve_partitioning(
     if not os.path.exists(os.path.join(path, _LATEST)) and os.path.isdir(path):
         if any(not e.startswith((".", "_", _GEN_PREFIX)) for e in os.listdir(path)):
             _adopt_flat_store(path)
-    live = read_store(spark, path)
-    live_tag = generation_tag(path)
-    n = _next_gen_number(path)
-    gen_name = f"{_GEN_PREFIX}{n:06d}"
-    base = os.path.basename(resolve_store(path))
-    import uuid
-
-    staged = os.path.join(
-        path, f"{_STAGE_PREFIX}{n:06d}-{os.getpid()}-{uuid.uuid4().hex[:6]}"
-    )
-    writer = live.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(staged)
-    if live_tag is not None:
-        # Relayout preserves the epoch fence (see commit_generation):
-        # a store maintained by an at-least-once stream stays
-        # replay-safe across partition evolution.
-        with open(os.path.join(staged, _TAG), "w") as f:
-            f.write(live_tag)
-    dest = os.path.join(path, gen_name)
-    try:
-        os.rename(staged, dest)
-    except OSError as e:
-        shutil.rmtree(staged, ignore_errors=True)
-        raise ConcurrentCommitError(
-            f"store {path}: generation {gen_name} appeared during the "
-            "relayout; re-run partition evolution on the new snapshot"
-        ) from e
-    try:
-        _flip_latest(path, gen_name, expected_base=base)
-    except ConcurrentCommitError:
-        shutil.rmtree(dest, ignore_errors=True)
-        raise
-    return gen_name
+    # commit_generation inherits the live epoch tag, so a store kept by
+    # an at-least-once stream stays replay-safe across the relayout
+    return commit_generation(read_store(spark, path), path, partition_by=partition_cols)
 
 
 def _tree_max_mtime(root: str) -> float:
@@ -1355,8 +1325,6 @@ def merge_upsert(
         return 0
     _ensure_session_confs(spark)
 
-    import uuid
-
     has_latest = os.path.isdir(path) and os.path.exists(os.path.join(path, _LATEST))
     if os.path.isdir(path) and not has_latest:
         # gen-* dirs do NOT count as flat data: with no pointer they are
@@ -1376,42 +1344,15 @@ def merge_upsert(
     # this path a crash leftover is indistinguishable from a rival
     # writer between its rename and flip; vacuum_generations
     # (single-maintainer) reclaims them.
-    gens = list_generations(path)
-    if gens:
-        if not has_latest:
-            gens = []  # nothing committed; ghosts of a crashed first write
-        else:
-            live = os.path.basename(resolve_store(path))
-            gens = gens[: gens.index(live) + 1] if live in gens else gens
-
     next_n = _next_gen_number(path)
-    gen_name = f"{_GEN_PREFIX}{next_n:06d}"
-
-    if not gens:
-        staged = os.path.join(
-            path, f"{_STAGE_PREFIX}{next_n:06d}-{os.getpid()}-{uuid.uuid4().hex[:6]}"
-        )
-        updates.write.partitionBy(*partition_cols).mode("overwrite").parquet(staged)
-        dest = os.path.join(path, gen_name)
-        try:
-            os.rename(staged, dest)
-        except OSError as e:
-            shutil.rmtree(staged, ignore_errors=True)
-            raise ConcurrentCommitError(
-                f"store {path}: another writer created {dest} during this "
-                "first write; re-run the merge on the new snapshot"
-            ) from e
-        try:
-            _flip_latest(path, gen_name)
-        except ConcurrentCommitError:
-            shutil.rmtree(dest, ignore_errors=True)
-            raise
-        return updates.count()
+    if not has_latest:
+        # first commit: nothing live to carry over or relink
+        return _commit_partition_rewrite(path, None, updates, partition_cols, next_n)
 
     cur_gen = resolve_store(path)
     # A listing/IO failure here must fail the merge — swallowing it as
     # "no store" would commit a generation holding only this batch
-    # (ADVICE r02); the first-write fallback lives in the branch above.
+    # (ADVICE r02).
     target = spark.read.parquet(cur_gen)
     parts = updates.select(*partition_cols).distinct()
     # Restrict the rewrite to touched partitions (partition pruning on
@@ -1419,17 +1360,13 @@ def merge_upsert(
     touched = target.join(
         parts.hint("broadcast"), on=list(partition_cols), how="left_semi"
     )
-    kept = touched.join(updates.select(*key), on=list(key), how="left_anti")
-    merged = kept.unionByName(updates.select(*kept.columns))
-    return _commit_partition_rewrite(
-        spark, path, cur_gen, merged, partition_cols, next_n
-    )
+    merged = upsert_rows(touched, updates, key)
+    return _commit_partition_rewrite(path, cur_gen, merged, partition_cols, next_n)
 
 
 def _commit_partition_rewrite(
-    spark: SparkSession,
     path: str,
-    cur_gen: str,
+    cur_gen: str | None,
     merged: DataFrame,
     partition_cols: Sequence[str],
     next_n: int,
@@ -1437,8 +1374,9 @@ def _commit_partition_rewrite(
 ) -> int:
     """Shared publish tail of the partition-rewrite family
     (``merge_upsert``, ``erase_from_store``): stage the rewritten
-    partitions, hardlink the untouched ones from the live generation,
-    rename, and CAS-flip the pointer. Returns the staged row count."""
+    partitions, hardlink the untouched ones from the live generation
+    ``cur_gen`` (None for a store's first commit), rename, and CAS-flip
+    the pointer. Returns the staged row count."""
     import uuid
 
     gen_name = f"{_GEN_PREFIX}{next_n:06d}"
@@ -1452,18 +1390,18 @@ def _commit_partition_rewrite(
     # No lineage hazard: the write targets a FRESH dir while reading the
     # still-immutable live generation, so no localCheckpoint is needed.
     merged.write.partitionBy(*partition_cols).mode("overwrite").parquet(staged)
-    # Row count by reading back the staged files — cheaper than
-    # re-executing the merge plan and exact by construction. An erase
-    # that empties every touched partition stages no parquet at all
-    # (only _SUCCESS) — schema inference would fail on it, and 0 is
-    # exact.
-    staged_has_data = any(
-        f.endswith(".parquet")
-        for _dp, _dn, fs in os.walk(staged)
-        for f in fs
-    )
-    n = spark.read.parquet(staged).count() if staged_has_data else 0
-    _link_untouched(cur_gen, staged, skip=skip_relink)
+    # Row count from the staged files' parquet footers — exact, and no
+    # Spark job: re-executing the merge plan would redo the merge, and
+    # a Spark read-back lists a 256-way partition layout in a job of its
+    # own. An erase that empties every touched partition stages no
+    # parquet at all (only _SUCCESS) and counts 0.
+    import pyarrow.dataset as ds
+
+    n = ds.dataset(staged, format="parquet").count_rows()
+    base = None
+    if cur_gen is not None:
+        _link_untouched(cur_gen, staged, skip=skip_relink)
+        base = os.path.basename(cur_gen)
     dest = os.path.join(path, gen_name)
     # the numbering skipped every ghost visible at merge start, so an
     # existing dest now means a rival renamed it during this merge
@@ -1484,7 +1422,7 @@ def _commit_partition_rewrite(
     # compare-and-swap on the base snapshot: if another writer
     # committed while this merge ran, fail rather than drop its rows
     try:
-        _flip_latest(path, gen_name, expected_base=os.path.basename(cur_gen))
+        _flip_latest(path, gen_name, expected_base=base)
     except ConcurrentCommitError:
         shutil.rmtree(dest, ignore_errors=True)
         raise
@@ -1639,7 +1577,7 @@ def _erase_from_store_once(
         if vals in doomed_vals
     )
     _commit_partition_rewrite(
-        spark, path, cur_gen, kept, partition_cols, next_n, skip_relink=skip_relink
+        path, cur_gen, kept, partition_cols, next_n, skip_relink=skip_relink
     )
     return n_erased
 

@@ -14,9 +14,14 @@ Here the same contract is a small library:
 - ``incremental_contract_state`` — seed running aggregates with prior
   state and stitch lifetime min/max — the reference's hardest block
   (queries/ethereum_wallet_features.sql:481-612: COALESCE(prior,0)
-  seeding, min/max-ever merge with the 0-vs-NULL convention).
-  Guarantees incremental(b1)+incremental(b2) ≡ full(b1∪b2); the
-  property test in tests/test_incremental.py enforces it exactly.
+  seeding, min/max-ever merge with the 0-vs-NULL convention). It
+  returns the MERGE batch: the new state of the pairs the batch
+  touched, nothing else. ``merge_upsert`` carries the untouched rows
+  forward on disk and ``operators.joins.upsert_rows`` in memory, and
+  an empty batch yields an empty MERGE, which commits nothing.
+  Guarantees upsert(prior, incremental(prior, b2)) ≡ full(b1∪b2) for
+  prior = full(b1); the property test in tests/test_incremental.py
+  enforces it exactly.
 """
 
 from __future__ import annotations
@@ -109,7 +114,8 @@ _NUM = "decimal(38,9)"
 
 
 def incremental_contract_state(prior: DataFrame, new_wt: DataFrame) -> DataFrame:
-    """Exact incremental update of the per-(wallet, contract) state.
+    """Exact incremental update of the per-(wallet, contract) state:
+    the new rows of the pairs ``new_wt`` touches, i.e. the MERGE batch.
 
     The reference seeds the new batch's running balance with the stored
     prior balance *inside* the window computation
@@ -124,12 +130,13 @@ def incremental_contract_state(prior: DataFrame, new_wt: DataFrame) -> DataFrame
     3. reduce the segment to per-key state over absolute balances;
     4. stitch lifetime stats with the prior snapshot (min/max-ever
        merge, NULL-skipping MIN convention —
-       ethereum_wallet_features.sql:549-612);
-    5. union untouched prior rows (U5 anti-join carry-over).
+       ethereum_wallet_features.sql:549-612).
 
-    Invariant (tests/test_incremental.py): for any split b1∪b2,
-    ``incremental(contract_state(b1), b2) == contract_state(b1∪b2)``
-    to the last decimal digit.
+    Untouched prior rows are not part of the result: a MERGE carries
+    them over (U5). Invariant (tests/test_incremental.py): for any
+    split b1∪b2, with ``prior = contract_state(b1)``,
+    ``upsert_rows(prior, incremental(prior, b2), key) ==
+    contract_state(b1∪b2)`` to the last decimal digit.
     """
     from ..operators.windows import (
         dedup_rank,
@@ -165,7 +172,7 @@ def incremental_contract_state(prior: DataFrame, new_wt: DataFrame) -> DataFrame
 
     p = prior.select(*key, *[F.col(c).alias(f"p_{c}") for c in prior.columns if c not in key])
     joined = seg.join(p, on=key, how="left")
-    stitched = joined.select(
+    return joined.select(
         *key,
         F.col("final_balance").cast(_NUM).alias("final_balance"),
         (F.coalesce(F.col("p_incoming_value"), zero) + F.col("incoming_value"))
@@ -195,8 +202,6 @@ def incremental_contract_state(prior: DataFrame, new_wt: DataFrame) -> DataFrame
         .cast(_NUM)
         .alias("min_pos_balance"),
     )
-    untouched = anti_dedup(prior, seg.select(*key), key)
-    return stitched.unionByName(untouched.select(*stitched.columns))
 
 
 _AUC_SEC_US = 86_400_000_000  # microseconds per day (days_above_zero unit)

@@ -111,6 +111,37 @@ def test_incremental_append_idempotent(spark, tmp_path):
     assert spark.read.parquet(target).count() == events.count()
 
 
+def test_incremental_append_watermark_ignores_python_timezone(
+    spark, tmp_path, monkeypatch
+):
+    """The stage watermark is the batch max as Spark formats it in the
+    session time zone (UTC). A Python process east of UTC must not move
+    it: the second batch appends every row past the first batch's max,
+    including the ones within 9 h of it."""
+    import time
+
+    events = (
+        spark.read.parquet(f"{SF_SMALL}/events.parquet")
+        .transform(normalize_event_ts)
+        .withColumn("date_partition", F.date_format("ts", "yyyy-MM"))
+    )
+    b1 = events.filter("event_id < 500")
+    b1_max = b1.agg(F.unix_micros(F.max("ts"))).first()[0]
+    past = events.filter(F.unix_micros("ts") > b1_max)
+    assert past.filter(F.unix_micros("ts") <= b1_max + 9 * 3600 * 10**6).count() > 0
+    store = WatermarkStore(str(tmp_path / "wm.json"))
+    target = str(tmp_path / "stage")
+    monkeypatch.setenv("TZ", "Asia/Tokyo")
+    time.tzset()
+    try:
+        incremental_append(spark, b1, target, "t", ["event_id"], "ts", store)
+        n = incremental_append(spark, events, target, "t", ["event_id"], "ts", store)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert n == past.count()
+
+
 @pytest.mark.parametrize("split_at", ["2024-01-08", "2024-01-15", "2024-01-29"])
 def test_flow_motifs_incremental_equals_full(spark, split_at):
     """Band-limited rescan ≡ full recompute at ANY split point — the

@@ -809,8 +809,9 @@ def test_apply_changes_round_trips_snapshot_diff(spark, tmp_path):
 
 
 def test_commit_generation_clear_fence_escape_hatch(spark, tmp_path):
-    """Untagged commits inherit the live epoch fence (r8 carry-forward
-    — a snapshot rewrite must not drop it); ``clear_fence=True`` is
+    """Untagged commits (full snapshots, MERGEs and erases alike)
+    inherit the live epoch fence (r8 carry-forward — a snapshot
+    rewrite must not drop it); ``clear_fence=True`` is
     the explicit escape hatch for a store rebuilt against an upstream
     that RESTARTED epoch numbering (ADVICE r8: without it the
     inherited tag would silently fence out every replayed epoch)."""
@@ -818,7 +819,11 @@ def test_commit_generation_clear_fence_escape_hatch(spark, tmp_path):
 
     from wallet_and_risky_features_data_pipeline_spark.sources.writers import (
         commit_generation,
+        erase_from_store,
         generation_tag,
+        list_generations,
+        merge_upsert,
+        read_store,
     )
 
     store = str(tmp_path / "fence_store")
@@ -835,6 +840,25 @@ def test_commit_generation_clear_fence_escape_hatch(spark, tmp_path):
     assert generation_tag(store) is None
     commit_generation(df, store, tag="1")
     assert generation_tag(store) == "1"
+
+    # the partition-rewrite commits keep the same contract: a tagged
+    # MERGE sets the tag, an untagged MERGE and an erase inherit it
+    pstore = str(tmp_path / "fence_merge_store")
+    rows = spark.createDataFrame([(1, "a", 0), (2, "b", 1)], "id long, s string, p int")
+    merge_upsert(spark, rows, pstore, key=["id"], partition_cols=["p"])
+    assert generation_tag(pstore) is None
+    merge_upsert(spark, rows, pstore, key=["id"], partition_cols=["p"], tag="7")
+    assert generation_tag(pstore) == "7"
+    update = spark.createDataFrame([(1, "z", 0)], "id long, s string, p int")
+    merge_upsert(spark, update, pstore, key=["id"], partition_cols=["p"])
+    assert generation_tag(pstore) == "7"
+    gone = spark.createDataFrame([(2,)], "id long")
+    assert erase_from_store(spark, gone, pstore, "id", partition_cols=["p"]) == 1
+    assert generation_tag(pstore) == "7"
+    assert list_generations(pstore)[-1] == "gen-000004"
+    assert sorted(map(tuple, read_store(spark, pstore).select("id", "s").collect())) == [
+        (1, "z")
+    ]
 
 
 def test_condput_cas_backend_protocol(spark, tmp_path):

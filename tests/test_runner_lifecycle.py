@@ -42,6 +42,11 @@ def _run_layers(spark, sf_dir, wd):
         run(spark, sf_dir, wd)
 
 
+def _rows(df):
+    cols = sorted(df.columns)
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
 def _partition_inodes(gen_dir):
     """{partition dir: {file name: inode}} of one generation."""
     import os
@@ -288,10 +293,14 @@ def test_describe_layer_reports_stores(spark, work_dir, capsys):
     """--layer describe prints every generation store's snapshots
     (live status, sizes) after the lifecycle has run — the operator's
     DESCRIBE HISTORY sweep."""
+    import re
+
     runner.run_describe(spark, SF_SMALL, work_dir)
     out = capsys.readouterr().out
     assert "describe[features/contract_state]:" in out
     assert " live" in out
+    # the live features generation carries its watermark as its tag
+    assert re.search(r"describe\[features/contract_state\]: gen-\d+ live tag=\d+ ", out)
     assert "files" in out
     # the curate store committed exactly one generation (idempotent re-run)
     assert "describe[curate/training_set]: gen-000001 live" in out
@@ -358,9 +367,19 @@ def test_serve_refuses_when_recorded_store_vanished(spark, tmp_path_factory):
 
 def test_serve_refuses_without_committed_features(spark, tmp_path):
     """Serving on a fresh work dir (features never ran) refuses and
-    writes no serving watermark."""
+    writes no serving watermark; so does serving a committed features
+    generation that carries no watermark tag."""
     import os
 
+    from wallet_and_risky_features_data_pipeline_spark.sources.writers import (
+        commit_generation,
+    )
+
+    with pytest.raises(RuntimeError, match="no committed generation"):
+        runner.run_serve(spark, SF_SMALL, str(tmp_path))
+    assert not os.path.exists(f"{tmp_path}/watermarks.json")
+    untagged = spark.createDataFrame([("w", "c")], "wallet_address string, contract_address string")
+    commit_generation(untagged, f"{tmp_path}/features/contract_state")
     with pytest.raises(RuntimeError, match="no committed generation"):
         runner.run_serve(spark, SF_SMALL, str(tmp_path))
     assert not os.path.exists(f"{tmp_path}/watermarks.json")
@@ -371,9 +390,10 @@ def test_nightly_merges_touched_pairs_and_empty_nightly_is_noop(
 ):
     """stage → features → serve chained through the committed stores:
     the nightly's generation hardlinks every partition its delta did
-    not touch, and a second run over the same source commits no
-    generation, exports no document and leaves the watermarks as
-    they were."""
+    not touch, serving records the features generation's own tag as
+    its watermark, and a second run over the same source commits no
+    generation, exports no document, leaves the watermarks as they
+    were, and serves without starting a Spark job."""
     import json
     import os
 
@@ -384,11 +404,13 @@ def test_nightly_merges_touched_pairs_and_empty_nightly_is_noop(
     )
     from wallet_and_risky_features_data_pipeline_spark.plans.wallet_features import (
         contract_state,
+        wallet_features,
     )
     from wallet_and_risky_features_data_pipeline_spark.plans.wallet_model import (
         wallet_transactions,
     )
     from wallet_and_risky_features_data_pipeline_spark.sources.writers import (
+        generation_tag,
         list_generations,
         read_store,
     )
@@ -414,18 +436,24 @@ def test_nightly_merges_touched_pairs_and_empty_nightly_is_noop(
     assert touched and untouched
     assert {p: new.get(p) for p in untouched} == {p: old[p] for p in untouched}
 
-    def rows(df):
-        cols = sorted(df.columns)
-        return sorted(tuple(r[c] for c in cols) for r in df.collect())
-
     full = contract_state(spark, SF_SMALL)
-    assert rows(read_store(spark, target).select(*full.columns)) == rows(full)
+    assert _rows(read_store(spark, target).select(*full.columns)) == _rows(full)
 
     with open(f"{wd}/watermarks.json") as f:
         marks = json.load(f)
+    last_tx = wallet_features(spark, SF_SMALL).agg(F.max("last_tx_us")).first()[0]
+    assert marks["serving_last_tx_us"] == int(generation_tag(target)) == last_tx
     serve_dir = f"{wd}/serving_store"
     synced = set(os.listdir(serve_dir))
-    _run_layers(spark, SF_SMALL, wd)
+    runner.run_stage(spark, SF_SMALL, wd)
+    runner.run_features(spark, SF_SMALL, wd)
+    sc = spark.sparkContext
+    sc.setJobGroup("no-change-serve", "serve with nothing new to export")
+    try:
+        runner.run_serve(spark, SF_SMALL, wd)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("no-change-serve")) == []
     assert list_generations(target) == ["gen-000001", "gen-000002"]
     docs = 0
     for name in set(os.listdir(serve_dir)) - synced:
@@ -434,6 +462,36 @@ def test_nightly_merges_touched_pairs_and_empty_nightly_is_noop(
     assert docs == 0
     with open(f"{wd}/watermarks.json") as f:
         assert json.load(f) == marks
+
+
+def test_features_retry_after_crash_past_commit_applies_delta_once(
+    spark, tmp_path, base_sf, monkeypatch
+):
+    """A crash right after the nightly MERGE commits must not make the
+    retry apply the delta a second time: the watermark is the commit's
+    own tag, so the retry finds nothing past it."""
+    from wallet_and_risky_features_data_pipeline_spark.plans.wallet_features import (
+        contract_state,
+    )
+    from wallet_and_risky_features_data_pipeline_spark.sources.writers import read_store
+
+    wd = str(tmp_path)
+    base, _ = base_sf
+    runner.run_features(spark, base, wd)
+    merge_upsert = runner.merge_upsert
+
+    def commit_then_crash(*args, **kwargs):
+        merge_upsert(*args, **kwargs)
+        raise RuntimeError("crashed after the commit")
+
+    monkeypatch.setattr(runner, "merge_upsert", commit_then_crash)
+    with pytest.raises(RuntimeError, match="crashed after the commit"):
+        runner.run_features(spark, SF_SMALL, wd)
+    monkeypatch.undo()
+    runner.run_features(spark, SF_SMALL, wd)
+    full = contract_state(spark, SF_SMALL)
+    store = read_store(spark, f"{wd}/features/contract_state")
+    assert _rows(store.select(*full.columns)) == _rows(full)
 
 
 def test_monitor_layer_writes_reports(spark, tmp_path_factory):

@@ -25,6 +25,10 @@ Layers:
   committed as one immutable generation of the training_set store.
 - **dq**       — constraint checks, raising like the reference's
   final DAG gate.
+
+Each layer keeps ONE watermark. Stage and serve keep theirs in
+``watermarks.json``; the features watermark is the commit tag of the
+live features generation, so it commits with the MERGE it describes.
 """
 
 from __future__ import annotations
@@ -41,7 +45,8 @@ from .plans.wallet_features import contract_state_from, wallet_features_from
 from .plans.wallet_model import wallet_transactions
 from .session import get_spark
 from .sources.readers import normalize_event_ts
-from .sources.writers import merge_upsert, read_store, resolve_store, vacuum_generations
+from .sources.writers import commit_tag, generation_tag, merge_upsert, read_store
+from .sources.writers import resolve_store, store_committed, vacuum_generations
 from .streaming.incremental import WatermarkStore, incremental_append, incremental_contract_state
 
 
@@ -62,19 +67,25 @@ def run_stage(spark, sf_dir: str, work_dir: str) -> None:
 
 
 def run_features(spark, sf_dir: str, work_dir: str) -> None:
-    """Features MERGE (EP3 step 1): the first run commits the full
-    contract state; later runs stitch the events past ``features_ts``
-    onto the committed state and MERGE only the pairs they touched.
-    ``merge_upsert`` carries every other row forward, so an empty delta
-    commits no generation."""
-    store = WatermarkStore(f"{work_dir}/watermarks.json")
+    """Features MERGE (EP3 step 1). The watermark is the live
+    generation's tag, the newest event time the store holds in Unix
+    microseconds, committed by the same rename as the MERGE, so no
+    crash can separate the two. The first run commits the full
+    contract state; later runs stitch the events past the tag onto the
+    committed state and MERGE only the pairs they touched
+    (``merge_upsert`` carries every other row forward). With no new
+    events the run returns before reading the store."""
     target = f"{work_dir}/features/contract_state"
     wt = wallet_transactions(spark, sf_dir)
-    wm = store.get("features_ts")
+    wm = generation_tag(target)
+    new_events = wt if wm is None else wt.filter(F.col("ts") > F.timestamp_micros(F.lit(int(wm))))
+    tag = new_events.agg(F.unix_micros(F.max("ts"))).first()[0]
+    if tag is None:
+        print("features: no events past the watermark, nothing to merge")
+        return
     if wm is None:
         state = contract_state_from(wt)
     else:
-        new_events = wt.filter(F.col("ts") > F.lit(wm).cast("timestamp"))
         state = incremental_contract_state(read_store(spark, target), new_events)
     n = merge_upsert(
         spark,
@@ -82,54 +93,51 @@ def run_features(spark, sf_dir: str, work_dir: str) -> None:
         target,
         key=["wallet_address", "contract_address"],
         partition_cols=["address_partition"],
+        tag=str(tag),
     )
-    new_wm = wt.agg(F.max("ts")).first()[0]
-    if new_wm is not None:
-        store.set("features_ts", new_wm.isoformat())
     print(f"features: merged state for {n} (wallet, contract) pairs")
 
 
 def run_serve(spark, sf_dir: str, work_dir: str) -> None:
-    """Serving sync (EP3 step 3): watermark-gated export of the
-    per-wallet feature rows of the COMMITTED features generation into
-    a document store via a per-partition sink.
+    """Serving sync (EP3 step 3): export the per-wallet feature rows of
+    the COMMITTED features generation that moved past the serving
+    watermark into a document store via a per-partition sink.
 
-    The features layer and the serving export commit independently,
-    so the sync reads one generation through one ``resolve_store``
-    call: the rows it exports and the ``serving_features_generation``
-    it records are the same snapshot. It refuses to run, leaving its
-    bookkeeping untouched, while the features store has no committed
-    generation. The serving watermark and the generation advance
-    together in ONE atomic ``set_many`` rename."""
+    The sync resolves one generation and reads that generation's tag,
+    the features watermark. The rows it exports, the
+    ``serving_features_generation`` and the ``serving_last_tx_us`` it
+    records all come from that one snapshot, and the two keys advance
+    together in ONE atomic ``set_many`` rename. A tag at or below
+    ``serving_last_tx_us`` means serving already holds the generation,
+    so the sync returns without running a Spark job. It refuses to
+    run, leaving its bookkeeping untouched, while the features store
+    has no committed, tagged generation."""
     from .sources.serving import DictStoreClient, foreach_partition_upsert
-    from .sources.writers import store_committed
 
     store = WatermarkStore(f"{work_dir}/watermarks.json")
     features_target = f"{work_dir}/features/contract_state"
-    if not store_committed(features_target):
+    gen_dir = resolve_store(features_target) if store_committed(features_target) else None
+    tag = commit_tag(gen_dir) if gen_dir else None
+    if tag is None:
         raise RuntimeError(
             f"features store {features_target} has no committed generation "
-            "(features never ran, its first commit crashed, or the store no "
-            "longer exists); run --layer features before serving"
+            "with a watermark tag (features never ran, its first commit "
+            "crashed, the store no longer exists, or an older writer left "
+            "it untagged); run --layer features before serving"
         )
-    gen_dir = resolve_store(features_target)
     feat_gen = os.path.basename(gen_dir)
-    feats = wallet_features_from(spark.read.parquet(gen_dir))
     wm = store.get("serving_last_tx_us")
+    if wm is not None and int(tag) <= wm:
+        print(f"serve: up to date with features generation {feat_gen}")
+        return
+    feats = wallet_features_from(spark.read.parquet(gen_dir))
     newer = feats if wm is None else feats.filter(F.col("last_tx_us") > F.lit(wm))
     uri = f"{work_dir}/serving_store"
     foreach_partition_upsert(
         newer, key="wallet_address", client_factory=lambda: DictStoreClient(uri)
     )
-    new_wm = feats.agg(F.max("last_tx_us")).first()[0]
-    if new_wm is not None:
-        store.set_many(
-            {"serving_last_tx_us": int(new_wm), "serving_features_generation": feat_gen}
-        )
-    print(
-        f"serve: upserted {newer.count()} wallets into {uri} "
-        f"(features generation: {feat_gen})"
-    )
+    store.set_many({"serving_last_tx_us": int(tag), "serving_features_generation": feat_gen})
+    print(f"serve: synced features generation {feat_gen} (watermark {tag}) into {uri}")
 
 
 def run_raw(spark, sf_dir: str, work_dir: str) -> None:
@@ -344,12 +352,7 @@ def run_stats(spark, sf_dir: str, work_dir: str) -> None:
         token_freqs,
     )
     from .sources.readers import fan_out, read_table
-    from .sources.writers import (
-        commit_generation,
-        read_store,
-        store_committed,
-        vacuum_generations,
-    )
+    from .sources.writers import commit_generation
 
     store = f"{work_dir}/stats/token_freqs"
     counts = token_freqs(fan_out(read_table(spark, sf_dir, "documents")))
@@ -383,13 +386,7 @@ def run_curate(spark, sf_dir: str, work_dir: str) -> None:
     lifecycle around it."""
     from .plans.llm_ops import curate_training_set
     from .sources.readers import fan_out, read_table
-    from .sources.writers import (
-        commit_generation,
-        read_store,
-        resolve_store,
-        store_committed,
-        vacuum_generations,
-    )
+    from .sources.writers import commit_generation
 
     store = f"{work_dir}/curate/training_set"
     snapshot = curate_training_set(fan_out(read_table(spark, sf_dir, "documents")))

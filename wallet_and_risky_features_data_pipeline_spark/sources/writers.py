@@ -142,11 +142,64 @@ def generation_tag(path: str) -> str | None:
     one, the batch already committed and must be skipped."""
     if not os.path.exists(os.path.join(path, _LATEST)):
         return None
-    tag_file = os.path.join(resolve_store(path), _TAG)
-    if not os.path.exists(tag_file):
+    return commit_tag(resolve_store(path))
+
+
+def commit_tag(gen_dir: str) -> str | None:
+    """The ``tag`` committed with one generation dir (None if untagged
+    or gone) — for a caller that resolved a generation and needs ITS
+    tag, not whatever is live by the time it asks."""
+    try:
+        with open(os.path.join(gen_dir, _TAG)) as f:
+            return f.read()
+    except FileNotFoundError:
         return None
-    with open(tag_file) as f:
-        return f.read()
+
+
+def _staging_dir(path: str, n: int) -> str:
+    """Unique per-writer staging dir for generation ``n``: a shared
+    name would let a rival's startup cleanup delete THIS writer's
+    in-flight Spark output (and both jobs would collide on _temporary)."""
+    import uuid
+
+    return os.path.join(path, f"{_STAGE_PREFIX}{n:06d}-{os.getpid()}-{uuid.uuid4().hex[:6]}")
+
+
+def _publish(
+    path: str, staged: str, n: int, base_dir: str | None, tag: str | None, inherit: bool = True
+) -> str:
+    """Shared commit tail of every generation writer: tag the staged
+    generation, rename it to generation ``n``, and CAS-flip ``_LATEST``
+    from ``base_dir`` (None: a first commit). The ``_TAG`` file lands
+    before the rename, so the tag commits or vanishes atomically WITH
+    the snapshot. An untagged commit inherits ``base_dir``'s tag unless
+    ``inherit`` is off. A rival commit raises ``ConcurrentCommitError``
+    and leaves nothing of this one behind. Returns the generation name."""
+    gen_name = f"{_GEN_PREFIX}{n:06d}"
+    if tag is None and inherit and base_dir is not None:
+        tag = commit_tag(base_dir)
+    if tag is not None:
+        with open(os.path.join(staged, _TAG), "w") as f:
+            f.write(tag)
+    dest = os.path.join(path, gen_name)
+    try:
+        # the numbering skipped every ghost visible when the writer
+        # started, so an existing dest means a rival renamed it since
+        if os.path.exists(dest):
+            raise FileExistsError(dest)
+        os.rename(staged, dest)
+    except OSError as e:
+        shutil.rmtree(staged, ignore_errors=True)
+        raise ConcurrentCommitError(
+            f"store {path}: generation {gen_name} was created by another "
+            "writer while this commit was staged; re-run on the new snapshot"
+        ) from e
+    try:
+        _flip_latest(path, gen_name, expected_base=base_dir and os.path.basename(base_dir))
+    except ConcurrentCommitError:
+        shutil.rmtree(dest, ignore_errors=True)
+        raise
+    return gen_name
 
 
 def store_committed(path: str) -> bool:
@@ -996,53 +1049,25 @@ def commit_generation(
     physical layout choice: the generation protocol (staging, rename,
     pointer CAS, vacuum, time travel) is unchanged, and ``read_store``
     reads partitioned and flat generations alike."""
-    import uuid
-
     os.makedirs(path, exist_ok=True)
     # Base = the LIVE generation (the pointer is the commit). Ghost
     # dirs/markers past it are skipped by the numbering, not cleared —
     # see _next_gen_number; vacuum_generations reclaims them.
-    base = None
-    if os.path.exists(os.path.join(path, _LATEST)):
-        base = os.path.basename(resolve_store(path))
+    base_dir = resolve_store(path) if os.path.exists(os.path.join(path, _LATEST)) else None
     if clear_fence and tag is not None:
         raise ValueError(
             "clear_fence=True contradicts an explicit tag: a commit "
             "cannot both clear the epoch fence and set one"
         )
-    if tag is None and not clear_fence:
-        # Carry the live generation's epoch fence through untagged
-        # commits: a full-snapshot rewrite (or relayout) of a fenced
-        # store must not silently drop the fence, or a replayed
-        # at-least-once epoch after the rewrite would double-apply.
-        tag = generation_tag(path)
     n = _next_gen_number(path)
-    gen_name = f"{_GEN_PREFIX}{n:06d}"
-    staged = os.path.join(
-        path, f"{_STAGE_PREFIX}{n:06d}-{os.getpid()}-{uuid.uuid4().hex[:6]}"
-    )
+    staged = _staging_dir(path, n)
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(staged)
-    if tag is not None:
-        with open(os.path.join(staged, _TAG), "w") as f:
-            f.write(tag)
-    dest = os.path.join(path, gen_name)
-    try:
-        os.rename(staged, dest)
-    except OSError as e:
-        shutil.rmtree(staged, ignore_errors=True)
-        raise ConcurrentCommitError(
-            f"store {path}: generation {gen_name} was created by another "
-            "writer while this snapshot was staged; re-run on the new snapshot"
-        ) from e
-    try:
-        _flip_latest(path, gen_name, expected_base=base)
-    except ConcurrentCommitError:
-        shutil.rmtree(dest, ignore_errors=True)
-        raise
-    return gen_name
+    # An untagged rewrite (or relayout) of a fenced store carries the
+    # fence, or a replayed at-least-once epoch would double-apply.
+    return _publish(path, staged, n, base_dir, tag, inherit=not clear_fence)
 
 
 def snapshot_diff(
@@ -1299,6 +1324,7 @@ def merge_upsert(
     path: str,
     key: Sequence[str],
     partition_cols: Sequence[str] = ("address_partition",),
+    tag: str | None = None,
 ) -> int:
     """MERGE INTO stand-in with snapshot semantics: within each
     partition touched by ``updates``, keep target rows whose key
@@ -1310,7 +1336,12 @@ def merge_upsert(
     chunk-scoped Iceberg MERGE (features_pipeline.py:96-126), and a
     crash at any point leaves readers on the previous complete
     generation. Returns the number of rows written (merged rows of the
-    touched partitions)."""
+    touched partitions).
+
+    ``tag`` follows ``commit_generation``'s contract: it commits or
+    vanishes with the MERGE (``generation_tag`` reads it back), and an
+    untagged MERGE inherits the live tag. The features layer keeps its
+    watermark there, so no crash can separate the two."""
     from .readers import _ensure_session_confs
 
     # Materialize the updates plan ONCE: it is consumed by the isEmpty
@@ -1347,7 +1378,7 @@ def merge_upsert(
     next_n = _next_gen_number(path)
     if not has_latest:
         # first commit: nothing live to carry over or relink
-        return _commit_partition_rewrite(path, None, updates, partition_cols, next_n)
+        return _commit_partition_rewrite(path, None, updates, partition_cols, next_n, tag)
 
     cur_gen = resolve_store(path)
     # A listing/IO failure here must fail the merge — swallowing it as
@@ -1361,7 +1392,7 @@ def merge_upsert(
         parts.hint("broadcast"), on=list(partition_cols), how="left_semi"
     )
     merged = upsert_rows(touched, updates, key)
-    return _commit_partition_rewrite(path, cur_gen, merged, partition_cols, next_n)
+    return _commit_partition_rewrite(path, cur_gen, merged, partition_cols, next_n, tag)
 
 
 def _commit_partition_rewrite(
@@ -1370,23 +1401,17 @@ def _commit_partition_rewrite(
     merged: DataFrame,
     partition_cols: Sequence[str],
     next_n: int,
+    tag: str | None,
     skip_relink: frozenset[str] = frozenset(),
 ) -> int:
     """Shared publish tail of the partition-rewrite family
     (``merge_upsert``, ``erase_from_store``): stage the rewritten
     partitions, hardlink the untouched ones from the live generation
-    ``cur_gen`` (None for a store's first commit), rename, and CAS-flip
-    the pointer. Returns the staged row count."""
-    import uuid
-
-    gen_name = f"{_GEN_PREFIX}{next_n:06d}"
-    # gen_name/next_n computed up front by _next_gen_number (ghost-skip).
-    # Unique per-writer staging: a shared .tmp-gen-N name would let a
-    # rival's startup cleanup delete THIS writer's in-flight Spark
-    # output mid-write (and both jobs would collide on _temporary).
-    staged = os.path.join(
-        path, f"{_STAGE_PREFIX}{next_n:06d}-{os.getpid()}-{uuid.uuid4().hex[:6]}"
-    )
+    ``cur_gen`` (None for a store's first commit), tag the staged
+    generation (untagged: ``cur_gen``'s tag carries over), rename, and
+    CAS-flip the pointer. Returns the staged row count."""
+    # next_n computed up front by _next_gen_number (ghost-skip)
+    staged = _staging_dir(path, next_n)
     # No lineage hazard: the write targets a FRESH dir while reading the
     # still-immutable live generation, so no localCheckpoint is needed.
     merged.write.partitionBy(*partition_cols).mode("overwrite").parquet(staged)
@@ -1398,34 +1423,11 @@ def _commit_partition_rewrite(
     import pyarrow.dataset as ds
 
     n = ds.dataset(staged, format="parquet").count_rows()
-    base = None
     if cur_gen is not None:
         _link_untouched(cur_gen, staged, skip=skip_relink)
-        base = os.path.basename(cur_gen)
-    dest = os.path.join(path, gen_name)
-    # the numbering skipped every ghost visible at merge start, so an
-    # existing dest now means a rival renamed it during this merge
-    if os.path.exists(dest):
-        shutil.rmtree(staged, ignore_errors=True)
-        raise ConcurrentCommitError(
-            f"store {path}: generation {gen_name} was created by another "
-            "writer while this merge ran; re-run on the new snapshot"
-        )
-    try:
-        os.rename(staged, dest)
-    except OSError as e:
-        shutil.rmtree(staged, ignore_errors=True)
-        raise ConcurrentCommitError(
-            f"store {path}: generation {gen_name} was created by another "
-            "writer while this merge ran; re-run on the new snapshot"
-        ) from e
     # compare-and-swap on the base snapshot: if another writer
     # committed while this merge ran, fail rather than drop its rows
-    try:
-        _flip_latest(path, gen_name, expected_base=base)
-    except ConcurrentCommitError:
-        shutil.rmtree(dest, ignore_errors=True)
-        raise
+    _publish(path, staged, next_n, cur_gen, tag)
     return n
 
 
@@ -1447,7 +1449,7 @@ def _scan_expired_error(e: Exception) -> bool:
             "FileNotFoundError",
             "does not exist",
             "UNABLE_TO_INFER_SCHEMA",
-            # a raw python FileNotFoundError (e.g. the _TAG file read
+            # a raw python FileNotFoundError (e.g. the hardlink pass
             # racing a vacuum) stringifies to the errno message only —
             # the class name never appears in str(e)
             "No such file or directory",
@@ -1577,7 +1579,7 @@ def _erase_from_store_once(
         if vals in doomed_vals
     )
     _commit_partition_rewrite(
-        path, cur_gen, kept, partition_cols, next_n, skip_relink=skip_relink
+        path, cur_gen, kept, partition_cols, next_n, None, skip_relink=skip_relink
     )
     return n_erased
 
@@ -1643,11 +1645,7 @@ def store_snapshots(spark: SparkSession, path: str) -> DataFrame:
             for f in files:
                 n_files += 1
                 n_bytes += _os.path.getsize(_os.path.join(root, f))
-        tag_file = _os.path.join(full, _TAG)
-        tag = None
-        if _os.path.exists(tag_file):
-            with open(tag_file) as tf:
-                tag = tf.read()
+        tag = commit_tag(full)
         committed = d.startswith(_GEN_PREFIX) and live is not None and d <= live
         status = (
             "live"

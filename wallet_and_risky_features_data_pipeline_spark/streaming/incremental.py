@@ -8,7 +8,9 @@ Here the same contract is a small library:
 
 - ``WatermarkStore``        — durable watermark metadata (JSON file;
   a Delta/Iceberg table in production). Replaces the reference's
-  MAX()-probe + string substitution.
+  MAX()-probe + string substitution. The runner keeps only the stage
+  and serving watermarks here: the features watermark is the tag its
+  MERGE commits with (``sources.writers.merge_upsert``).
 - ``incremental_append``    — watermark filter → anti-join dedup →
   partitioned append (J9 + S7).
 - ``incremental_contract_state`` — seed running aggregates with prior
@@ -103,9 +105,10 @@ def incremental_append(
     n = fresh.count()
     if n:
         write_partitioned(fresh, target_path, partition_cols, mode="append")
-        new_wm = batch.agg(F.max(watermark_col)).first()[0]
+        # Spark's text in the session time zone, never a Python-local datetime
+        new_wm = batch.agg(F.max(watermark_col).cast("string")).first()[0]
         if new_wm is not None:
-            store.set(table, new_wm if not hasattr(new_wm, "isoformat") else new_wm.isoformat())
+            store.set(table, new_wm)
     fresh.unpersist()
     return n
 

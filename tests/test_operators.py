@@ -167,6 +167,29 @@ def test_merge_upsert(spark, tmp_path):
     assert got == {1: ("a", 10.0), 2: ("b2", 21.0), 3: ("c", 30.0), 4: ("d", 40.0)}
 
 
+def test_flat_merge_over_partitioned_generation(spark, tmp_path):
+    """A MERGE with no partition_cols onto a hive-partitioned generation
+    commits it whole and flat: no partition dir is relinked (that would
+    duplicate rows), and the former partition column keeps its string
+    values even where every dir name reads as a number."""
+    import os
+
+    from wallet_and_risky_features_data_pipeline_spark.sources.writers import resolve_store
+
+    path = str(tmp_path / "t")
+    schema = "id long, name string, part string"
+    base = spark.createDataFrame([(1, "a", "07"), (2, "b", "12")], schema)
+    merge_upsert(spark, base, path, key=["id"], partition_cols=["part"])
+    updates = spark.createDataFrame([(2, "b2", "12"), (3, "c", "30")], schema)
+    assert merge_upsert(spark, updates, path, key=["id"], partition_cols=()) == 3
+    assert not [e for e in os.listdir(resolve_store(path)) if e.startswith("part=")]
+    back = read_store(spark, path)
+    assert dict(back.dtypes)["part"] == "string"
+    assert sorted(tuple(r) for r in back.select("id", "name", "part").collect()) == [
+        (1, "a", "07"), (2, "b2", "12"), (3, "c", "30")
+    ]
+
+
 def test_merge_upsert_empty_batch_is_noop(spark, tmp_path):
     """An empty update batch (the trailing availableNow micro-batch)
     must never touch the target — static-mode overwrite of an empty

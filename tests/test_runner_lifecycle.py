@@ -21,9 +21,9 @@ def work_dir(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def base_sf(tmp_path_factory):
-    """A copy of SF_SMALL's events below the 95th-percentile ts, plus
-    the event_ids left out. A run on it followed by a run on SF_SMALL
-    is a cold build and then a nightly over a late ~5% delta."""
+    """A copy of SF_SMALL's events below the 95th-percentile ts. A run
+    on it followed by a run on SF_SMALL is a cold build and then a
+    nightly over a late ~5% delta."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -33,8 +33,7 @@ def base_sf(tmp_path_factory):
     cut = sorted(ts.to_pylist())[int(0.95 * len(ts))]
     d = tmp_path_factory.mktemp("sf_base")
     pq.write_table(events.filter(pc.less(ts, cut)), f"{d}/events.parquet")
-    delta_ids = events.filter(pc.greater_equal(ts, cut)).column("event_id").to_pylist()
-    return str(d), delta_ids
+    return str(d)
 
 
 def _run_layers(spark, sf_dir, wd):
@@ -47,19 +46,31 @@ def _rows(df):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
-def _partition_inodes(gen_dir):
-    """{partition dir: {file name: inode}} of one generation."""
+def _assert_flat(gen_dir, max_files):
+    """``gen_dir`` holds no hive partition directory and at most
+    ``max_files`` parquet files."""
     import os
 
-    return {
-        part: {
-            f: os.stat(os.path.join(gen_dir, part, f)).st_ino
-            for f in os.listdir(os.path.join(gen_dir, part))
-            if f.endswith(".parquet")
-        }
-        for part in os.listdir(gen_dir)
-        if part.startswith("address_partition=")
-    }
+    entries = os.listdir(gen_dir)
+    assert not [e for e in entries if e.startswith("address_partition=")]
+    assert 0 < len([e for e in entries if e.endswith(".parquet")]) <= max_files
+
+
+def _max_job_tasks(spark, group, action):
+    """Run ``action`` under its own job group; the most tasks any job
+    it started ran (summed over the job's stages)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    tasks = [0]
+    for jid in tracker.getJobIdsForGroup(group):
+        stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(jid).stageIds]
+        tasks.append(sum(s.numTasks for s in stages if s is not None))
+    return max(tasks)
 
 
 def test_full_lifecycle(spark, work_dir):
@@ -176,8 +187,7 @@ def test_erase_expires_generation_history(spark, tmp_path, base_sf):
     )
 
     wd = str(tmp_path)
-    base, _ = base_sf
-    for sf_dir in (base, SF_SMALL):  # cold build, then a real delta -> 2nd gen
+    for sf_dir in (base_sf, SF_SMALL):  # cold build, then a real delta -> 2nd gen
         runner.run_stage(spark, sf_dir, wd)
         runner.run_features(spark, sf_dir, wd)
     store = f"{wd}/features/contract_state"
@@ -389,8 +399,8 @@ def test_nightly_merges_touched_pairs_and_empty_nightly_is_noop(
     spark, tmp_path, base_sf
 ):
     """stage → features → serve chained through the committed stores:
-    the nightly's generation hardlinks every partition its delta did
-    not touch, serving records the features generation's own tag as
+    the nightly commits a flat generation that reads back without a
+    wide listing job, serving records the features generation's own tag as
     its watermark, and a second run over the same source commits no
     generation, exports no document, leaves the watermarks as they
     were, and serves without starting a Spark job."""
@@ -399,15 +409,9 @@ def test_nightly_merges_touched_pairs_and_empty_nightly_is_noop(
 
     from pyspark.sql import functions as F
 
-    from wallet_and_risky_features_data_pipeline_spark.functions.scalars import (
-        bucket_key,
-    )
     from wallet_and_risky_features_data_pipeline_spark.plans.wallet_features import (
         contract_state,
         wallet_features,
-    )
-    from wallet_and_risky_features_data_pipeline_spark.plans.wallet_model import (
-        wallet_transactions,
     )
     from wallet_and_risky_features_data_pipeline_spark.sources.writers import (
         generation_tag,
@@ -416,25 +420,15 @@ def test_nightly_merges_touched_pairs_and_empty_nightly_is_noop(
     )
 
     wd = str(tmp_path)
-    base, delta_ids = base_sf
     target = f"{wd}/features/contract_state"
-    _run_layers(spark, base, wd)
+    _run_layers(spark, base_sf, wd)
     _run_layers(spark, SF_SMALL, wd)
     assert list_generations(target) == ["gen-000001", "gen-000002"]
 
-    touched = {
-        f"address_partition={r[0]}"
-        for r in wallet_transactions(spark, SF_SMALL)
-        .filter(F.col("event_id").isin(delta_ids))
-        .select(bucket_key(F.col("wallet_address")))
-        .distinct()
-        .collect()
-    }
-    old = _partition_inodes(f"{target}/gen-000001")
-    new = _partition_inodes(f"{target}/gen-000002")
-    untouched = set(old) - touched
-    assert touched and untouched
-    assert {p: new.get(p) for p in untouched} == {p: old[p] for p in untouched}
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    _assert_flat(f"{target}/gen-000002", shuffle)
+    read_tasks = _max_job_tasks(spark, "flat-read", lambda: read_store(spark, target).count())
+    assert 0 < read_tasks <= shuffle
 
     full = contract_state(spark, SF_SMALL)
     assert _rows(read_store(spark, target).select(*full.columns)) == _rows(full)
@@ -464,6 +458,104 @@ def test_nightly_merges_touched_pairs_and_empty_nightly_is_noop(
         assert json.load(f) == marks
 
 
+def test_nightly_flattens_a_partitioned_features_store(spark, tmp_path, base_sf):
+    """A features store committed with the 256-way ``address_partition=``
+    hive layout is flattened by its first nightly MERGE: the new
+    generation holds no partition dir, equals ``contract_state(full)``,
+    and every row's ``address_partition`` is its wallet's bucket string."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from wallet_and_risky_features_data_pipeline_spark.functions.scalars import (
+        bucket_key,
+    )
+    from wallet_and_risky_features_data_pipeline_spark.plans.wallet_features import (
+        contract_state,
+    )
+    from wallet_and_risky_features_data_pipeline_spark.plans.wallet_model import (
+        wallet_transactions,
+    )
+    from wallet_and_risky_features_data_pipeline_spark.sources.writers import (
+        list_generations,
+        merge_upsert,
+        read_store,
+    )
+
+    wd = str(tmp_path)
+    target = f"{wd}/features/contract_state"
+    tag = wallet_transactions(spark, base_sf).agg(F.unix_micros(F.max("ts"))).first()[0]
+    merge_upsert(
+        spark,
+        contract_state(spark, base_sf).withColumn(
+            "address_partition", bucket_key(F.col("wallet_address"))
+        ),
+        target,
+        key=["wallet_address", "contract_address"],
+        partition_cols=["address_partition"],
+        tag=str(tag),
+    )
+    assert any(e.startswith("address_partition=") for e in os.listdir(f"{target}/gen-000001"))
+
+    runner.run_stage(spark, SF_SMALL, wd)
+    runner.run_features(spark, SF_SMALL, wd)
+    assert list_generations(target) == ["gen-000001", "gen-000002"]
+    _assert_flat(f"{target}/gen-000002", int(spark.conf.get("spark.sql.shuffle.partitions")))
+    store = read_store(spark, target)
+    full = contract_state(spark, SF_SMALL)
+    assert _rows(store.select(*full.columns)) == _rows(full)
+    assert dict(store.dtypes)["address_partition"] == "string"
+    wrong = store.filter(F.col("address_partition") != bucket_key(F.col("wallet_address")))
+    assert wrong.count() == 0
+
+
+def test_erase_and_maintain_keep_the_features_watermark(spark, tmp_path, base_sf):
+    """On a tagged features store, ``run_erase`` commits a generation
+    without the victim under the same tag and expires the one before
+    it, so no parquet file under the store still holds the victim; a
+    repeat erase commits nothing, and ``run_maintain`` leaves the live
+    generation and its tag as they were."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from wallet_and_risky_features_data_pipeline_spark.sources.writers import (
+        generation_tag,
+        list_generations,
+        read_store,
+        resolve_store,
+    )
+
+    wd = str(tmp_path)
+    target = f"{wd}/features/contract_state"
+    for sf_dir in (base_sf, SF_SMALL):
+        runner.run_features(spark, sf_dir, wd)
+    tag = generation_tag(target)
+    assert tag is not None and list_generations(target) == ["gen-000001", "gen-000002"]
+    victim = read_store(spark, target).select("wallet_address").first()[0]
+
+    def live_files():
+        gen = resolve_store(target)
+        return os.path.basename(gen), sorted(os.listdir(gen))
+
+    runner.run_erase(spark, SF_SMALL, wd, wallets=victim)
+    assert list_generations(target) == ["gen-000003"]
+    assert live_files()[0] == "gen-000003"
+    assert generation_tag(target) == tag
+    files = [
+        os.path.join(d, f) for d, _, fs in os.walk(target) for f in fs if f.endswith(".parquet")
+    ]
+    assert spark.read.parquet(*files).filter(F.col("wallet_address") == victim).count() == 0
+
+    erased = live_files()
+    runner.run_erase(spark, SF_SMALL, wd, wallets=victim)
+    assert list_generations(target) == ["gen-000003"] and live_files() == erased
+
+    runner.run_maintain(spark, SF_SMALL, wd)
+    assert live_files() == erased
+    assert generation_tag(target) == tag
+
+
 def test_features_retry_after_crash_past_commit_applies_delta_once(
     spark, tmp_path, base_sf, monkeypatch
 ):
@@ -476,8 +568,7 @@ def test_features_retry_after_crash_past_commit_applies_delta_once(
     from wallet_and_risky_features_data_pipeline_spark.sources.writers import read_store
 
     wd = str(tmp_path)
-    base, _ = base_sf
-    runner.run_features(spark, base, wd)
+    runner.run_features(spark, base_sf, wd)
     merge_upsert = runner.merge_upsert
 
     def commit_then_crash(*args, **kwargs):

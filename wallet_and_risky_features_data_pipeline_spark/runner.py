@@ -15,7 +15,8 @@ Layers:
   snapshot, later runs apply the exact incremental seeding path and
   MERGE only the pairs the new events touched (EP3's 20-chunk Iceberg
   MERGE, minus the chunk choreography — the shuffle partitioner
-  replaces it).
+  replaces it). Each commit rewrites one flat generation;
+  ``address_partition`` is a column, not a directory level.
 - **serve**    — per-wallet feature rollup of the committed features
   generation, exported to the document store past its watermark.
 - **stats**    — corpus-stats cron: token counts merged into the
@@ -45,7 +46,7 @@ from .plans.wallet_features import contract_state_from, wallet_features_from
 from .plans.wallet_model import wallet_transactions
 from .session import get_spark
 from .sources.readers import normalize_event_ts
-from .sources.writers import commit_tag, generation_tag, merge_upsert, read_store
+from .sources.writers import commit_tag, erase_from_store, generation_tag, merge_upsert, read_store
 from .sources.writers import resolve_store, store_committed, vacuum_generations
 from .streaming.incremental import WatermarkStore, incremental_append, incremental_contract_state
 
@@ -73,8 +74,9 @@ def run_features(spark, sf_dir: str, work_dir: str) -> None:
     crash can separate the two. The first run commits the full
     contract state; later runs stitch the events past the tag onto the
     committed state and MERGE only the pairs they touched
-    (``merge_upsert`` carries every other row forward). With no new
-    events the run returns before reading the store."""
+    (``merge_upsert`` carries every other row forward) into one flat
+    generation: a few files, no per-bucket directories to write or
+    list. With no new events the run returns before reading the store."""
     target = f"{work_dir}/features/contract_state"
     wt = wallet_transactions(spark, sf_dir)
     wm = generation_tag(target)
@@ -92,7 +94,7 @@ def run_features(spark, sf_dir: str, work_dir: str) -> None:
         state.withColumn("address_partition", bucket_key(F.col("wallet_address"))),
         target,
         key=["wallet_address", "contract_address"],
-        partition_cols=["address_partition"],
+        partition_cols=(),
         tag=str(tag),
     )
     print(f"features: merged state for {n} (wallet, contract) pairs")
@@ -202,30 +204,18 @@ def run_raw(spark, sf_dir: str, work_dir: str) -> None:
 
 
 def run_maintain(spark, sf_dir: str, work_dir: str) -> None:
-    """Weekly table maintenance (EP3 step 2): bin-pack compaction of
-    the feature store's fragmented partitions — the reference's
-    ``OPTIMIZE ... REWRITE DATA USING BIN_PACK`` + ``VACUUM`` cron
-    (features_pipeline.py:128-138)."""
-    from .sources.maintenance import compact_partitions
-
-    target = f"{work_dir}/features/contract_state"
-    # VACUUM half first: expire all but the two newest generations
-    # (keep one rollback snapshot), then bin-pack the LIVE generation
-    # only — compacting expired snapshots would be wasted IO.
-    expired = vacuum_generations(target, keep=2)
-    # the stats and curate crons' stores are generation-committed too —
-    # sweep them here as well so a stalled cron can't grow one unbounded
+    """Weekly table maintenance (EP3 step 2): the ``VACUUM`` half of
+    the reference's OPTIMIZE + VACUUM cron (features_pipeline.py:128-138).
+    It expires all but the two newest features generations (one
+    rollback snapshot) and the stats and curate crons' history, so a
+    stalled cron can't grow a store unbounded. There is no OPTIMIZE
+    half: every features MERGE rewrites the flat generation whole, so
+    the store never fragments. The live generation and its tag are
+    left as they are."""
+    expired = vacuum_generations(f"{work_dir}/features/contract_state", keep=2)
     expired += vacuum_generations(f"{work_dir}/stats/token_freqs", keep=3)
     expired += vacuum_generations(f"{work_dir}/curate/training_set", keep=3)
-    stats = compact_partitions(spark, resolve_store(target), target_mb=128)
-    total_before = sum(b for b, _ in stats.values())
-    total_after = sum(a for _, a in stats.values())
-    print(
-        f"maintain: compacted {len(stats)} partitions "
-        f"({total_before} -> {total_after} files); "
-        f"expired {len(expired)} generations"
-    )
-
+    print(f"maintain: expired {len(expired)} generations")
 
 
 def run_erase(spark, sf_dir: str, work_dir: str, wallets: str = "") -> None:
@@ -239,30 +229,24 @@ def run_erase(spark, sf_dir: str, work_dir: str, wallets: str = "") -> None:
     — the reference has no deletion story beyond the table format's
     DELETE."""
     import json
-    import os
     import tempfile
 
-    from .sources.maintenance import erase_and_redact, propagate_deletes
+    from .sources.maintenance import erase_and_redact
 
     keys = [w.strip() for w in wallets.split(",") if w.strip()]
     if not keys:
         print("erase: no --erase-wallets given, nothing to do")
         return
 
-    # 1) feature store (wallet_address, string). Generational stores
-    #    keep erased rows alive in every old snapshot, so erasure MUST
-    #    expire history first (Iceberg: expire_snapshots before DELETE
-    #    is effective) and then rewrite the live generation only.
+    # 1) feature store (wallet_address, string): a generation commit,
+    #    so the features tag survives, then expiry of every older
+    #    generation and crash leftover, since each still holds the rows.
     feats = f"{work_dir}/features/contract_state"
     n_feats = 0
-    if os.path.exists(feats):
-        vacuum_generations(feats, keep=1)
+    if store_committed(feats):
         keys_df = spark.createDataFrame([(w,) for w in keys], "wallet_address string")
-        n_feats = sum(
-            propagate_deletes(
-                spark, resolve_store(feats), keys_df, "wallet_address"
-            ).values()
-        )
+        n_feats = erase_from_store(spark, keys_df, feats, "wallet_address", partition_cols=())
+    vacuum_generations(feats, keep=1)
 
     # 2) staged events, ONE combined pass per touched partition:
     #    delete rows the wallet owns (user_id; wallet ids are canonical

@@ -46,10 +46,10 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     # pins it at build time; pin it here too so a caller-provided
     # session (the verification driver's) gets the same plan shape.
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # merge_upsert rewrites only the partitions present in the incoming
-    # batch; under the default static mode the same write TRUNCATES the
-    # whole table first. Any entry point that may reach the MERGE writer
-    # must therefore carry dynamic overwrite semantics.
+    # write_partitioned's mode="overwrite" replaces only the partitions
+    # present in its frame; under the default static mode the same write
+    # TRUNCATES the whole table first. (The generation writers stage
+    # into a fresh directory, so they do not depend on this mode.)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
 

@@ -12,10 +12,9 @@ tables with MERGE INTO (features). Spark equivalents:
 - ``merge_upsert``       → join-based MERGE in plain parquet with an
   ATOMIC GENERATION COMMIT; stands in for Iceberg ``MERGE INTO``
   (reference queries/ethereum_wallet_features.sql:760-833) without a
-  Delta/Iceberg runtime dependency. Only partitions present in the
-  incoming batch are rewritten, so write cost is bounded by the
-  batch's partition fan-out, not table size — the same bounded-scope
-  property the reference gets from 20-chunk sequential Iceberg MERGEs.
+  Delta/Iceberg runtime dependency. A hive-partitioned store rewrites
+  the partitions present in the incoming batch; a flat store (no
+  ``partition_cols``) rewrites its one generation whole.
 
 Generation layout (the snapshot-commit half of the Iceberg gap)::
 
@@ -25,8 +24,9 @@ Generation layout (the snapshot-commit half of the Iceberg gap)::
       gen-000002/part=a/...   # untouched partitions are HARDLINKS
                               # into the previous generation's files
 
-Each merge writes the touched partitions into a hidden staging dir,
-hardlinks every untouched partition's files from the live generation
+Each merge writes the touched partitions (or, flat, the whole
+generation) into a hidden staging dir, hardlinks every untouched
+partition's files from the live generation
 (a metadata-only operation — the local-fs stand-in for an Iceberg
 manifest re-listing unchanged data files; on S3/HDFS this step becomes
 a manifest write, not a data copy), renames the staging dir to
@@ -1326,17 +1326,20 @@ def merge_upsert(
     partition_cols: Sequence[str] = ("address_partition",),
     tag: str | None = None,
 ) -> int:
-    """MERGE INTO stand-in with snapshot semantics: within each
-    partition touched by ``updates``, keep target rows whose key
-    doesn't collide, union the updates, and commit the result as a new
-    GENERATION (touched partitions rewritten, untouched partitions
-    hardlinked from the live generation, one atomic ``_LATEST`` flip —
-    see the module docstring). Write cost is bounded by the batch's
-    partition fan-out, not table size, like the reference's
-    chunk-scoped Iceberg MERGE (features_pipeline.py:96-126), and a
-    crash at any point leaves readers on the previous complete
-    generation. Returns the number of rows written (merged rows of the
-    touched partitions).
+    """MERGE INTO stand-in with snapshot semantics: keep target rows
+    whose key doesn't collide with ``updates``, union the updates, and
+    commit the result as a new GENERATION in one atomic ``_LATEST``
+    flip (see the module docstring). A crash at any point leaves
+    readers on the previous complete generation. Returns the number of
+    rows written.
+
+    ``partition_cols`` are the store's hive partition columns: only the
+    partitions present in ``updates`` are rewritten, and every other
+    partition is hardlinked from the live generation. Empty
+    ``partition_cols`` make the generation one unit: the MERGE rewrites
+    it whole and unpartitioned, in as many files as the plan has
+    partitions, and relinks nothing. A live generation written
+    partitioned becomes flat at its first such MERGE.
 
     ``tag`` follows ``commit_generation``'s contract: it commits or
     vanishes with the MERGE (``generation_tag`` reads it back), and an
@@ -1383,15 +1386,18 @@ def merge_upsert(
     cur_gen = resolve_store(path)
     # A listing/IO failure here must fail the merge — swallowing it as
     # "no store" would commit a generation holding only this batch
-    # (ADVICE r02).
-    target = spark.read.parquet(cur_gen)
-    parts = updates.select(*partition_cols).distinct()
-    # Restrict the rewrite to touched partitions (partition pruning on
-    # the scan side; broadcast the partition list — it is tiny).
-    touched = target.join(
-        parts.hint("broadcast"), on=list(partition_cols), how="left_semi"
-    )
-    merged = upsert_rows(touched, updates, key)
+    # (ADVICE r02). A flat MERGE reads in the batch's schema: a live
+    # generation written partitioned would otherwise type its partition
+    # columns by inference (bucket "07" → int 7, unioned to bigint).
+    target = (spark.read if partition_cols else spark.read.schema(updates.schema)).parquet(cur_gen)
+    if partition_cols:
+        # Restrict the rewrite to touched partitions (partition pruning
+        # on the scan side; broadcast the partition list — it is tiny).
+        parts = updates.select(*partition_cols).distinct()
+        target = target.join(
+            parts.hint("broadcast"), on=list(partition_cols), how="left_semi"
+        )
+    merged = upsert_rows(target, updates, key)
     return _commit_partition_rewrite(path, cur_gen, merged, partition_cols, next_n, tag)
 
 
@@ -1407,9 +1413,11 @@ def _commit_partition_rewrite(
     """Shared publish tail of the partition-rewrite family
     (``merge_upsert``, ``erase_from_store``): stage the rewritten
     partitions, hardlink the untouched ones from the live generation
-    ``cur_gen`` (None for a store's first commit), tag the staged
-    generation (untagged: ``cur_gen``'s tag carries over), rename, and
-    CAS-flip the pointer. Returns the staged row count."""
+    ``cur_gen`` (None for a store's first commit; with no
+    ``partition_cols`` the staged rows are the whole generation and
+    nothing is relinked), tag the staged generation (untagged:
+    ``cur_gen``'s tag carries over), rename, and CAS-flip the pointer.
+    Returns the staged row count."""
     # next_n computed up front by _next_gen_number (ghost-skip)
     staged = _staging_dir(path, next_n)
     # No lineage hazard: the write targets a FRESH dir while reading the
@@ -1423,7 +1431,7 @@ def _commit_partition_rewrite(
     import pyarrow.dataset as ds
 
     n = ds.dataset(staged, format="parquet").count_rows()
-    if cur_gen is not None:
+    if cur_gen is not None and partition_cols:
         _link_untouched(cur_gen, staged, skip=skip_relink)
     # compare-and-swap on the base snapshot: if another writer
     # committed while this merge ran, fail rather than drop its rows
@@ -1475,7 +1483,10 @@ def erase_from_store(
     ``ConcurrentCommitError``) and with the fenced
     ``vacuum_generations``. A partition whose every row is erased is
     dropped from the new generation outright (``_link_untouched``'s
-    ``skip`` contract — relinking it would resurrect the rows).
+    ``skip`` contract — relinking it would resurrect the rows). With
+    empty ``partition_cols`` the whole generation is rewritten (the
+    flat contract of ``merge_upsert``). Erasing keys the live
+    generation does not hold commits nothing.
 
     The erase is complete only after ``vacuum_generations`` expires
     the prior generations (and crash leftovers) that still hold the
@@ -1519,65 +1530,67 @@ def _erase_from_store_once(
     _ensure_session_confs(spark)
     cur_gen = resolve_store(path)
     next_n = _next_gen_number(path)
-    target = spark.read.parquet(cur_gen)
-    doomed_parts = (
-        target.join(keys.hint("broadcast"), on=key_col, how="left_semi")
-        .select(*partition_cols)
-        .distinct()
-    )
-    # Dir-name matching set (ADVICE r11): read the SAME partitions with
-    # partition type inference OFF, so values come back as the exact
-    # strings encoded in the hive dir names — an int-inferred '00123'
-    # would otherwise stringify to '123' and miss its dir (a fully-
-    # erased partition relinked = erased rows resurrected), and a
-    # decimal '1.10' to '1.1'. NULL maps to a sentinel no literal
-    # string value can decode to, so a partition VALUE 'None' can
-    # never be confused with the null partition.
-    # driver-scale: partition fan-out is bounded (≤256 buckets)
-    infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    prev_infer = spark.conf.get(infer_key, "true")
-    spark.conf.set(infer_key, "false")
-    try:
-        raw_parts = (
-            spark.read.parquet(cur_gen)
-            .join(keys.hint("broadcast"), on=key_col, how="left_semi")
+    touched = spark.read.parquet(cur_gen)
+    skip_relink: frozenset[str] = frozenset()
+    if partition_cols:
+        doomed_parts = (
+            touched.join(keys.hint("broadcast"), on=key_col, how="left_semi")
             .select(*partition_cols)
             .distinct()
         )
-        doomed_vals = {
-            tuple(
-                _NULL_PARTITION_SENTINEL if r[c] is None else str(r[c])
-                for c in partition_cols
+        # Dir-name matching set (ADVICE r11): read the SAME partitions with
+        # partition type inference OFF, so values come back as the exact
+        # strings encoded in the hive dir names — an int-inferred '00123'
+        # would otherwise stringify to '123' and miss its dir (a fully-
+        # erased partition relinked = erased rows resurrected), and a
+        # decimal '1.10' to '1.1'. NULL maps to a sentinel no literal
+        # string value can decode to, so a partition VALUE 'None' can
+        # never be confused with the null partition.
+        # driver-scale: partition fan-out is bounded (≤256 buckets)
+        infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+        prev_infer = spark.conf.get(infer_key, "true")
+        spark.conf.set(infer_key, "false")
+        try:
+            raw_parts = (
+                spark.read.parquet(cur_gen)
+                .join(keys.hint("broadcast"), on=key_col, how="left_semi")
+                .select(*partition_cols)
+                .distinct()
             )
-            for r in raw_parts.collect()
-        }
-    finally:
-        spark.conf.set(infer_key, prev_infer)
-    if not doomed_vals:
-        return 0
-    # NULL-SAFE partition match: an equi-semi-join would never match
-    # the null partition (NULL = NULL is unknown), silently exempting
-    # null-keyed partitions from erasure — found by the
-    # inference-hostile test, same hazard family as ADVICE r11's
-    # name-matching items.
-    t = target.alias("__t")
-    dp = doomed_parts.alias("__dp")
-    cond = None
-    for c in partition_cols:
-        e = F.col(f"__t.{c}").eqNullSafe(F.col(f"__dp.{c}"))
-        cond = e if cond is None else cond & e
-    touched = t.join(dp.hint("broadcast"), on=cond, how="left_semi")
+            doomed_vals = {
+                tuple(
+                    _NULL_PARTITION_SENTINEL if r[c] is None else str(r[c])
+                    for c in partition_cols
+                )
+                for r in raw_parts.collect()
+            }
+        finally:
+            spark.conf.set(infer_key, prev_infer)
+        # NULL-SAFE partition match: an equi-semi-join would never match
+        # the null partition (NULL = NULL is unknown), silently exempting
+        # null-keyed partitions from erasure — found by the
+        # inference-hostile test, same hazard family as ADVICE r11's
+        # name-matching items.
+        t = touched.alias("__t")
+        dp = doomed_parts.alias("__dp")
+        cond = None
+        for c in partition_cols:
+            e = F.col(f"__t.{c}").eqNullSafe(F.col(f"__dp.{c}"))
+            cond = e if cond is None else cond & e
+        touched = t.join(dp.hint("broadcast"), on=cond, how="left_semi")
+        # Touched partitions absent from the staged output (fully erased)
+        # must NOT be relinked: resolve the on-disk dir names by PARSING
+        # the live generation's layout (decode-direction matching — robust
+        # to Spark's hive escaping) instead of re-encoding values.
+        skip_relink = frozenset(
+            rel
+            for rel, vals in _partition_dirs(cur_gen, list(partition_cols)).items()
+            if vals in doomed_vals
+        )
     n_erased = touched.join(keys.hint("broadcast"), on=key_col, how="left_semi").count()
+    if not n_erased:
+        return 0
     kept = touched.join(keys.hint("broadcast"), on=key_col, how="left_anti")
-    # Touched partitions absent from the staged output (fully erased)
-    # must NOT be relinked: resolve the on-disk dir names by PARSING
-    # the live generation's layout (decode-direction matching — robust
-    # to Spark's hive escaping) instead of re-encoding values.
-    skip_relink = frozenset(
-        rel
-        for rel, vals in _partition_dirs(cur_gen, list(partition_cols)).items()
-        if vals in doomed_vals
-    )
     _commit_partition_rewrite(
         path, cur_gen, kept, partition_cols, next_n, None, skip_relink=skip_relink
     )

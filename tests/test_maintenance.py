@@ -841,19 +841,19 @@ def test_commit_generation_clear_fence_escape_hatch(spark, tmp_path):
     commit_generation(df, store, tag="1")
     assert generation_tag(store) == "1"
 
-    # the partition-rewrite commits keep the same contract: a tagged
-    # MERGE sets the tag, an untagged MERGE and an erase inherit it
+    # MERGE and erase commits keep the same contract: a tagged MERGE
+    # sets the tag, an untagged MERGE and an erase inherit it
     pstore = str(tmp_path / "fence_merge_store")
     rows = spark.createDataFrame([(1, "a", 0), (2, "b", 1)], "id long, s string, p int")
-    merge_upsert(spark, rows, pstore, key=["id"], partition_cols=["p"])
+    merge_upsert(spark, rows, pstore, key=["id"])
     assert generation_tag(pstore) is None
-    merge_upsert(spark, rows, pstore, key=["id"], partition_cols=["p"], tag="7")
+    merge_upsert(spark, rows, pstore, key=["id"], tag="7")
     assert generation_tag(pstore) == "7"
     update = spark.createDataFrame([(1, "z", 0)], "id long, s string, p int")
-    merge_upsert(spark, update, pstore, key=["id"], partition_cols=["p"])
+    merge_upsert(spark, update, pstore, key=["id"])
     assert generation_tag(pstore) == "7"
     gone = spark.createDataFrame([(2,)], "id long")
-    assert erase_from_store(spark, gone, pstore, "id", partition_cols=["p"]) == 1
+    assert erase_from_store(spark, gone, pstore, "id") == 1
     assert generation_tag(pstore) == "7"
     assert list_generations(pstore)[-1] == "gen-000004"
     assert sorted(map(tuple, read_store(spark, pstore).select("id", "s").collect())) == [
@@ -1009,50 +1009,51 @@ def test_cas_chaos_crash_mid_claim_loop(tmp_path, backend_kind):
 
 def test_erase_from_store_generation_commit(spark, tmp_path):
     """erase_from_store (r11): right-to-erasure as a GENERATION commit —
-    erased keys gone from the new live generation, untouched partitions
-    HARDLINKED (same inode, no data copied), a fully-emptied partition
-    dropped rather than relinked (the resurrection failure mode), the
-    prior generation intact for time travel until vacuum expires it."""
+    erased keys gone from the new live generation, the prior generation
+    intact for time travel until vacuum expires it. Erasing every key
+    commits an empty generation (the store's schema, the live tag), and
+    no erased key survives a keep=1 vacuum anywhere under the store."""
+    import pyarrow.dataset as ds
+
     from wallet_and_risky_features_data_pipeline_spark.sources import writers as W
 
     store = str(tmp_path / "erase_store")
     schema = "k long, val long, bucket string"
     rows = [(k, 10 * k, str(k % 2)) for k in range(8)] + [(100, 1, "solo")]
-    W.merge_upsert(
-        spark,
-        spark.createDataFrame(rows, schema),
-        store,
-        key=["k"],
-        partition_cols=["bucket"],
-    )
+    W.merge_upsert(spark, spark.createDataFrame(rows, schema), store, key=["k"])
 
     doomed = spark.createDataFrame([(1,), (3,), (100,)], "k long")
-    n = W.erase_from_store(spark, doomed, store, "k", partition_cols=("bucket",))
+    n = W.erase_from_store(spark, doomed, store, "k")
     assert n == 3
 
     live = W.read_store(spark, store)
     left = {r.k for r in live.collect()}
     assert left == {0, 2, 4, 5, 6, 7}
-    # the solo partition was fully erased: its dir must NOT exist in
-    # the live generation (relinking it would resurrect k=100)
     gen2 = W.resolve_store(store)
-    assert not os.path.exists(os.path.join(gen2, "bucket=solo"))
-    # bucket=0 was untouched (keys 1,3 live in bucket=1): hardlinked
     gen1 = W.resolve_store(store, generation=1)
-    f1 = [f for f in os.listdir(os.path.join(gen1, "bucket=0")) if f.endswith(".parquet")]
-    f2 = [f for f in os.listdir(os.path.join(gen2, "bucket=0")) if f.endswith(".parquet")]
-    assert f1 == f2
-    ino1 = os.stat(os.path.join(gen1, "bucket=0", f1[0])).st_ino
-    ino2 = os.stat(os.path.join(gen2, "bucket=0", f2[0])).st_ino
-    assert ino1 == ino2, "untouched partition must be hardlinked, not rewritten"
     # generation 1 still holds the erased rows (time travel) — the
     # documented two-step: the erase completes when vacuum expires it
     assert spark.read.parquet(gen1).filter("k in (1, 3, 100)").count() == 3
     W.vacuum_generations(store, keep=1, stage_grace_sec=0)
     assert W.list_generations(store) == [os.path.basename(gen2)]
     # idempotent: erasing the same keys again is a no-op (no new gen)
-    assert W.erase_from_store(spark, doomed, store, "k", partition_cols=("bucket",)) == 0
+    assert W.erase_from_store(spark, doomed, store, "k") == 0
     assert W.list_generations(store) == [os.path.basename(gen2)]
+
+    # erase every key of a tagged flat store
+    full = str(tmp_path / "erase_all_store")
+    W.merge_upsert(spark, spark.createDataFrame(rows, schema), full, key=["k"], tag="5")
+    every = spark.createDataFrame([(r[0],) for r in rows], "k long")
+    assert W.erase_from_store(spark, every, full, "k") == len(rows)
+    assert W.list_generations(full) == ["gen-000001", "gen-000002"]
+    emptied = W.read_store(spark, full)
+    assert emptied.count() == 0
+    assert emptied.schema == spark.createDataFrame([], schema).schema
+    assert W.generation_tag(full) == "5"
+    W.vacuum_generations(full, keep=1, stage_grace_sec=0)
+    assert W.list_generations(full) == ["gen-000002"]
+    on_disk = ds.dataset(full, format="parquet").to_table(columns=["k"])
+    assert on_disk.num_rows == 0
 
 
 def test_vacuum_fence_protects_inflight_publish(spark, tmp_path):
@@ -1163,8 +1164,8 @@ def test_three_way_chaos_merge_vacuum_erase(spark, tmp_path, monkeypatch, chaos_
     logs = {"merge": str(tmp_path / "merge.log"), "erase": str(tmp_path / "erase.log")}
     schema = "k long, val long, bucket string"
 
-    # seed: erase-range subjects (100-129), a solo partition that a
-    # complete erase must DROP (300-304), untouched bystanders (200-219)
+    # seed: erase-range subjects (100-129), a solo bucket that one erase
+    # empties (300-304), untouched bystanders (200-219)
     seed = (
         [(k, -1, str(k % 4)) for k in range(100, 130)]
         + [(k, -2, "solo") for k in range(300, 305)]
@@ -1175,7 +1176,6 @@ def test_three_way_chaos_merge_vacuum_erase(spark, tmp_path, monkeypatch, chaos_
         spark.createDataFrame(seed, schema),
         store,
         key=["k"],
-        partition_cols=["bucket"],
     )
 
     worker_src = """
@@ -1234,14 +1234,14 @@ for i in range(N):
     if role == "merge":
         rows = [(k, i, str(k % 4)) for k in range(8)]
         batch = spark.createDataFrame(rows, schema)
-        op = lambda: W.merge_upsert(spark, batch, store, key=["k"], partition_cols=["bucket"])
+        op = lambda: W.merge_upsert(spark, batch, store, key=["k"])
     else:
         if i < 6:
             keys = list(range(100 + 5 * i, 100 + 5 * (i + 1)))
         else:
-            keys = list(range(300, 305))  # empties the solo partition
+            keys = list(range(300, 305))  # empties the solo bucket
         kdf = spark.createDataFrame([(k,) for k in keys], "k long")
-        op = lambda: W.erase_from_store(spark, kdf, store, "k", partition_cols=("bucket",))
+        op = lambda: W.erase_from_store(spark, kdf, store, "k")
     while True:
         try:
             op()
@@ -1350,7 +1350,6 @@ print("DONE", role)
     erased = set(range(100, 130)) | set(range(300, 305))
     survivors = erased & set(final)
     assert survivors == set(), sorted(survivors)
-    assert not os.path.exists(os.path.join(W.resolve_store(store), "bucket=solo"))
     # bystanders untouched
     assert {final[k] for k in range(200, 220)} == {-3}
 
@@ -1468,48 +1467,6 @@ def test_vacuum_stage_grace_uses_deepest_write_heartbeat(tmp_path):
     assert os.path.basename(dead_stage) in removed
 
 
-def test_erase_from_store_inference_hostile_partitions(spark, tmp_path):
-    """The ADVICE r11 erase-matching hazards, end to end: partition
-    values that Spark's partition type inference NORMALIZES — a
-    zero-padded numeric-looking string ('00123' reads back as int 123)
-    — plus null vs the literal string 'None'. A fully-erased partition
-    of each kind must be dropped (never relinked → resurrected), and
-    the untouched look-alike partition must keep its rows."""
-    from wallet_and_risky_features_data_pipeline_spark.sources import writers as W
-
-    store = str(tmp_path / "hostile_erase")
-    schema = "k long, val long, bucket string"
-    rows = [
-        (1, 10, "00123"),   # fully erased — dir 'bucket=00123'
-        (2, 20, "123"),     # untouched look-alike — dir 'bucket=123'
-        (3, 30, None),      # fully erased null partition
-        (4, 40, "None"),    # untouched literal-string partition
-        (5, 50, "keep"),
-    ]
-    W.merge_upsert(
-        spark,
-        spark.createDataFrame(rows, schema),
-        store,
-        key=["k"],
-        partition_cols=["bucket"],
-    )
-    doomed = spark.createDataFrame([(1,), (3,)], "k long")
-    assert W.erase_from_store(spark, doomed, store, "k", partition_cols=("bucket",)) == 2
-
-    live = W.read_store(spark, store)
-    got = {(r.k, r.bucket) for r in live.collect()}
-    assert got == {(2, "123"), (4, "None"), (5, "keep")}
-    gen2 = W.resolve_store(store)
-    assert not os.path.exists(os.path.join(gen2, "bucket=00123")), (
-        "zero-padded partition relinked — erased rows resurrected"
-    )
-    assert not os.path.exists(
-        os.path.join(gen2, "bucket=__HIVE_DEFAULT_PARTITION__")
-    ), "null partition relinked — erased rows resurrected"
-    assert os.path.exists(os.path.join(gen2, "bucket=123"))
-    assert os.path.exists(os.path.join(gen2, "bucket=None"))
-
-
 @pytest.mark.fullsuite
 def test_serving_chaos_sync_vs_merge_vacuum_erase(spark, tmp_path):
     """VERDICT r11 #7 — the serving path joins the chaos loop: a
@@ -1544,7 +1501,6 @@ def test_serving_chaos_sync_vs_merge_vacuum_erase(spark, tmp_path):
         spark.createDataFrame(seed, schema),
         store,
         key=["k"],
-        partition_cols=["bucket"],
     )
 
     stop = threading.Event()
@@ -1568,9 +1524,7 @@ def test_serving_chaos_sync_vs_merge_vacuum_erase(spark, tmp_path):
                 )
                 while True:
                     try:
-                        W.merge_upsert(
-                            spark, batch, store, key=["k"], partition_cols=["bucket"]
-                        )
+                        W.merge_upsert(spark, batch, store, key=["k"])
                         break
                     except W.ConcurrentCommitError:
                         time.sleep(rng.uniform(0.01, 0.05))
@@ -1591,9 +1545,7 @@ def test_serving_chaos_sync_vs_merge_vacuum_erase(spark, tmp_path):
                 kdf = spark.createDataFrame([(k,) for k in keys], "k long")
                 while True:
                     try:
-                        W.erase_from_store(
-                            spark, kdf, store, "k", partition_cols=("bucket",)
-                        )
+                        W.erase_from_store(spark, kdf, store, "k")
                         break
                     except W.ConcurrentCommitError:
                         time.sleep(rng.uniform(0.01, 0.05))

@@ -157,31 +157,37 @@ def test_merge_upsert(spark, tmp_path):
         [(1, "a", 10.0, "p1"), (2, "b", 20.0, "p1"), (3, "c", 30.0, "p2")],
         "id long, name string, v double, part string",
     )
-    merge_upsert(spark, base, path, key=["id"], partition_cols=["part"])
+    merge_upsert(spark, base, path, key=["id"])
     updates = spark.createDataFrame(
         [(2, "b2", 21.0, "p1"), (4, "d", 40.0, "p1")],
         "id long, name string, v double, part string",
     )
-    merge_upsert(spark, updates, path, key=["id"], partition_cols=["part"])
+    merge_upsert(spark, updates, path, key=["id"])
     got = {r["id"]: (r["name"], r["v"]) for r in read_store(spark, path).collect()}
     assert got == {1: ("a", 10.0), 2: ("b2", 21.0), 3: ("c", 30.0), 4: ("d", 40.0)}
 
 
 def test_flat_merge_over_partitioned_generation(spark, tmp_path):
-    """A MERGE with no partition_cols onto a hive-partitioned generation
-    commits it whole and flat: no partition dir is relinked (that would
+    """A MERGE onto a hive-partitioned generation commits it whole and
+    flat: no partition dir survives into the new generation (that would
     duplicate rows), and the former partition column keeps its string
     values even where every dir name reads as a number."""
     import os
 
-    from wallet_and_risky_features_data_pipeline_spark.sources.writers import resolve_store
+    from wallet_and_risky_features_data_pipeline_spark.sources.writers import (
+        commit_generation,
+        resolve_store,
+    )
 
     path = str(tmp_path / "t")
     schema = "id long, name string, part string"
     base = spark.createDataFrame([(1, "a", "07"), (2, "b", "12")], schema)
-    merge_upsert(spark, base, path, key=["id"], partition_cols=["part"])
+    commit_generation(base, path, partition_by=["part"])
+    assert sorted(e for e in os.listdir(resolve_store(path)) if e.startswith("part=")) == [
+        "part=07", "part=12"
+    ]
     updates = spark.createDataFrame([(2, "b2", "12"), (3, "c", "30")], schema)
-    assert merge_upsert(spark, updates, path, key=["id"], partition_cols=()) == 3
+    assert merge_upsert(spark, updates, path, key=["id"]) == 3
     assert not [e for e in os.listdir(resolve_store(path)) if e.startswith("part=")]
     back = read_store(spark, path)
     assert dict(back.dtypes)["part"] == "string"
@@ -198,33 +204,33 @@ def test_merge_upsert_empty_batch_is_noop(spark, tmp_path):
     base = spark.createDataFrame(
         [(1, "a", 10.0, "p1")], "id long, name string, v double, part string"
     )
-    merge_upsert(spark, base, path, key=["id"], partition_cols=["part"])
+    merge_upsert(spark, base, path, key=["id"])
     empty = base.filter(F.lit(False))
-    assert merge_upsert(spark, empty, path, key=["id"], partition_cols=["part"]) == 0
+    assert merge_upsert(spark, empty, path, key=["id"]) == 0
     assert read_store(spark, path).count() == 1
 
 
 def test_merge_upsert_under_static_overwrite_mode(spark, tmp_path):
-    """merge_upsert self-provisions dynamic partition overwrite, so a
-    caller session left in static mode (the driver gate's bare session)
-    still gets the bounded-partition MERGE, not a table truncation."""
+    """A caller session left in static partition-overwrite mode (the
+    driver gate's bare session) still gets a MERGE, not a table
+    truncation: the commit stages into a fresh directory."""
     path = str(tmp_path / "t")
     base = spark.createDataFrame(
         [(1, "a", 10.0, "p1"), (3, "c", 30.0, "p2")],
         "id long, name string, v double, part string",
     )
-    merge_upsert(spark, base, path, key=["id"], partition_cols=["part"])
+    merge_upsert(spark, base, path, key=["id"])
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
     try:
         updates = spark.createDataFrame(
             [(2, "b", 20.0, "p1")], "id long, name string, v double, part string"
         )
-        merge_upsert(spark, updates, path, key=["id"], partition_cols=["part"])
+        merge_upsert(spark, updates, path, key=["id"])
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     got = {r["id"] for r in read_store(spark, path).collect()}
-    assert got == {1, 2, 3}  # p2 untouched, p1 merged
+    assert got == {1, 2, 3}  # id 3 carried over, id 2 merged
 
 
 def test_stream_merge_upsert_monotone(spark, tmp_path):
@@ -249,6 +255,52 @@ def test_stream_merge_upsert_monotone(spark, tmp_path):
     monotone_user_upsert(spark, older, store)  # must not regress user 7
     got = {r["user_id"]: r["last_event_type"] for r in read_store(spark, store).collect()}
     assert got == {7: "purchase", 8: "signup"}
+
+
+def test_monotone_upsert_retries_a_crashed_first_commit(spark, tmp_path, monkeypatch):
+    """A first micro-batch that crashed between its generation rename
+    and the ``_LATEST`` flip must not wedge the stream: the retried
+    batch reads no prior state and commits exactly what a clean run of
+    the same batch commits (latest event per user, flat ``bucket``)."""
+    import os
+
+    from wallet_and_risky_features_data_pipeline_spark.sources import writers
+    from wallet_and_risky_features_data_pipeline_spark.streaming.stream_jobs import (
+        monotone_user_upsert,
+    )
+
+    schema = "user_id long, event_id long, event_type string, value double, ts timestamp"
+    batch = spark.createDataFrame(
+        [(7, 50, "signup", 1.0, dt.datetime(2024, 1, 1)),
+         (7, 100, "purchase", 5.0, dt.datetime(2024, 2, 1)),
+         (23, 51, "signup", 2.0, dt.datetime(2024, 1, 2))],
+        schema,
+    )
+    store = str(tmp_path / "store")
+
+    def crash(*a, **k):
+        raise RuntimeError("injected crash before publish")
+
+    with monkeypatch.context() as m:
+        m.setattr(writers, "_flip_latest", crash)
+        with pytest.raises(RuntimeError, match="injected"):
+            monotone_user_upsert(spark, batch, store)
+    assert writers.list_generations(store) == ["gen-000001"]
+    assert not writers.store_committed(store)
+
+    monotone_user_upsert(spark, batch, store)
+    clean = str(tmp_path / "clean")
+    monotone_user_upsert(spark, batch, clean)
+    def rows(p):
+        return sorted(tuple(r) for r in read_store(spark, p).collect())
+
+    assert rows(store) == rows(clean)
+    got = {
+        r["user_id"]: (r["bucket"], r["last_event_type"], r["last_value"])
+        for r in read_store(spark, store).collect()
+    }
+    assert got == {7: (7, "purchase", 5.0), 23: (7, "signup", 2.0)}
+    assert not [e for e in os.listdir(writers.resolve_store(store)) if e.startswith("bucket=")]
 
 
 def test_monotone_upsert_backfills_missing_store_column(spark, tmp_path):
@@ -726,11 +778,13 @@ def test_events_stream_reads_directory_layout(spark, tmp_path):
 
 
 def test_merge_upsert_generation_commit_is_atomic(spark, tmp_path):
-    """The verdict's kill-between-partition-writes probe: inject a crash
-    AFTER the touched partitions landed in staging but BEFORE the
-    commit (the hardlink+rename+pointer-flip step). Readers must still
-    see generation N−1 complete and untouched; the retried merge must
-    succeed and converge to the same result."""
+    """The verdict's kill-mid-commit probe: inject a crash AFTER the new
+    generation landed in staging but BEFORE its publish (the
+    tag+rename+pointer-flip step). Readers must still see generation
+    N−1 complete and untouched; the retried merge must succeed and
+    converge to the same result."""
+    import os
+
     import pytest
 
     from wallet_and_risky_features_data_pipeline_spark.sources import writers
@@ -740,7 +794,7 @@ def test_merge_upsert_generation_commit_is_atomic(spark, tmp_path):
         [(1, "a", 10.0, "p1"), (2, "b", 20.0, "p1"), (3, "c", 30.0, "p2")],
         "id long, name string, v double, part string",
     )
-    merge_upsert(spark, base, path, key=["id"], partition_cols=["part"])
+    merge_upsert(spark, base, path, key=["id"])
     before = {r["id"]: (r["name"], r["v"]) for r in read_store(spark, path).collect()}
 
     updates = spark.createDataFrame(
@@ -751,33 +805,32 @@ def test_merge_upsert_generation_commit_is_atomic(spark, tmp_path):
     class Boom(RuntimeError):
         pass
 
-    real_link = writers._link_untouched
+    real_publish = writers._publish
 
     def crash(*a, **k):
         raise Boom("injected crash mid-commit")
 
-    writers._link_untouched = crash
+    writers._publish = crash
     try:
         with pytest.raises(Boom):
-            merge_upsert(spark, updates, path, key=["id"], partition_cols=["part"])
+            merge_upsert(spark, updates, path, key=["id"])
     finally:
-        writers._link_untouched = real_link
+        writers._publish = real_publish
 
     # crash left staging behind but the live generation is intact
+    assert [e for e in os.listdir(path) if e.startswith(".tmp-gen-")]
+    assert writers.list_generations(path) == ["gen-000001"]
     after_crash = {r["id"]: (r["name"], r["v"]) for r in read_store(spark, path).collect()}
     assert after_crash == before
     # retry converges; crashed staging is cleaned up, not committed
-    merge_upsert(spark, updates, path, key=["id"], partition_cols=["part"])
+    merge_upsert(spark, updates, path, key=["id"])
     got = {r["id"]: (r["name"], r["v"]) for r in read_store(spark, path).collect()}
     assert got == {1: ("a", 10.0), 2: ("b2", 21.0), 3: ("c", 30.0), 4: ("d", 40.0)}
 
 
 def test_merge_upsert_time_travel_and_vacuum(spark, tmp_path):
     """Every merge commits a new immutable generation: old snapshots
-    stay readable (time travel) until vacuum_generations expires them,
-    and untouched partitions are hardlinked, not copied."""
-    import os
-
+    stay readable (time travel) until vacuum_generations expires them."""
     from wallet_and_risky_features_data_pipeline_spark.sources.writers import (
         list_generations,
         vacuum_generations,
@@ -788,25 +841,17 @@ def test_merge_upsert_time_travel_and_vacuum(spark, tmp_path):
         [(1, "a", 10.0, "p1"), (3, "c", 30.0, "p2")],
         "id long, name string, v double, part string",
     )
-    merge_upsert(spark, base, path, key=["id"], partition_cols=["part"])
+    merge_upsert(spark, base, path, key=["id"])
     updates = spark.createDataFrame(
         [(2, "b", 20.0, "p1")], "id long, name string, v double, part string"
     )
-    merge_upsert(spark, updates, path, key=["id"], partition_cols=["part"])
+    merge_upsert(spark, updates, path, key=["id"])
     assert list_generations(path) == ["gen-000001", "gen-000002"]
 
     # time travel: generation 1 still shows the pre-merge state
     g1 = {r["id"] for r in read_store(spark, path, generation=1).collect()}
     g2 = {r["id"] for r in read_store(spark, path, generation=2).collect()}
     assert g1 == {1, 3} and g2 == {1, 2, 3}
-
-    # untouched partition p2 is hardlinked across generations (same inode)
-    def inodes(gen, part):
-        d = os.path.join(path, gen, f"part={part}")
-        return {os.stat(os.path.join(d, f)).st_ino for f in os.listdir(d) if f.endswith(".parquet")}
-
-    assert inodes("gen-000001", "p2") == inodes("gen-000002", "p2")
-    assert inodes("gen-000001", "p1") != inodes("gen-000002", "p1")
 
     removed = vacuum_generations(path, keep=1)
     assert removed == ["gen-000001"]
@@ -834,7 +879,7 @@ def test_merge_upsert_adopts_legacy_flat_store(spark, tmp_path):
     updates = spark.createDataFrame(
         [(1, "a2", 11.0, "p1")], "id long, name string, v double, part string"
     )
-    merge_upsert(spark, updates, path, key=["id"], partition_cols=["part"])
+    merge_upsert(spark, updates, path, key=["id"])
     assert list_generations(path) == ["gen-000001", "gen-000002"]
     got = {r["id"]: r["v"] for r in read_store(spark, path).collect()}
     assert got == {1: 11.0, 3: 30.0}
@@ -1026,7 +1071,12 @@ def test_merge_upsert_detects_concurrent_commit(spark, tmp_path):
     """Optimistic concurrency: a merge computed against snapshot N must
     NOT publish if another writer committed N+1 meanwhile (publishing
     would silently drop the other writer's rows). Simulated by
-    committing a second merge inside the loser's link step."""
+    committing a second merge after the loser read generation 1 but
+    before its commit tail numbers its own generation: the loser's
+    rename to gen-000003 then succeeds, so only a CAS whose base is the
+    generation the loser READ can refuse it."""
+    import os
+
     import pytest
 
     from wallet_and_risky_features_data_pipeline_spark.sources import writers
@@ -1042,13 +1092,12 @@ def test_merge_upsert_detects_concurrent_commit(spark, tmp_path):
         spark.createDataFrame([(1, "a", 10.0, "p1")], schema),
         path,
         key=["id"],
-        partition_cols=["part"],
     )
 
-    real_link = writers._link_untouched
+    real_next = writers._next_gen_number
     raced = {"done": False}
 
-    def racing_link(cur_gen, staged, skip=frozenset()):
+    def racing_next(p):
         # the RIVAL writer lands a full commit while we are mid-commit
         if not raced["done"]:
             raced["done"] = True
@@ -1057,33 +1106,33 @@ def test_merge_upsert_detects_concurrent_commit(spark, tmp_path):
                 spark.createDataFrame([(2, "rival", 20.0, "p1")], schema),
                 path,
                 key=["id"],
-                partition_cols=["part"],
             )
-        real_link(cur_gen, staged, skip=skip)
+        return real_next(p)
 
-    writers._link_untouched = racing_link
+    writers._next_gen_number = racing_next
     try:
-        with pytest.raises(ConcurrentCommitError):
+        with pytest.raises(ConcurrentCommitError, match="already advanced gen-000001"):
             merge_upsert(
                 spark,
                 spark.createDataFrame([(3, "loser", 30.0, "p1")], schema),
                 path,
                 key=["id"],
-                partition_cols=["part"],
             )
     finally:
-        writers._link_untouched = real_link
+        writers._next_gen_number = real_next
 
     # rival's commit survives untouched; loser left no published rows
+    # and no generation dir behind
     got = {r["id"]: r["name"] for r in read_store(spark, path).collect()}
     assert got == {1: "a", 2: "rival"}
+    assert list_generations(path) == ["gen-000001", "gen-000002"]
+    assert not [e for e in os.listdir(path) if e.startswith(".tmp-gen-")]
     # loser's retry against the new snapshot now succeeds
     merge_upsert(
         spark,
         spark.createDataFrame([(3, "loser", 30.0, "p1")], schema),
         path,
         key=["id"],
-        partition_cols=["part"],
     )
     got = {r["id"]: r["name"] for r in read_store(spark, path).collect()}
     assert got == {1: "a", 2: "rival", 3: "loser"}
@@ -1113,7 +1162,7 @@ def test_merge_upsert_recovers_crashed_first_commit(spark, tmp_path):
     writers._flip_latest = crash_flip
     try:
         with pytest.raises(RuntimeError, match="injected"):
-            merge_upsert(spark, base, path, key=["id"], partition_cols=["part"])
+            merge_upsert(spark, base, path, key=["id"])
     finally:
         writers._flip_latest = real_flip
 
@@ -1123,7 +1172,7 @@ def test_merge_upsert_recovers_crashed_first_commit(spark, tmp_path):
         read_store(spark, path)
 
     # retry converges to a correct published snapshot
-    merge_upsert(spark, base, path, key=["id"], partition_cols=["part"])
+    merge_upsert(spark, base, path, key=["id"])
     got = {r["id"]: r["name"] for r in read_store(spark, path).collect()}
     assert got == {1: "a"}
 
@@ -1148,7 +1197,6 @@ def test_vacuum_removes_uncommitted_generation(spark, tmp_path):
         spark.createDataFrame([(1, "a", 10.0, "p1")], schema),
         path,
         key=["id"],
-        partition_cols=["part"],
     )
     # simulate the crash leftover: a complete but unreferenced gen-000002
     shutil.copytree(os.path.join(path, "gen-000001"), os.path.join(path, "gen-000002"))

@@ -477,23 +477,21 @@ def test_nightly_flattens_a_partitioned_features_store(spark, tmp_path, base_sf)
         wallet_transactions,
     )
     from wallet_and_risky_features_data_pipeline_spark.sources.writers import (
+        commit_generation,
         list_generations,
-        merge_upsert,
         read_store,
     )
 
     wd = str(tmp_path)
     target = f"{wd}/features/contract_state"
     tag = wallet_transactions(spark, base_sf).agg(F.unix_micros(F.max("ts"))).first()[0]
-    merge_upsert(
-        spark,
+    commit_generation(
         contract_state(spark, base_sf).withColumn(
             "address_partition", bucket_key(F.col("wallet_address"))
         ),
         target,
-        key=["wallet_address", "contract_address"],
-        partition_cols=["address_partition"],
         tag=str(tag),
+        partition_by=["address_partition"],
     )
     assert any(e.startswith("address_partition=") for e in os.listdir(f"{target}/gen-000001"))
 

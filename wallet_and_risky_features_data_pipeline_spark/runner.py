@@ -94,7 +94,6 @@ def run_features(spark, sf_dir: str, work_dir: str) -> None:
         state.withColumn("address_partition", bucket_key(F.col("wallet_address"))),
         target,
         key=["wallet_address", "contract_address"],
-        partition_cols=(),
         tag=str(tag),
     )
     print(f"features: merged state for {n} (wallet, contract) pairs")
@@ -245,7 +244,7 @@ def run_erase(spark, sf_dir: str, work_dir: str, wallets: str = "") -> None:
     n_feats = 0
     if store_committed(feats):
         keys_df = spark.createDataFrame([(w,) for w in keys], "wallet_address string")
-        n_feats = erase_from_store(spark, keys_df, feats, "wallet_address", partition_cols=())
+        n_feats = erase_from_store(spark, keys_df, feats, "wallet_address")
     vacuum_generations(feats, keep=1)
 
     # 2) staged events, ONE combined pass per touched partition:

@@ -48,8 +48,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "50000")
         # Deterministic, engine-neutral timestamps (oracle parity).
         .config("spark.sql.session.timeZone", "UTC")
-        # Iceberg-MERGE stand-in: overwrite only the partitions present
-        # in the incoming DataFrame (SURVEY.md §2.1 S9).
+        # Only write_partitioned depends on this: its overwrite replaces
+        # just the partitions present in its frame. The generation
+        # writers stage into a fresh directory and do not.
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # 128 MB input splits — sane at 100 TB; irrelevant at test SFs.
         .config("spark.sql.files.maxPartitionBytes", "134217728")

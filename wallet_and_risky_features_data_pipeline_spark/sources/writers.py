@@ -12,33 +12,28 @@ tables with MERGE INTO (features). Spark equivalents:
 - ``merge_upsert``       → join-based MERGE in plain parquet with an
   ATOMIC GENERATION COMMIT; stands in for Iceberg ``MERGE INTO``
   (reference queries/ethereum_wallet_features.sql:760-833) without a
-  Delta/Iceberg runtime dependency. A hive-partitioned store rewrites
-  the partitions present in the incoming batch; a flat store (no
-  ``partition_cols``) rewrites its one generation whole.
+  Delta/Iceberg runtime dependency. Every MERGE (and every
+  ``erase_from_store``) rewrites the live generation whole, flat.
 
 Generation layout (the snapshot-commit half of the Iceberg gap)::
 
     store/
-      _LATEST            # one line: name of the live generation
-      gen-000001/part=a/...   # immutable once committed
-      gen-000002/part=a/...   # untouched partitions are HARDLINKS
-                              # into the previous generation's files
+      _LATEST                     # one line: name of the live generation
+      gen-000001/part-*.parquet   # immutable once committed
+      gen-000002/part-*.parquet   # the next full snapshot
+      gen-000002/_TAG             # optional commit tag (epoch fence)
 
-Each merge writes the touched partitions (or, flat, the whole
-generation) into a hidden staging dir, hardlinks every untouched
-partition's files from the live generation
-(a metadata-only operation — the local-fs stand-in for an Iceberg
-manifest re-listing unchanged data files; on S3/HDFS this step becomes
-a manifest write, not a data copy), renames the staging dir to
-``gen-N+1``, and finally publishes through ``_flip_latest`` — an
-intent-logged compare-and-swap on the base snapshot (atomic
-``link(2)`` advance marker; one winner per parent snapshot, losers get
-``ConcurrentCommitError`` to retry, a winner that crashes mid-publish
-is rolled forward by the next writer). Readers resolve through
-``resolve_store`` — a crash at ANY point leaves them on the previous
-complete generation; there is no window where a reader can observe a
-mixed-generation store. Old generations double as time travel
-(``read_store(..., generation=N)``) until ``vacuum_generations``
+Every generation writer (``merge_upsert``, ``erase_from_store``,
+``commit_generation``) writes the whole new snapshot into a hidden
+staging dir, renames it to ``gen-N+1``, and finally publishes through
+``_flip_latest`` — an intent-logged compare-and-swap on the base
+snapshot (atomic ``link(2)`` advance marker; one winner per parent
+snapshot, losers get ``ConcurrentCommitError`` to retry, a winner that
+crashes mid-publish is rolled forward by the next writer). Readers
+resolve through ``resolve_store`` — a crash at ANY point leaves them on
+the previous complete generation; there is no window where a reader
+can observe a mixed-generation store. Old generations double as time
+travel (``read_store(..., generation=N)``) until ``vacuum_generations``
 prunes them (single-maintainer; hot paths skip ghosts via
 ``_next_gen_number`` instead of clearing).
 """
@@ -935,36 +930,6 @@ def _flip_latest(path: str, gen_name: str, expected_base: str | None = None) -> 
     _replace_pointer(path, gen_name)
 
 
-def _link_untouched(
-    cur_gen: str, staged: str, skip: frozenset[str] = frozenset()
-) -> None:
-    """Hardlink every file of ``cur_gen`` whose leaf partition dir was
-    NOT rewritten into ``staged``. Metadata-only (no data copied) —
-    the local-fs equivalent of an Iceberg manifest pointing at the
-    previous snapshot's unchanged data files.
-
-    ``skip``: relative partition dirs that were TOUCHED by the rewrite
-    but may be absent from ``staged`` — a partition whose every row was
-    deleted writes no output, and relinking it would resurrect the
-    deleted rows (the erase path's failure mode; a merge's union always
-    rewrites its touched partitions, so merges pass nothing here)."""
-    for dirpath, dirnames, filenames in os.walk(cur_gen):
-        dirnames[:] = [d for d in dirnames if not d.startswith((".", "_"))]
-        rel = os.path.relpath(dirpath, cur_gen)
-        if rel == ".":
-            continue  # root holds only markers (_SUCCESS), Spark rewrites them
-        if any(rel == s or rel.startswith(s + os.sep) for s in skip):
-            continue  # touched by the rewrite: absence means fully deleted
-        dst_dir = os.path.join(staged, rel)
-        if os.path.isdir(dst_dir):
-            continue  # partition rewritten by this merge
-        os.makedirs(dst_dir, exist_ok=True)
-        for f in filenames:
-            if f.startswith((".", "_")) and not f.endswith(".parquet"):
-                continue
-            os.link(os.path.join(dirpath, f), os.path.join(dst_dir, f))
-
-
 def _adopt_flat_store(path: str) -> None:
     """Crash-safely convert a legacy flat store into generation 1:
     hardlink the flat data files into ``gen-000001`` (the flat copy
@@ -1049,25 +1014,54 @@ def commit_generation(
     physical layout choice: the generation protocol (staging, rename,
     pointer CAS, vacuum, time travel) is unchanged, and ``read_store``
     reads partitioned and flat generations alike."""
-    os.makedirs(path, exist_ok=True)
-    # Base = the LIVE generation (the pointer is the commit). Ghost
-    # dirs/markers past it are skipped by the numbering, not cleared —
-    # see _next_gen_number; vacuum_generations reclaims them.
-    base_dir = resolve_store(path) if os.path.exists(os.path.join(path, _LATEST)) else None
     if clear_fence and tag is not None:
         raise ValueError(
             "clear_fence=True contradicts an explicit tag: a commit "
             "cannot both clear the epoch fence and set one"
         )
+    # Base = the LIVE generation (the pointer is the commit).
+    base_dir = resolve_store(path) if store_committed(path) else None
+    # An untagged rewrite (or relayout) of a fenced store carries the
+    # fence, or a replayed at-least-once epoch would double-apply.
+    gen_name, _ = _commit_staged(
+        df, path, base_dir, tag, inherit=not clear_fence, partition_by=partition_by
+    )
+    return gen_name
+
+
+def _commit_staged(
+    df: DataFrame,
+    path: str,
+    base_dir: str | None,
+    tag: str | None,
+    inherit: bool = True,
+    partition_by: Sequence[str] | None = None,
+) -> tuple[str, int]:
+    """Shared staged-write tail of every generation writer: write
+    ``df`` whole into a fresh staging dir, count its rows, and
+    ``_publish`` it with ``base_dir`` as the CAS base. ``base_dir``
+    must be the generation the caller READ (None: a first commit),
+    never one resolved again here: a rival commit landing between the
+    read and this publish then fails the CAS instead of being silently
+    overwritten. Returns the generation name and the staged row count."""
+    import pyarrow.dataset as ds
+
+    os.makedirs(path, exist_ok=True)
+    # Ghost dirs/markers past the live pointer are skipped by the
+    # numbering, not cleared — see _next_gen_number; vacuum_generations
+    # reclaims them.
     n = _next_gen_number(path)
     staged = _staging_dir(path, n)
+    # No lineage hazard: the write targets a FRESH dir while reading the
+    # still-immutable live generation, so no localCheckpoint is needed.
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(staged)
-    # An untagged rewrite (or relayout) of a fenced store carries the
-    # fence, or a replayed at-least-once epoch would double-apply.
-    return _publish(path, staged, n, base_dir, tag, inherit=not clear_fence)
+    # Row count from the staged files' parquet footers: exact, and no
+    # Spark job (re-executing the plan would redo the MERGE).
+    rows = ds.dataset(staged, format="parquet").count_rows()
+    return _publish(path, staged, n, base_dir, tag, inherit), rows
 
 
 def snapshot_diff(
@@ -1323,7 +1317,6 @@ def merge_upsert(
     updates: DataFrame,
     path: str,
     key: Sequence[str],
-    partition_cols: Sequence[str] = ("address_partition",),
     tag: str | None = None,
 ) -> int:
     """MERGE INTO stand-in with snapshot semantics: keep target rows
@@ -1333,13 +1326,12 @@ def merge_upsert(
     readers on the previous complete generation. Returns the number of
     rows written.
 
-    ``partition_cols`` are the store's hive partition columns: only the
-    partitions present in ``updates`` are rewritten, and every other
-    partition is hardlinked from the live generation. Empty
-    ``partition_cols`` make the generation one unit: the MERGE rewrites
-    it whole and unpartitioned, in as many files as the plan has
-    partitions, and relinks nothing. A live generation written
-    partitioned becomes flat at its first such MERGE.
+    Every MERGE rewrites the live generation whole and flat, in as many
+    files as the plan has partitions. The live generation is read in
+    the batch's schema, so one written hive-partitioned (a legacy store,
+    or a ``commit_generation(partition_by=...)`` snapshot) becomes flat
+    at its first MERGE with its former partition columns typed as the
+    batch types them, not as their dir names infer.
 
     ``tag`` follows ``commit_generation``'s contract: it commits or
     vanishes with the MERGE (``generation_tag`` reads it back), and an
@@ -1348,10 +1340,9 @@ def merge_upsert(
     from .readers import _ensure_session_confs
 
     # Materialize the updates plan ONCE: it is consumed by the isEmpty
-    # probe, the touched-partition projection, the anti-join and the
-    # final union — for monotone upserts that plan embeds a join against
-    # the whole store and would otherwise re-execute per consumer
-    # (ADVICE r02).
+    # probe, the anti-join and the final union — for monotone upserts
+    # that plan embeds a join against the whole store and would
+    # otherwise re-execute per consumer (ADVICE r02).
     updates = updates.localCheckpoint(eager=True)
     # Defense in depth: an empty batch (e.g. the trailing availableNow
     # micro-batch of a stream) must be a no-op, never a new generation.
@@ -1359,8 +1350,7 @@ def merge_upsert(
         return 0
     _ensure_session_confs(spark)
 
-    has_latest = os.path.isdir(path) and os.path.exists(os.path.join(path, _LATEST))
-    if os.path.isdir(path) and not has_latest:
+    if os.path.isdir(path) and not store_committed(path):
         # gen-* dirs do NOT count as flat data: with no pointer they are
         # an unpublished crashed first commit, not a legacy store —
         # adopting here would destroy the real gen and wedge the store.
@@ -1369,74 +1359,16 @@ def merge_upsert(
         ):
             # legacy flat store from an older writer: adopt as gen 1
             _adopt_flat_store(path)
-            has_latest = True
-    os.makedirs(path, exist_ok=True)
-
-    # UNCOMMITTED generations (renamed but never published — the
-    # pointer is the commit) are ghosts: numbering SKIPS them
-    # (_next_gen_number) rather than clearing them here, because from
-    # this path a crash leftover is indistinguishable from a rival
-    # writer between its rename and flip; vacuum_generations
-    # (single-maintainer) reclaims them.
-    next_n = _next_gen_number(path)
-    if not has_latest:
-        # first commit: nothing live to carry over or relink
-        return _commit_partition_rewrite(path, None, updates, partition_cols, next_n, tag)
+    if not store_committed(path):
+        # first commit: nothing live to carry over
+        return _commit_staged(updates, path, None, tag)[1]
 
     cur_gen = resolve_store(path)
     # A listing/IO failure here must fail the merge — swallowing it as
     # "no store" would commit a generation holding only this batch
-    # (ADVICE r02). A flat MERGE reads in the batch's schema: a live
-    # generation written partitioned would otherwise type its partition
-    # columns by inference (bucket "07" → int 7, unioned to bigint).
-    target = (spark.read if partition_cols else spark.read.schema(updates.schema)).parquet(cur_gen)
-    if partition_cols:
-        # Restrict the rewrite to touched partitions (partition pruning
-        # on the scan side; broadcast the partition list — it is tiny).
-        parts = updates.select(*partition_cols).distinct()
-        target = target.join(
-            parts.hint("broadcast"), on=list(partition_cols), how="left_semi"
-        )
-    merged = upsert_rows(target, updates, key)
-    return _commit_partition_rewrite(path, cur_gen, merged, partition_cols, next_n, tag)
-
-
-def _commit_partition_rewrite(
-    path: str,
-    cur_gen: str | None,
-    merged: DataFrame,
-    partition_cols: Sequence[str],
-    next_n: int,
-    tag: str | None,
-    skip_relink: frozenset[str] = frozenset(),
-) -> int:
-    """Shared publish tail of the partition-rewrite family
-    (``merge_upsert``, ``erase_from_store``): stage the rewritten
-    partitions, hardlink the untouched ones from the live generation
-    ``cur_gen`` (None for a store's first commit; with no
-    ``partition_cols`` the staged rows are the whole generation and
-    nothing is relinked), tag the staged generation (untagged:
-    ``cur_gen``'s tag carries over), rename, and CAS-flip the pointer.
-    Returns the staged row count."""
-    # next_n computed up front by _next_gen_number (ghost-skip)
-    staged = _staging_dir(path, next_n)
-    # No lineage hazard: the write targets a FRESH dir while reading the
-    # still-immutable live generation, so no localCheckpoint is needed.
-    merged.write.partitionBy(*partition_cols).mode("overwrite").parquet(staged)
-    # Row count from the staged files' parquet footers — exact, and no
-    # Spark job: re-executing the merge plan would redo the merge, and
-    # a Spark read-back lists a 256-way partition layout in a job of its
-    # own. An erase that empties every touched partition stages no
-    # parquet at all (only _SUCCESS) and counts 0.
-    import pyarrow.dataset as ds
-
-    n = ds.dataset(staged, format="parquet").count_rows()
-    if cur_gen is not None and partition_cols:
-        _link_untouched(cur_gen, staged, skip=skip_relink)
-    # compare-and-swap on the base snapshot: if another writer
-    # committed while this merge ran, fail rather than drop its rows
-    _publish(path, staged, next_n, cur_gen, tag)
-    return n
+    # (ADVICE r02).
+    target = spark.read.schema(updates.schema).parquet(cur_gen)
+    return _commit_staged(upsert_rows(target, updates, key), path, cur_gen, tag)[1]
 
 
 def _scan_expired_error(e: Exception) -> bool:
@@ -1457,9 +1389,8 @@ def _scan_expired_error(e: Exception) -> bool:
             "FileNotFoundError",
             "does not exist",
             "UNABLE_TO_INFER_SCHEMA",
-            # a raw python FileNotFoundError (e.g. the hardlink pass
-            # racing a vacuum) stringifies to the errno message only —
-            # the class name never appears in str(e)
+            # a raw python FileNotFoundError stringifies to the errno
+            # message only — the class name never appears in str(e)
             "No such file or directory",
         )
     )
@@ -1470,23 +1401,18 @@ def erase_from_store(
     keys: DataFrame,
     path: str,
     key_col: str,
-    partition_cols: Sequence[str] = ("address_partition",),
 ) -> int:
     """Right-to-erasure as a GENERATION commit — the store-native
     counterpart of ``maintenance.propagate_deletes`` (which rewrites a
     plain parquet table in place): remove every row whose ``key_col``
     appears in ``keys`` from the live generation by committing a NEW
-    generation with the touched partitions rewritten (anti-join) and
-    the untouched ones hardlinked — the same staged-write → rename →
-    CAS-flip protocol as ``merge_upsert``, so it is crash-safe and
-    safe to interleave with concurrent writers (optimistic retry on
-    ``ConcurrentCommitError``) and with the fenced
-    ``vacuum_generations``. A partition whose every row is erased is
-    dropped from the new generation outright (``_link_untouched``'s
-    ``skip`` contract — relinking it would resurrect the rows). With
-    empty ``partition_cols`` the whole generation is rewritten (the
-    flat contract of ``merge_upsert``). Erasing keys the live
-    generation does not hold commits nothing.
+    generation that holds the rest (anti-join), written whole and flat
+    — the same staged-write → rename → CAS-flip protocol as
+    ``merge_upsert``, so it is crash-safe and safe to interleave with
+    concurrent writers (optimistic retry on ``ConcurrentCommitError``)
+    and with the fenced ``vacuum_generations``. Erasing keys the live
+    generation does not hold commits nothing; erasing every row commits
+    an empty generation in the store's schema, under the live tag.
 
     The erase is complete only after ``vacuum_generations`` expires
     the prior generations (and crash leftovers) that still hold the
@@ -1502,7 +1428,7 @@ def erase_from_store(
     the new latest exactly like a lost commit race."""
     before = resolve_store(path)
     try:
-        return _erase_from_store_once(spark, keys, path, key_col, partition_cols)
+        return _erase_from_store_once(spark, keys, path, key_col)
     except ConcurrentCommitError:
         raise
     except Exception as e:  # noqa: BLE001 — converting one known class
@@ -1516,11 +1442,7 @@ def erase_from_store(
 
 
 def _erase_from_store_once(
-    spark: SparkSession,
-    keys: DataFrame,
-    path: str,
-    key_col: str,
-    partition_cols: Sequence[str],
+    spark: SparkSession, keys: DataFrame, path: str, key_col: str
 ) -> int:
     keys = keys.select(key_col).distinct().localCheckpoint(eager=True)
     if keys.isEmpty():
@@ -1529,109 +1451,13 @@ def _erase_from_store_once(
 
     _ensure_session_confs(spark)
     cur_gen = resolve_store(path)
-    next_n = _next_gen_number(path)
-    touched = spark.read.parquet(cur_gen)
-    skip_relink: frozenset[str] = frozenset()
-    if partition_cols:
-        doomed_parts = (
-            touched.join(keys.hint("broadcast"), on=key_col, how="left_semi")
-            .select(*partition_cols)
-            .distinct()
-        )
-        # Dir-name matching set (ADVICE r11): read the SAME partitions with
-        # partition type inference OFF, so values come back as the exact
-        # strings encoded in the hive dir names — an int-inferred '00123'
-        # would otherwise stringify to '123' and miss its dir (a fully-
-        # erased partition relinked = erased rows resurrected), and a
-        # decimal '1.10' to '1.1'. NULL maps to a sentinel no literal
-        # string value can decode to, so a partition VALUE 'None' can
-        # never be confused with the null partition.
-        # driver-scale: partition fan-out is bounded (≤256 buckets)
-        infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        prev_infer = spark.conf.get(infer_key, "true")
-        spark.conf.set(infer_key, "false")
-        try:
-            raw_parts = (
-                spark.read.parquet(cur_gen)
-                .join(keys.hint("broadcast"), on=key_col, how="left_semi")
-                .select(*partition_cols)
-                .distinct()
-            )
-            doomed_vals = {
-                tuple(
-                    _NULL_PARTITION_SENTINEL if r[c] is None else str(r[c])
-                    for c in partition_cols
-                )
-                for r in raw_parts.collect()
-            }
-        finally:
-            spark.conf.set(infer_key, prev_infer)
-        # NULL-SAFE partition match: an equi-semi-join would never match
-        # the null partition (NULL = NULL is unknown), silently exempting
-        # null-keyed partitions from erasure — found by the
-        # inference-hostile test, same hazard family as ADVICE r11's
-        # name-matching items.
-        t = touched.alias("__t")
-        dp = doomed_parts.alias("__dp")
-        cond = None
-        for c in partition_cols:
-            e = F.col(f"__t.{c}").eqNullSafe(F.col(f"__dp.{c}"))
-            cond = e if cond is None else cond & e
-        touched = t.join(dp.hint("broadcast"), on=cond, how="left_semi")
-        # Touched partitions absent from the staged output (fully erased)
-        # must NOT be relinked: resolve the on-disk dir names by PARSING
-        # the live generation's layout (decode-direction matching — robust
-        # to Spark's hive escaping) instead of re-encoding values.
-        skip_relink = frozenset(
-            rel
-            for rel, vals in _partition_dirs(cur_gen, list(partition_cols)).items()
-            if vals in doomed_vals
-        )
-    n_erased = touched.join(keys.hint("broadcast"), on=key_col, how="left_semi").count()
+    live = spark.read.parquet(cur_gen)
+    n_erased = live.join(keys.hint("broadcast"), on=key_col, how="left_semi").count()
     if not n_erased:
         return 0
-    kept = touched.join(keys.hint("broadcast"), on=key_col, how="left_anti")
-    _commit_partition_rewrite(
-        path, cur_gen, kept, partition_cols, next_n, None, skip_relink=skip_relink
-    )
+    kept = live.join(keys.hint("broadcast"), on=key_col, how="left_anti")
+    _commit_staged(kept, path, cur_gen, None)
     return n_erased
-
-
-# decoded stand-in for the null partition — contains NUL, which no
-# hive-escaped dir segment can decode to from a real string value
-_NULL_PARTITION_SENTINEL = "\x00__hive_default_partition__"
-
-
-def _partition_dirs(gen_dir: str, partition_cols: list[str]) -> dict[str, tuple]:
-    """Map each relative leaf partition dir of ``gen_dir`` to its
-    decoded value tuple (hive ``col=value`` segments, %-unescaped,
-    ``__HIVE_DEFAULT_PARTITION__`` → ``_NULL_PARTITION_SENTINEL`` so
-    null never collides with a literal string value ``'None'``)."""
-    from urllib.parse import unquote
-
-    out: dict[str, tuple] = {}
-    for dirpath, dirnames, _filenames in os.walk(gen_dir):
-        dirnames[:] = [d for d in dirnames if not d.startswith((".", "_"))]
-        rel = os.path.relpath(dirpath, gen_dir)
-        if rel == ".":
-            continue
-        segs = rel.split(os.sep)
-        if len(segs) != len(partition_cols):
-            continue  # not a leaf at the partition depth
-        kv = {}
-        for seg in segs:
-            if "=" not in seg:
-                break
-            c, v = seg.split("=", 1)
-            kv[c] = (
-                _NULL_PARTITION_SENTINEL
-                if v == "__HIVE_DEFAULT_PARTITION__"
-                else unquote(v)
-            )
-        else:
-            if list(kv) == partition_cols:
-                out[rel] = tuple(kv[c] for c in partition_cols)
-    return out
 
 
 def store_snapshots(spark: SparkSession, path: str) -> DataFrame:

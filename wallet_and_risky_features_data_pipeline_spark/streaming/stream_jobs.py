@@ -377,8 +377,6 @@ def monotone_user_upsert(spark: SparkSession, batch: DataFrame, store: str) -> N
     carrying only OLDER events for a user never regresses stored state
     (the property the reference gets from its ordered Iceberg MERGE
     loop, features_pipeline.py:96-126)."""
-    from ..sources.writers import merge_upsert
-
     latest = batch.groupBy("user_id").agg(
         F.max_by(
             F.struct("ts", "event_type", "value", "event_id"),
@@ -393,17 +391,21 @@ def monotone_user_upsert(spark: SparkSession, batch: DataFrame, store: str) -> N
         F.col("s.event_type").alias("last_event_type"),
         F.col("s.value").cast("double").alias("last_value"),
     )
-    # Catch ONLY the store-absent case (first batch). A transient
-    # listing/IO failure must fail the micro-batch — swallowing it
-    # would silently disable the monotone guard and let merge_upsert
-    # degrade to an overwrite of partial state (ADVICE r02).
+    # No prior state in exactly two cases: the store is absent (first
+    # batch), or a first commit crashed between its rename and its flip
+    # (gen dirs but no _LATEST: resolve_store refuses them, and
+    # merge_upsert's retry redoes the commit). A store written before
+    # generations existed reads as-is. Any other listing/IO failure
+    # must fail the micro-batch — swallowing it would silently disable
+    # the monotone guard and let merge_upsert degrade to an overwrite
+    # of partial state (ADVICE r02).
     from pyspark.errors import AnalysisException
 
-    from ..sources.writers import resolve_store
+    from ..sources.writers import merge_upsert, read_store
 
     try:
-        stored = spark.read.parquet(resolve_store(store))
-    except AnalysisException:
+        stored = read_store(spark, store)
+    except (AnalysisException, FileNotFoundError):
         stored = None
     if stored is not None:
         if "last_event_id" not in stored.columns:
@@ -426,13 +428,16 @@ def monotone_user_upsert(spark: SparkSession, batch: DataFrame, store: str) -> N
             )
             .drop("__ts", "__eid")
         )
-    merge_upsert(spark, snapshot, store, key=["user_id"], partition_cols=["bucket"])
+    # ``bucket`` is a column of the flat generation (the oracle
+    # projects it), not a directory level.
+    merge_upsert(spark, snapshot, store, key=["user_id"])
     # A long-running stream commits one generation per micro-batch;
-    # without retention the store accretes hardlink forests and keeps
-    # every superseded row alive (bad for disk AND for erasure — old
-    # snapshots retain deleted subjects). Keep the live generation plus
-    # one rollback snapshot, exactly like the reference's scheduled
-    # VACUUM after its MERGE loop (features_pipeline.py:128-138).
+    # without retention the store accretes one full snapshot per batch
+    # and keeps every superseded row alive (bad for disk AND for
+    # erasure — old snapshots retain deleted subjects). Keep the live
+    # generation plus one rollback snapshot, exactly like the
+    # reference's scheduled VACUUM after its MERGE loop
+    # (features_pipeline.py:128-138).
     # SINGLE-MAINTAINER precondition (vacuum's contract): it holds here
     # because a Structured Streaming query owns its sink store
     # exclusively — the checkpoint lock serializes epochs, so no rival
@@ -453,10 +458,11 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Each micro-batch is reduced to one latest-state row per user
     (``max_by`` over the deterministic (ts, event_id) order) and merged
-    into a parquet feature store via the bounded dynamic-partition
-    MERGE writer. The final store is returned for oracle verification:
-    a latest-event-per-user snapshot, regardless of how many batches
-    the stream delivered the data in.
+    into a parquet feature store by ``merge_upsert``, which commits
+    the whole store as one flat generation per micro-batch. The final
+    store is returned for oracle verification: a latest-event-per-user
+    snapshot, regardless of how many batches the stream delivered the
+    data in.
     """
     spark = _stream_session(spark)
     static = spark.read.parquet(f"{sf_dir}/events.parquet")

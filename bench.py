@@ -51,11 +51,9 @@ from wallet_and_risky_features_data_pipeline_spark.session import get_spark
 CONCURRENCY = int(os.environ.get("SPARK_GRAFT_BENCH_CONCURRENCY", "8"))
 
 # (full, warm) registry pairs for the paired interleaved tier —
-# module-level so tests can pin that every name stays registered
+# module-level so tests can pin that every name stays registered.
+# Only warm families with a recorded win over full recompute are paired.
 PAIRED_WARM = {
-    "wallet_label_propagation": "wallet_label_propagation_warm",
-    "wallet_flow_motifs": "wallet_flow_motifs_warm",
-    "wallet_pagerank": "wallet_pagerank_warm",
     "wallet_components": "wallet_components_warm",
     "wallet_coin_balances": "wallet_coin_balances_warm",
     "wallet_auc_rollup": "wallet_auc_warm",
@@ -72,11 +70,9 @@ PAIRED_WARM = {
 PAIRED_WARM_SCALED = {
     "wallet_coin_balances": "wallet_coin_balances_warm_scaled",
     "dedup_minhash_lsh": "dedup_minhash_warm_scaled",
-    # r15 №5: the lazy-leg rewrite sped the pagerank/AUC FULL faces
-    # past their warm siblings at the harness's mid-stream split —
-    # re-paired here at the realistic ~1% delta, same as the two
-    # r14 holdouts above.
-    "wallet_pagerank": "wallet_pagerank_warm_scaled",
+    # r15 №5: the lazy-leg rewrite sped the AUC FULL face past its
+    # warm sibling at the harness's mid-stream split — re-paired here
+    # at the realistic ~1% delta, same as the two r14 holdouts above.
     "wallet_auc_rollup": "wallet_auc_warm_scaled",
 }
 

@@ -21,7 +21,7 @@ def pytest_configure(config):
         "driver's) finishes inside its window (VERDICT r15 #1: the ~21 min "
         "full suite outran the driver's pytest budget and the round read "
         "tests_ok=false). The driver tier keeps the WHOLE contract + "
-        "oracle-comparison surface (test_queries_vs_oracle runs all 212 "
+        "oracle-comparison surface (test_queries_vs_oracle runs all 208 "
         "oracles); only multi-minute crash-chaos loops, multiprocess "
         "contention stress, and whole-registry sweeps move to the full "
         "tier, which the builder runs before every record.",

@@ -61,7 +61,7 @@ def test_nested_build_of_another_key_does_not_deadlock():
     inner = _counting_build("inner", calls)
 
     def outer():
-        # the warm LPA refresh's shape: peek one memo, build another
+        # a nested build: peek one memo, build another
         assert peek_session_memo(sess, "inner") is None
         return ("outer", session_memo(sess, "inner", inner))
 
@@ -110,26 +110,21 @@ def _settled_blocks(spark, done, timeout: float = 30.0) -> dict[int, int]:
         last = blocks
 
 
-def test_reset_releases_every_memo_block(spark, tmp_path, monkeypatch):
-    """All four session memos, reset: the registry is empty and the
+def test_reset_releases_every_memo_block(spark):
+    """All three session memos, reset: the registry is empty and the
     cached blocks are back to the count before the build — including
     the cluster assignment's localCheckpoint, which
     ``DataFrame.unpersist`` alone does not free."""
-    from wallet_and_risky_features_data_pipeline_spark.plans import (
-        incremental_plans as inc,
-    )
     from wallet_and_risky_features_data_pipeline_spark.plans.registry import QUERIES
     from wallet_and_risky_features_data_pipeline_spark.plans.wallet_model import (
         WT_MEMO,
         wallet_transactions,
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_WARM_STATE_DIR", str(tmp_path))
     keys = [
         (WT_MEMO, SF_SMALL),
         ("ngram_capped", SF_SMALL),
         ("cluster_assignment", SF_SMALL),
-        ("lpa_warm", SF_SMALL),
     ]
     reset_session_memos(spark)
     before = _settled_blocks(spark, lambda now, last: now == last)
@@ -138,7 +133,6 @@ def test_reset_releases_every_memo_block(spark, tmp_path, monkeypatch):
     for fn in (
         QUERIES["dedup_ngram_jaccard"],
         QUERIES["dedup_cluster_assign"],
-        inc.wallet_label_propagation_warm,
     ):
         with cache_scope():
             fn(spark, SF_SMALL).write.format("noop").mode("overwrite").save()
@@ -149,7 +143,7 @@ def test_reset_releases_every_memo_block(spark, tmp_path, monkeypatch):
     assert set(_cached_blocks(spark)) - set(before)
 
     reset_session_memos(spark)
-    assert [peek_session_memo(spark, k) for k in keys] == [None] * 4
+    assert [peek_session_memo(spark, k) for k in keys] == [None] * 3
     # blocks cached before the build may be released meanwhile by
     # whatever earlier tests left behind; none may be added
     after = _settled_blocks(spark, lambda now, last: set(now) <= set(before))

@@ -180,6 +180,23 @@ def test_flow_motifs_incremental_equals_full(spark, split_at):
     assert incremental == full
 
 
+def test_flow_fences_cover_every_leg(spark):
+    """``_fence_anti``'s caller contract: the occupancy fences hold a
+    row for every (wallet, day) of the legs they fence, which is what
+    makes its anti-join against the over-fuse hot list equal to an
+    inner join + ``n <= fuse`` filter over the full fence table."""
+    from wallet_and_risky_features_data_pipeline_spark.plans.risk_features import (
+        _flow_legs_and_fences,
+    )
+
+    legs, in_busy, out_busy = _flow_legs_and_fences(spark, SF_SMALL)
+    assert not legs.isEmpty()
+    on_out = (F.col("src") == F.col("ob_b")) & (F.col("day") == F.col("ob_day"))
+    on_in = (F.col("dst") == F.col("ib_b")) & (F.col("day") == F.col("ib_day"))
+    assert legs.join(out_busy, on_out, "left_anti").isEmpty()
+    assert legs.join(in_busy, on_in, "left_anti").isEmpty()
+
+
 @pytest.mark.parametrize("split_at", ["2024-01-08", "2024-01-15", "2024-01-29"])
 def test_rolling_distinct_incremental_equals_full(spark, split_at, monkeypatch):
     """Day-grain band-limited rescan ≡ full at ANY split day: anchors
@@ -209,11 +226,11 @@ def _fresh_warm(spark, tmp_path, monkeypatch):
 
 
 def test_lpa_warm_state_committed_and_read_back(spark, tmp_path, monkeypatch):
-    """The warm variant's prior state must live in the generation store
-    (commit_generation, fingerprint tag) and be REUSED on the next
-    refresh — the deployed stored-prior-state pattern (VERDICT r11 #1):
-    one committed generation after two cold-memo runs, result equal to
-    the full recompute."""
+    """The incremental LPA face's prior state must live in the
+    generation store (commit_generation, fingerprint tag) and be REUSED
+    on the next refresh — the deployed stored-prior-state pattern
+    (VERDICT r11 #1): one committed generation after two runs, result
+    equal to the full recompute."""
     from wallet_and_risky_features_data_pipeline_spark.plans.risk_features import (
         wallet_label_propagation,
     )
@@ -224,7 +241,8 @@ def test_lpa_warm_state_committed_and_read_back(spark, tmp_path, monkeypatch):
 
     inc = _fresh_warm(spark, tmp_path, monkeypatch)
     warm = {
-        tuple(r) for r in inc.wallet_label_propagation_warm(spark, SF_SMALL).collect()
+        tuple(r)
+        for r in inc.wallet_label_propagation_incremental(spark, SF_SMALL).collect()
     }
     full = {tuple(r) for r in wallet_label_propagation(spark, SF_SMALL).collect()}
     assert warm == full
@@ -242,10 +260,11 @@ def test_lpa_warm_state_committed_and_read_back(spark, tmp_path, monkeypatch):
     )
     assert inc.warm_state_meta(store)["n_old"] > 0
 
-    # second run with a cold memo: read-back only, NO second build
+    # second run: read-back only, NO second build
     reset_session_memos(spark)
     again = {
-        tuple(r) for r in inc.wallet_label_propagation_warm(spark, SF_SMALL).collect()
+        tuple(r)
+        for r in inc.wallet_label_propagation_incremental(spark, SF_SMALL).collect()
     }
     assert again == full
     assert list_generations(store) == ["gen-000001"]
@@ -262,13 +281,13 @@ def test_lpa_warm_state_fingerprint_invalidates(spark, tmp_path, monkeypatch):
         list_generations,
     )
 
-    inc.wallet_label_propagation_warm(spark, SF_SMALL).collect()
+    inc.wallet_label_propagation_incremental(spark, SF_SMALL).collect()
     store = inc._lpa_state_store(SF_SMALL)
     assert list_generations(store) == ["gen-000001"]
 
     monkeypatch.setattr(inc, "_LPA_STATE_VERSION", "v1-test-bump")
     reset_session_memos(spark)
-    inc.wallet_label_propagation_warm(spark, SF_SMALL).collect()
+    inc.wallet_label_propagation_incremental(spark, SF_SMALL).collect()
     assert list_generations(store) == ["gen-000001", "gen-000002"]
     assert inc._warm_tag_fp(generation_tag(store)).startswith(
         inc._lpa_state_fingerprint(SF_SMALL)
@@ -524,7 +543,7 @@ def test_contract_state_warm_fingerprint_invalidates(spark, tmp_path, monkeypatc
 
 
 def test_lpa_warm_dirty_branch_equals_full(spark, tmp_path, monkeypatch):
-    """Force the dirty-frontier branch of the adaptive warm switch
+    """Force the dirty-frontier branch of the adaptive refresh switch
     (threshold -> always-dirty) and hold it to the full recompute —
     the stored-prior-rounds + frontier-refresh path must be exact even
     when the heuristic would have chosen the restart branch."""
@@ -535,7 +554,8 @@ def test_lpa_warm_dirty_branch_equals_full(spark, tmp_path, monkeypatch):
     inc = _fresh_warm(spark, tmp_path, monkeypatch)
     monkeypatch.setattr(inc, "_LPA_DIRTY_MAX_FRACTION", 1.0)
     warm = {
-        tuple(r) for r in inc.wallet_label_propagation_warm(spark, SF_SMALL).collect()
+        tuple(r)
+        for r in inc.wallet_label_propagation_incremental(spark, SF_SMALL).collect()
     }
     full = {tuple(r) for r in wallet_label_propagation(spark, SF_SMALL).collect()}
     assert warm == full
@@ -552,7 +572,8 @@ def test_lpa_warm_restart_branch_equals_full(spark, tmp_path, monkeypatch):
     inc = _fresh_warm(spark, tmp_path, monkeypatch)
     monkeypatch.setattr(inc, "_LPA_DIRTY_MAX_FRACTION", 0.0)
     warm = {
-        tuple(r) for r in inc.wallet_label_propagation_warm(spark, SF_SMALL).collect()
+        tuple(r)
+        for r in inc.wallet_label_propagation_incremental(spark, SF_SMALL).collect()
     }
     full = {tuple(r) for r in wallet_label_propagation(spark, SF_SMALL).collect()}
     assert warm == full
@@ -578,28 +599,6 @@ def test_components_warm_reads_stored_assignment(spark, tmp_path, monkeypatch):
     assert list_generations(store) == ["gen-000001"]
     inc.wallet_components_warm(spark, SF_SMALL).collect()
     assert list_generations(store) == ["gen-000001"]  # read-back only
-
-
-def test_flow_motifs_warm_reads_stored_state(spark, tmp_path, monkeypatch):
-    """Motifs warm: stored pair grain + additive daily fences; the
-    refresh scans only the trailing band; result equals the full
-    recompute; read-back only on the second run."""
-    from wallet_and_risky_features_data_pipeline_spark.plans.risk_features import (
-        wallet_flow_motifs,
-    )
-    from wallet_and_risky_features_data_pipeline_spark.sources.writers import (
-        list_generations,
-    )
-
-    inc = _fresh_warm(spark, tmp_path, monkeypatch)
-    warm = {tuple(r) for r in inc.wallet_flow_motifs_warm(spark, SF_SMALL).collect()}
-    full = {tuple(r) for r in wallet_flow_motifs(spark, SF_SMALL).collect()}
-    assert warm == full
-
-    store = inc._state_store(SF_SMALL, "flow_state")
-    assert list_generations(store) == ["gen-000001"]
-    inc.wallet_flow_motifs_warm(spark, SF_SMALL).collect()
-    assert list_generations(store) == ["gen-000001"]
 
 
 def test_rolling_distinct_warm_reads_stored_anchors(spark, tmp_path, monkeypatch):
@@ -646,39 +645,3 @@ def test_minhash_warm_reads_stored_signatures(spark, tmp_path, monkeypatch):
     assert list_generations(store) == ["gen-000001"]
     dedup_minhash_warm(spark, SF_SMALL).collect()
     assert list_generations(store) == ["gen-000001"]  # read-back only
-
-
-def test_pagerank_warm_state_committed_and_read_back(spark, tmp_path, monkeypatch):
-    """Warm PageRank (VERDICT r12 #2): the stored edge set commits as
-    ONE fingerprint-tagged generation, is REUSED on the next refresh
-    (no second build), and the warm result equals the full recompute
-    row for row — including the global-n-sensitive integer base term,
-    which is why the rounds re-run over the merged edge set instead of
-    resuming stored ranks."""
-    from wallet_and_risky_features_data_pipeline_spark.plans.risk_features import (
-        wallet_pagerank,
-    )
-    from wallet_and_risky_features_data_pipeline_spark.sources.writers import (
-        generation_tag,
-        list_generations,
-    )
-
-    inc = _fresh_warm(spark, tmp_path, monkeypatch)
-    warm = {
-        tuple(r) for r in inc.wallet_pagerank_warm(spark, SF_SMALL).collect()
-    }
-    full = {tuple(r) for r in wallet_pagerank(spark, SF_SMALL).collect()}
-    assert warm == full
-
-    store = inc._state_store(SF_SMALL, "pagerank_graph")
-    assert list_generations(store) == ["gen-000001"]
-    assert inc._warm_tag_fp(generation_tag(store)).startswith(
-        inc._state_fingerprint(SF_SMALL, inc._PR_STATE_VERSION, inc.LPA_SPLIT_AT)
-    )
-
-    # second run: read-back only, NO second build
-    again = {
-        tuple(r) for r in inc.wallet_pagerank_warm(spark, SF_SMALL).collect()
-    }
-    assert again == full
-    assert list_generations(store) == ["gen-000001"]

@@ -171,11 +171,14 @@ def test_flat_merge_over_partitioned_generation(spark, tmp_path):
     """A MERGE onto a hive-partitioned generation commits it whole and
     flat: no partition dir survives into the new generation (that would
     duplicate rows), and the former partition column keeps its string
-    values even where every dir name reads as a number."""
+    values even where every dir name reads as a number. An erase on
+    such a generation keeps the string type too, so the next MERGE can
+    read what the erase committed."""
     import os
 
     from wallet_and_risky_features_data_pipeline_spark.sources.writers import (
         commit_generation,
+        erase_from_store,
         resolve_store,
     )
 
@@ -192,6 +195,22 @@ def test_flat_merge_over_partitioned_generation(spark, tmp_path):
     back = read_store(spark, path)
     assert dict(back.dtypes)["part"] == "string"
     assert sorted(tuple(r) for r in back.select("id", "name", "part").collect()) == [
+        (1, "a", "07"), (2, "b2", "12"), (3, "c", "30")
+    ]
+
+    erased = str(tmp_path / "e")
+    commit_generation(base, erased, partition_by=["part"])
+    assert dict(read_store(spark, erased).dtypes)["part"] == "string"
+    gone = spark.createDataFrame([(2,)], "id long")
+    assert erase_from_store(spark, gone, erased, "id") == 1
+    back = read_store(spark, erased)
+    assert dict(back.dtypes)["part"] == "string"
+    assert [tuple(r) for r in back.select("id", "name", "part").collect()] == [
+        (1, "a", "07")
+    ]
+    assert merge_upsert(spark, updates, erased, key=["id"]) == 3
+    back = read_store(spark, erased).select("id", "name", "part")
+    assert sorted(tuple(r) for r in back.collect()) == [
         (1, "a", "07"), (2, "b2", "12"), (3, "c", "30")
     ]
 

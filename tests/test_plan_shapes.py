@@ -471,8 +471,6 @@ def test_no_batch_query_plans_a_cartesian_product(spark):
         "session_association_rules",   # one-row n_sessions scalar (r9)
         "corpus_source_psi",           # one-row corpus-total ng scalar (r10)
         "wallet_community_modularity_incremental",  # one-row m scalar (r12, as full)
-        "wallet_pagerank_warm",        # one-row node-count scalar (r13, as full)
-        "wallet_pagerank_warm_scaled", # one-row node-count scalar (r15, as full)
     }
     offenders = {}
     for name, fn in QUERIES.items():
@@ -543,11 +541,8 @@ def test_warm_tier_delta_scans_push_ts_predicate(spark, tmp_path, monkeypatch):
             inc.wallet_coin_balances_warm,
             inc.wallet_auc_warm,
             inc.wallet_components_warm,
-            inc.wallet_flow_motifs_warm,
             inc.wallet_rolling_distinct_warm,
-            inc.wallet_label_propagation_warm,
-            inc.wallet_pagerank_warm,
-            inc.wallet_pagerank_warm_scaled,
+            inc.wallet_label_propagation_incremental,
             inc.wallet_auc_warm_scaled,
         ):
             plan = _physical(fn(spark, SF_MEDIUM))

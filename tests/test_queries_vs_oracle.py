@@ -160,7 +160,21 @@ def test_bench_paired_warm_pairs_are_registered():
     )
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
-    for full, warm in bench.PAIRED_WARM.items():
-        assert full in QUERIES, f"paired tier names unregistered full query {full}"
-        assert warm in QUERIES, f"paired tier names unregistered warm query {warm}"
-    assert len(bench.PAIRED_WARM) >= 8
+    # exactly the warm families with a recorded win over full recompute,
+    # in the paired or the scaled tier
+    assert bench.PAIRED_WARM == {
+        "wallet_components": "wallet_components_warm",
+        "wallet_coin_balances": "wallet_coin_balances_warm",
+        "wallet_auc_rollup": "wallet_auc_warm",
+        "wallet_rolling_distinct_7d": "wallet_rolling_distinct_warm",
+        "dedup_minhash_lsh": "dedup_minhash_warm",
+    }
+    assert bench.PAIRED_WARM_SCALED == {
+        "wallet_coin_balances": "wallet_coin_balances_warm_scaled",
+        "dedup_minhash_lsh": "dedup_minhash_warm_scaled",
+        "wallet_auc_rollup": "wallet_auc_warm_scaled",
+    }
+    for pairs in (bench.PAIRED_WARM, bench.PAIRED_WARM_SCALED):
+        for full, warm in pairs.items():
+            assert full in QUERIES, f"paired tier names unregistered full query {full}"
+            assert warm in QUERIES, f"paired tier names unregistered warm query {warm}"

@@ -325,14 +325,16 @@ def local_delta_probe(spark) -> None:
     cannot give: at COPIES× graph scale with a copy-0-confined delta,
     time (a) the full LPA recompute, (b) the warm state BUILD
     (amortized once per prior snapshot in deployment), and (c) the
-    warm dirty-frontier refresh — and hold warm ≡ full at the scaled
-    data. The deployed claim is (c) ≪ (a) under local deltas."""
+    warm dirty-frontier refresh of
+    ``wallet_label_propagation_incremental`` — and hold warm ≡ full at
+    the scaled data. The deployed claim is (c) ≪ (a) under local
+    deltas."""
     import wallet_and_risky_features_data_pipeline_spark.plans.incremental_plans as inc
     from wallet_and_risky_features_data_pipeline_spark.plans.risk_features import (
         wallet_label_propagation,
     )
 
-    warm_lpa = inc.wallet_label_propagation_warm
+    warm_lpa = inc.wallet_label_propagation_incremental
     for label, d in (("sf0.1", SRC), (f"{COPIES}x", DST)):
         t_full = timed_isolated(spark, wallet_label_propagation, d)
         # state build: force a rebuild by clearing this input's store
@@ -380,10 +382,7 @@ def local_delta_probe(spark) -> None:
         if COPIES <= 10:
             reset_session_memos(spark)
             with cache_scope():
-                warm = {
-                    tuple(r)
-                    for r in inc.wallet_label_propagation_warm(spark, d).collect()
-                }
+                warm = {tuple(r) for r in warm_lpa(spark, d).collect()}
                 full = {
                     tuple(r) for r in wallet_label_propagation(spark, d).collect()
                 }

@@ -23,17 +23,17 @@ Usage (the bench wraps every query run):
     # all persists taken during the run are released here
 
 Session memos (``session_memo``) are the other lifetime: a frame that
-several queries of one session share (the wallet leg table, the
-n-gram capped stream, the near-dup cluster assignment, the warm LPA
-refresh) is built once per (session, key) and outlives every
-``cache_scope``. The builder chooses its own persistence (``persist``
-or ``localCheckpoint``) so the memo adds nothing to the plan. Memo
-contract: the source at ``sf_dir`` is IMMUTABLE for the session's
-lifetime (the benchmark corpus is; lakehouse stores are read through
-generation pointers, never through a memo). A caller that rewrites a
-source in-session must call ``reset_session_memos`` first, or it reads
-stale frames; a caller that MEASURES a pipeline resets before each run
-so memoized queries time their real computation (``timed_isolated``).
+several queries of one session share (the wallet leg table, the n-gram
+capped stream, the near-dup cluster assignment) is built once per
+(session, key) and outlives every ``cache_scope``. The builder chooses
+its own persistence (``persist`` or ``localCheckpoint``) so the memo
+adds nothing to the plan. Memo contract: the source at ``sf_dir`` is
+IMMUTABLE for the session's lifetime (the benchmark corpus is;
+lakehouse stores are read through generation pointers, never through a
+memo). A caller that rewrites a source in-session must call
+``reset_session_memos`` first, or it reads stale frames; a caller that
+MEASURES a pipeline resets before each run so memoized queries time
+their real computation (``timed_isolated``).
 """
 
 from __future__ import annotations
@@ -85,8 +85,8 @@ def cache_scope() -> Iterator[None]:
 
 # Weak session keys so a stopped session's entries are collectable.
 # _REGISTRY_LOCK guards both maps and is never held across a build;
-# each (session, key) has its own build lock, because builds nest (the
-# warm LPA refresh peeks the wallet leg memo while it builds).
+# each (session, key) has its own build lock, so a build may peek or
+# build another key's memo without deadlocking.
 _REGISTRY_LOCK = threading.Lock()
 _MEMOS: "weakref.WeakKeyDictionary[SparkSession, dict[Hashable, Any]]" = (
     weakref.WeakKeyDictionary()

@@ -17,7 +17,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import session_memo
 from ..operators.joins import upsert_rows
 from ..streaming.incremental import (
     incremental_auc_rollup,
@@ -303,7 +302,7 @@ def _lpa_legs(wt: DataFrame) -> DataFrame:
 
 
 def _lpa_edge_tables(spark: SparkSession, sf_dir: str):
-    """Shared edge machinery for the incremental/warm LPA family:
+    """Edge machinery of the LPA state build (``_ensure_lpa_state``):
     returns ``(pairs, sym_all)`` — the per-(a,b) MIN(ts) undirected
     edge table (its first_seen classifies an edge as old/new against
     ``LPA_SPLIT_AT``; a re-observed old edge never dirties the
@@ -334,9 +333,8 @@ def _lpa_dirty_refresh(
     prior: list[DataFrame],
     rounds: int,
 ) -> DataFrame:
-    """The dirty-frontier LPA refresh shared by the in-query
-    incremental variant and the stored-state warm variant: recompute
-    round r only for the dirty set (new-edge endpoints grown one
+    """The dirty-frontier branch of ``_lpa_refresh_from_store``:
+    recompute round r only for the dirty set (new-edge endpoints grown one
     edge-hop per round), resolving neighbor labels through
     recomputed ∪ still-valid ``prior`` rounds, and stitch the final
     round against the prior partition. ``prior[r-1]`` is the OLD
@@ -462,16 +460,12 @@ def wallet_label_propagation_incremental(spark: SparkSession, sf_dir: str) -> Da
     graph (``_lpa_rounds(sym_old)``), so a fresh environment — the
     driver's gate, a new box — proves incremental ≡ full end-to-end
     through this one entry point; a warm store makes the timed face
-    the refresh, the deployed nightly cost. What stays in-query here
-    (and distinguishes this variant from ``_warm``): edge
-    classification by per-(a,b) MIN(ts) over the FULL history — an
-    edge is old iff first seen before the split, so a re-observed old
-    edge never dirties the frontier — where the warm variant instead
-    classifies a delta-only scan against the stored edge set. The
-    split is the LATE one (``LPA_SPLIT_AT``, the last ~10% of the
-    stream): the nightly-refresh shape this variant exists for, unlike
-    the mid-stream ``SPLIT_AT`` the state-merge members use to stress
-    their stitch arithmetic.
+    the refresh, the deployed nightly cost. An edge is old iff first
+    seen before the split, so a re-observed old edge never dirties
+    the frontier. The split is the LATE one (``LPA_SPLIT_AT``, the
+    last ~10% of the stream): the nightly-refresh shape this variant
+    exists for, unlike the mid-stream ``SPLIT_AT`` the state-merge
+    members use to stress their stitch arithmetic.
 
     r15 band-limit (VERDICT r14 #4): edge classification and the full
     symmetric closure no longer scan pre-split history in-query — the
@@ -482,17 +476,16 @@ def wallet_label_propagation_incremental(spark: SparkSession, sf_dir: str) -> Da
     predicate as the previous per-(a,b) MIN(first_seen), computed
     against stored membership instead of a full-history groupBy), and
     ``sym_full`` is the stored closure plus the new edges' legs. The
-    refresh itself is ``_lpa_refresh_from_store`` — the SAME code the
-    warm face memoizes, adaptive frontier-vs-restart switch included
-    (always-frontier on sf0.1's ~10% delta measured 9.9 s vs the
-    switch's 3.3) — called UN-memoized here so the isolated bench
-    times the real per-call refresh. The full-history derivation
-    still lives in the state BUILD closure, which a cold store runs
-    inside this query — the driver's gate on a fresh box therefore
-    still proves incremental ≡ full end-to-end through one entry
-    point, while a warm store's refresh does delta-proportional work
-    (the honest 100× probe previously read parity-with-full because
-    of the in-query classification scan)."""
+    refresh itself is ``_lpa_refresh_from_store``, adaptive
+    frontier-vs-restart switch included (always-frontier on sf0.1's
+    ~10% delta measured 9.9 s vs the switch's 3.3), called once per
+    query, so the isolated bench times the real per-call refresh. The
+    full-history derivation still lives in the state BUILD closure,
+    which a cold store runs inside this query — the driver's gate on
+    a fresh box therefore still proves incremental ≡ full end-to-end
+    through one entry point, while a warm store's refresh does
+    delta-proportional work (the honest 100× probe previously read
+    parity-with-full because of the in-query classification scan)."""
     _, _, final = _lpa_refresh_from_store(spark, sf_dir)
     return _lpa_sized_partition(final)
 
@@ -511,10 +504,10 @@ from .risk_features import (  # noqa: E402
 # exercises the read-back path the reference actually runs
 # (features_pipeline.py:108-126 reads prior Iceberg state;
 # ethereum_wallet_features.sql:481-541 seeds running sums from it).
-# The warm variants persist the prior run's per-round LPA label
-# tables into the generation store (commit_generation, tagged with an
-# input fingerprint so stale state can never be read) and run ONLY
-# the dirty-frontier refresh against the stored generation.
+# The warm tier persists each family's prior state into the
+# generation store (commit_generation, tagged with an input
+# fingerprint so stale state can never be read) and runs ONLY the
+# delta refresh against the stored generation.
 
 # v2: the state generation carries the old edge set (round 0) beside
 # the label rounds — fingerprint-fenced, so v1 states rebuild
@@ -522,8 +515,8 @@ from .risk_features import (  # noqa: E402
 # refresh's adaptive switch never scans the store just to count it)
 _LPA_STATE_VERSION = "v6"
 # Dirty-frontier refresh only below this |new|/|old| edge ratio; above
-# it the warm path restarts the rounds from the stored closure (see
-# the adaptive switch in _lpa_warm_final). 5% ≈ where a 3-hop grown
+# it the refresh restarts the rounds from the stored closure (see
+# the adaptive switch in _lpa_refresh_from_store). 5% ≈ where a 3-hop grown
 # frontier on a well-mixed graph stops being a strict subset of it.
 _LPA_DIRTY_MAX_FRACTION = 0.05
 
@@ -623,9 +616,10 @@ def _ensure_warm_state(
     generation with that exact fingerprint is already live. ``build``
     may return either a DataFrame or ``(DataFrame, meta_dict)`` — the
     metadata rides as the tag's second line (see ``warm_state_meta``).
-    ``partition_by`` hive-partitions the snapshot (e.g. by ``part`` /
-    ``round``) so every part-filtered read of the state prunes FILES
-    instead of re-scanning the whole generation per logical part.
+    ``partition_by`` hive-partitions the snapshot (only the LPA state
+    uses it, by ``round``) so every round-filtered read of the state
+    prunes FILES instead of re-scanning the whole generation per
+    round.
     A racing builder losing the commit CAS is fine — the winner
     committed the same fingerprint, so the loser just reads. Returns
     the store path.
@@ -759,41 +753,20 @@ def _ensure_lpa_state(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-def _lpa_warm_final(spark: SparkSession, sf_dir: str):
-    """(und, sym_full, final-labels) with the prior state READ BACK
-    from the generation store — the warm-start read path, end to end:
-    the refresh never scans pre-split history. Its inputs are the
-    STORED old edge set + symmetric closure + label rounds and a
-    ts ≥ split scan of the events source (the predicate reaches the
-    parquet scan, so on a date-partitioned 100 TB events table only
-    the delta's files are read). Genuinely new edges = delta pairs
-    classified against the stored edge set via a broadcast semi → anti
-    pair (the |E_old| side only streams) — a re-observed old edge
-    never dirties the frontier, same classification as the in-query
-    variant's MIN(first_seen), without the full-history groupBy.
-    PLANS.md "Warm tier extended" records the four measured
-    iterations this path took to beat the full recompute (memo/
-    CacheManager pushdown trap, state-file parallelism, exponential
-    frontier lineage, the adaptive restart-vs-frontier switch) and
-    the final local-delta probe table: warm/full 0.30 at sf0.1,
-    0.44 at 100× local delta. Memoized per (session, sf_dir) like
-    ``wallet_transactions``: the warm LPA partition and the
-    incremental modularity evaluation share one refresh, exactly as
-    a deployed nightly would."""
-    return session_memo(
-        spark, ("lpa_warm", sf_dir), lambda: _lpa_refresh_from_store(spark, sf_dir)
-    )
-
-
 def _lpa_refresh_from_store(spark: SparkSession, sf_dir: str):
-    """The un-memoized stored-state LPA refresh — shared by the warm
-    face (which memoizes it per session, above) and the incremental
-    face (which rebuilds it per call, so the bench's isolated tier
-    times the real refresh). Both take the adaptive
-    frontier-vs-restart switch: a delta that dirties most of the
-    graph restarts the rounds from the stored closure instead of
-    paying the frontier machinery's per-round semi/anti tax
-    (measured 5× at sf0.1's ~10% delta)."""
+    """The stored-state LPA refresh: (und, sym_full, final-labels)
+    with the prior state READ BACK from the generation store, never
+    memoized, so the bench's isolated tier times the real refresh.
+    Its inputs are the STORED old edge set + symmetric closure +
+    label rounds and a ts ≥ split scan of the events source (the
+    predicate reaches the parquet scan). Genuinely new edges = delta
+    pairs classified against the stored edge set via a broadcast
+    semi → anti pair (the |E_old| side only streams). PLANS.md "Warm
+    tier extended" records the measured iterations of this path. It
+    takes the adaptive frontier-vs-restart switch: a delta that
+    dirties most of the graph restarts the rounds from the stored
+    closure instead of paying the frontier machinery's per-round
+    semi/anti tax (measured 5× at sf0.1's ~10% delta)."""
     from ..caching import persist_tracked
     from ..sources.writers import read_store
     from .risk_features import LPA_ROUNDS
@@ -889,40 +862,21 @@ def _lpa_refresh_from_store(spark: SparkSession, sf_dir: str):
     return (und, sym_full, final)
 
 
-def wallet_label_propagation_warm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Warm-start LPA — ``wallet_label_propagation_incremental`` with
-    the prior state READ BACK from the generation store instead of
-    rebuilt in the query's own lineage: the reference's deployed
-    stored-prior-state pattern (features_pipeline.py:108-126,
-    ethereum_wallet_features.sql:481-541) demonstrated end-to-end.
-    The state build (``_ensure_lpa_state``) is idempotent and
-    fingerprint-fenced: it runs once per input snapshot and is a plain
-    ``commit_generation`` — time travel, vacuum, and the CAS commit
-    protocol all apply to the state table for free. The query's own
-    cost is the dirty-frontier refresh ONLY: per-round |edges incident
-    to the dirty set| instead of the in-query variant's full prior
-    rebuild. Held to the same FULL-recompute oracle."""
-    _, _, final = _lpa_warm_final(spark, sf_dir)
-    return _lpa_sized_partition(final)
-
-
-WALLET_LPA_WARM_ORACLE = WALLET_LPA_INCR_ORACLE
-
-
 def wallet_community_modularity_incremental(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Incremental modularity (VERDICT r11 #2): Newman's per-community
     Q over the WARM incremental LPA partition — only the two
     |E|-linear evaluation joins (intra-community edge counts, degree
-    sums) recompute from scratch; the labels come from the shared
-    warm refresh (stored prior rounds + dirty-frontier rounds). Same
+    sums) recompute from scratch; the labels come from
+    ``_lpa_refresh_from_store`` (stored prior rounds + dirty-frontier
+    rounds), run once per query. Same
     exact-integer numerics as ``wallet_community_modularity`` (e_c,
     d_c, m exact BIGINTs; two correctly-rounded double divisions in
     identical order in both engines; no global float SUM emitted) and
     the same oracle — incremental labels are provably equal to the
     full recompute, so the evaluation must be too."""
-    und, sym_full, labels = _lpa_warm_final(spark, sf_dir)
+    und, sym_full, labels = _lpa_refresh_from_store(spark, sf_dir)
     m = und.agg(F.count(F.lit(1)).cast("bigint").alias("m"))
     la = labels.select(F.col("node").alias("a"), F.col("lbl").alias("ca"))
     lb = labels.select(F.col("node").alias("b"), F.col("lbl").alias("cb"))
@@ -1219,206 +1173,8 @@ from .risk_features import (  # noqa: E402
 )
 
 
-_FLOW_STATE_VERSION = "v3"
 _ROLL7_STATE_VERSION = "v1"
 _ROLL7_WINDOW_DAYS = 7
-
-
-def _ensure_flow_state(spark: SparkSession, sf_dir: str) -> str:
-    """Persist the flow-motif prior state as ONE generation holding
-    three logical parts (a ``part`` column keeps them atomically
-    consistent, like the LPA rounds): the (mid, a, c) PAIR GRAIN of all
-    pre-split paths (n/n_fast are additive across disjoint path sets),
-    and the per-(wallet, day) IN/OUT occupancy counts — the additive
-    daily metadata a deployment maintains with the table, so the warm
-    refresh reads the same fences the full recompute computes.
-
-    Day-boundary assumption (ADVICE r12): the stored PAIR grain is
-    built with OLD-ONLY occupancy fences, which equals the full
-    recompute's fences only because ``SPLIT_AT`` is a pure date — no
-    (wallet, day) fence count straddles the split, so a stored pair's
-    fence verdict can never change when delta legs arrive. A mid-day
-    split would poison stored pairs via partial fence counts; assert
-    the invariant here so a future split change fails loudly instead
-    of silently breaking exactness (the fuse never binds at test
-    scale, so the oracle would not catch it)."""
-    import datetime as _dt
-
-    from .risk_features import (
-        _flow_fences_broadcastable,
-        _flow_legs_and_fences,
-        _flow_pair_grain,
-        _flow_paths,
-    )
-
-    # raises ValueError on any non-midnight split (e.g. "...T12:00")
-    _dt.date.fromisoformat(SPLIT_AT)
-
-    def build():
-        legs, in_busy, out_busy = _flow_legs_and_fences(spark, sf_dir)
-        split_us = F.unix_micros(F.lit(SPLIT_AT).cast("timestamp"))
-        old = legs.filter(F.col("us") < split_us)
-        old_in = old.groupBy(F.col("dst").alias("ib_b"), F.col("day").alias("ib_day")).agg(
-            F.count(F.lit(1)).alias("n_in")
-        )
-        old_out = old.groupBy(F.col("src").alias("ob_b"), F.col("day").alias("ob_day")).agg(
-            F.count(F.lit(1)).alias("n_out")
-        )
-        pair = _flow_pair_grain(
-            _flow_paths(
-                old, old, old_in, old_out, _flow_fences_broadcastable(sf_dir)
-            )
-        )
-        return (
-            pair.select(
-                F.lit("pair").alias("part"),
-                F.col("mid").alias("k1"),
-                F.col("a").alias("k2"),
-                F.col("c").alias("k3"),
-                F.col("n").cast("bigint").alias("n"),
-                F.col("n_fast").cast("bigint").alias("n_fast"),
-            )
-            .unionByName(
-                old_in.select(
-                    F.lit("in").alias("part"),
-                    F.col("ib_b").alias("k1"),
-                    F.date_format("ib_day", "yyyy-MM-dd").alias("k2"),
-                    F.lit(None).cast("string").alias("k3"),
-                    F.col("n_in").cast("bigint").alias("n"),
-                    F.lit(0).cast("bigint").alias("n_fast"),
-                )
-            )
-            .unionByName(
-                old_out.select(
-                    F.lit("out").alias("part"),
-                    F.col("ob_b").alias("k1"),
-                    F.date_format("ob_day", "yyyy-MM-dd").alias("k2"),
-                    F.lit(None).cast("string").alias("k3"),
-                    F.col("n_out").cast("bigint").alias("n"),
-                    F.lit(0).cast("bigint").alias("n_fast"),
-                )
-            )
-        )
-
-    from .risk_features import FLOW_MAX_DAILY_LEGS, FLOW_WINDOW_US
-
-    # recipe params in the fence (ADVICE r12): the stored pair grain
-    # depends on the pairing window and the occupancy fuse — changing
-    # either constant must invalidate stored state automatically, not
-    # wait for someone to remember a version bump
-    return _ensure_warm_state(
-        spark,
-        sf_dir,
-        "flow_state",
-        _state_fingerprint(
-            sf_dir, _FLOW_STATE_VERSION, SPLIT_AT, FLOW_WINDOW_US, FLOW_MAX_DAILY_LEGS
-        ),
-        build,
-        partition_by=["part"],
-    )
-
-
-def wallet_flow_motifs_warm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flow motifs with the prior pair grain AND the occupancy fences
-    READ BACK from the generation store: the refresh scans only the
-    trailing 24 h + delta legs (``ts >= SPLIT_AT − window`` pushes to
-    the events scan), pairs (tail ∪ new) in-hops against NEW out-hops,
-    merges the additive pair grain with the stored one, and evaluates
-    fences as stored-daily ∪ delta-daily summed per (wallet, day) —
-    additivity makes the merged fence EQUAL the full recompute's (days
-    are disjoint across the split here, and the groupBy-sum handles a
-    straddling day in general). Held to the FULL-recompute oracle."""
-    import datetime as _dt
-
-    from ..sources.writers import read_store
-    from .risk_features import (
-        FLOW_WINDOW_US,
-        _flow_fences_broadcastable,
-        _flow_pair_grain,
-        _flow_paths,
-        _flow_rollup,
-    )
-
-    # bounded-tail delta scan: window before the split, pushed down
-    tail_days = int(FLOW_WINDOW_US // 86_400_000_000) + 1
-    since = (
-        _dt.date.fromisoformat(SPLIT_AT) - _dt.timedelta(days=tail_days)
-    ).isoformat()
-
-    stored = read_store(spark, _ensure_flow_state(spark, sf_dir))
-    prior_pair = stored.filter(F.col("part") == "pair").select(
-        F.col("k1").alias("mid"), F.col("k2").alias("a"), F.col("k3").alias("c"),
-        "n", "n_fast",
-    )
-    # Band-limited fence reads: the refresh pairs only legs with
-    # day ≥ since (tail in-hops, new out-hops), so fence rows for any
-    # earlier day can never be joined — the ≥ since predicate pushes
-    # into the state scan and the merge groupBy shrinks from all of
-    # history to the trailing band. Counts for the kept days are
-    # unchanged (the stored part is already per-day), so the merged
-    # fence still EQUALS the full recompute's on every joined day.
-    stored_in = stored.filter(
-        (F.col("part") == "in") & (F.col("k2") >= F.lit(since))
-    ).select(
-        F.col("k1").alias("ib_b"), F.col("k2").cast("date").alias("ib_day"),
-        F.col("n").alias("n_in"),
-    )
-    stored_out = stored.filter(
-        (F.col("part") == "out") & (F.col("k2") >= F.lit(since))
-    ).select(
-        F.col("k1").alias("ob_b"), F.col("k2").cast("date").alias("ob_day"),
-        F.col("n").alias("n_out"),
-    )
-    wt = wallet_transactions_delta(spark, sf_dir, since)
-    legs = wt.filter(
-        (F.col("address_role") == "sender")
-        & F.col("interacted_with").isNotNull()
-        & (F.col("current_value") > 0)
-    ).select(
-        "event_id",
-        F.col("wallet_address").alias("src"),
-        F.col("interacted_with").alias("dst"),
-        F.unix_micros("ts").alias("us"),
-        F.to_date("ts").alias("day"),
-    )
-    split_us = F.unix_micros(F.lit(SPLIT_AT).cast("timestamp"))
-    new = legs.filter(F.col("us") >= split_us)
-    tail = legs.filter(F.col("us") >= split_us - F.lit(FLOW_WINDOW_US))
-
-    delta_in = new.groupBy(F.col("dst").alias("ib_b"), F.col("day").alias("ib_day")).agg(
-        F.count(F.lit(1)).alias("n_in")
-    )
-    delta_out = new.groupBy(F.col("src").alias("ob_b"), F.col("day").alias("ob_day")).agg(
-        F.count(F.lit(1)).alias("n_out")
-    )
-    in_busy = (
-        stored_in.unionByName(delta_in)
-        .groupBy("ib_b", "ib_day")
-        .agg(F.sum("n_in").alias("n_in"))
-    )
-    out_busy = (
-        stored_out.unionByName(delta_out)
-        .groupBy("ob_b", "ob_day")
-        .agg(F.sum("n_out").alias("n_out"))
-    )
-    delta = _flow_pair_grain(
-        _flow_paths(
-            tail, new, in_busy, out_busy, _flow_fences_broadcastable(sf_dir)
-        )
-    )
-    # No intermediate (mid, a, c) re-merge: the rollup is algebraic
-    # over the pair grain — SUM(n)/SUM(n_fast) add across the stored
-    # and delta grains directly, and COUNT(DISTINCT a/c) is identical
-    # on the union and on the merged grain — so feeding the UNION
-    # straight to the shared rollup skips a full-|pairs| shuffle. (A
-    # deployment folding the delta back INTO the stored grain would
-    # run the groupBy-sum merge at write time, off the query path.)
-    return _flow_rollup(prior_pair.unionByName(delta))
-
-
-from .risk_features import (  # noqa: E402
-    WALLET_FLOW_MOTIFS_ORACLE as WALLET_FLOW_MOTIFS_WARM_ORACLE,
-)
 
 
 def _ensure_roll7_state(spark: SparkSession, sf_dir: str) -> str:
@@ -1543,131 +1299,4 @@ def wallet_rolling_distinct_warm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from .risk_features import (  # noqa: E402
     WALLET_ROLLING_DISTINCT_ORACLE as WALLET_ROLLING_DISTINCT_WARM_ORACLE,
-)
-
-
-# --------------------------------------------------------------------------
-# Warm-start PageRank (VERDICT r12 #2) — the costliest graph query gets
-# its stored-state sibling
-# --------------------------------------------------------------------------
-
-_PR_STATE_VERSION = "v4"
-
-
-def _ensure_pagerank_state(
-    spark: SparkSession, sf_dir: str, split_at: str = LPA_SPLIT_AT
-) -> str:
-    """Persist the pre-``split_at`` DIRECTED distinct edge set of
-    the value-flow graph as one fingerprint-tagged generation — the
-    product of PageRank's expensive phase (the full event scan, role
-    explosion, and the |legs| → |E| distinct), which a nightly refresh
-    must never re-run over history. Nothing else is stored: nodes,
-    degrees, and the global count derive from the (cached) edge set in
-    one pass each, and recomputing them from |E| rows costs less than
-    reading extra state parts would (measured — the v2/v3 designs that
-    stored degrees-on-edges / degree and node parts lost their savings
-    to the extra scans, merges, and broadcast jobs of the read path)."""
-    from .risk_features import wallet_pagerank  # noqa: F401 — recipe source
-
-    def build():
-        wt = wallet_transactions(spark, sf_dir)
-        split = F.lit(split_at).cast("timestamp")
-        legs = wt.filter(
-            (F.col("address_role") == "sender")
-            & F.col("interacted_with").isNotNull()
-        ).select(
-            F.col("wallet_address").alias("src"),
-            F.col("interacted_with").alias("dst"),
-            "ts",
-        )
-        # first_seen classifies an edge as old; a re-observed old edge
-        # in the delta must not re-enter (same rule as the LPA state)
-        return (
-            legs.groupBy("src", "dst")
-            .agg(F.min("ts").alias("first_seen"))
-            .filter(F.col("first_seen") < split)
-            .select("src", "dst")
-        )
-
-    name = "pagerank_graph" if split_at == LPA_SPLIT_AT else "pagerank_graph_scaled"
-    return _ensure_warm_state(
-        spark,
-        sf_dir,
-        name,
-        _state_fingerprint(sf_dir, _PR_STATE_VERSION, split_at),
-        build,
-    )
-
-
-def wallet_pagerank_warm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Warm-start PageRank — ``wallet_pagerank`` with the edge set READ
-    BACK from the generation store instead of rebuilt from the event
-    log: the reference's stored-prior-state pattern
-    (features_pipeline.py:108-126, ethereum_wallet_features.sql:481-541)
-    applied to the centrality feature.
-
-    What CAN be warm here and what cannot: the fixed-round integer
-    recurrence depends on the GLOBAL node count (the base term
-    ``SCALE DIV n``), so any delta that adds a node changes every
-    node's round-0 rank — there is no exact dirty-frontier for the
-    fixed-round formulation, and truncating integer division breaks
-    the linearity an exact residual-push would need. What dominates at
-    scale is the graph BUILD: the full event-log scan, role explosion,
-    and the |legs| → |E| distinct. The warm variant stores that edge
-    set once per snapshot; the refresh pays a ts ≥ split delta scan
-    (pushed to the events scan — file-pruned on a date-partitioned
-    store), broadcast semi → anti classification against the stored
-    edges (the |E_old| side only streams — the LPA warm rule), and
-    then runs the IDENTICAL pipeline as the full query
-    (``_pagerank_from_edges``: nodes, degrees, fixed integer rounds)
-    over the cached union. Output is bit-identical to the full
-    recompute — same edge set, same all-integer arithmetic — so it is
-    held to the SAME value oracle."""
-    return _pagerank_warm(spark, sf_dir, LPA_SPLIT_AT)
-
-
-def wallet_pagerank_warm_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``wallet_pagerank_warm`` at the REALISTIC delta
-    (``SCALED_SPLIT_AT``, the stream's last ~1%): the r15 lazy-leg
-    rewrite made the FULL graph build fast enough that at the
-    harness's mid-stream split the stored-graph read no longer wins at
-    sf0.1 — this face pairs the refresh against the full recompute at
-    a deployed nightly's delta size in bench.py's paired_warm_scaled
-    tier. Same value oracle — the union reproduces the identical edge
-    set at any split."""
-    return _pagerank_warm(spark, sf_dir, SCALED_SPLIT_AT)
-
-
-def _pagerank_warm(spark: SparkSession, sf_dir: str, split_at: str) -> DataFrame:
-    from ..caching import persist_tracked
-    from ..sources.writers import read_store
-    from .risk_features import _pagerank_from_edges
-
-    old_edges = read_store(
-        spark, _ensure_pagerank_state(spark, sf_dir, split_at=split_at)
-    )
-
-    delta_edges = persist_tracked(
-        wallet_transactions_delta(spark, sf_dir, split_at)
-        .filter(
-            (F.col("address_role") == "sender")
-            & F.col("interacted_with").isNotNull()
-        )
-        .select(
-            F.col("wallet_address").alias("src"),
-            F.col("interacted_with").alias("dst"),
-        )
-        .distinct()
-    )
-    seen_old = old_edges.join(delta_edges, ["src", "dst"], "left_semi")
-    new_edges = delta_edges.join(seen_old, ["src", "dst"], "left_anti")
-    edges = persist_tracked(old_edges.unionByName(new_edges))
-    return _pagerank_from_edges(edges)
-
-
-from .risk_features import (  # noqa: E402
-    WALLET_PAGERANK_ORACLE as WALLET_PAGERANK_WARM_ORACLE,
-)
-from .risk_features import (  # noqa: E402
-    WALLET_PAGERANK_ORACLE as WALLET_PAGERANK_WARM_SCALED_ORACLE,
 )

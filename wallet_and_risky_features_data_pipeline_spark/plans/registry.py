@@ -771,16 +771,9 @@ register(
 # value list — same oracles as the DataFrame plans
 register("rollup_multi_grain_sql", sqls.rollup_multi_grain_sql, rel.ROLLUP_MULTI_GRAIN_ORACLE)
 register("pivot_event_matrix_sql", sqls.pivot_event_matrix_sql, rel.PIVOT_EVENT_MATRIX_ORACLE)
-# stored-state warm tier (VERDICT r11 #1/#2): prior per-round LPA
-# labels persisted via commit_generation (fingerprint-tagged) and READ
-# BACK from the generation store — the reference's deployed
-# prior-state pattern; only the dirty-frontier refresh runs in-query.
-# Both held to the FULL-recompute oracles.
-register(
-    "wallet_label_propagation_warm",
-    inc.wallet_label_propagation_warm,
-    inc.WALLET_LPA_WARM_ORACLE,
-)
+# modularity over the incremental LPA partition: prior per-round LPA
+# labels READ BACK from the fingerprint-tagged state generation, only
+# the refresh runs in-query; held to the FULL-recompute oracle
 register(
     "wallet_community_modularity_incremental",
     inc.wallet_community_modularity_incremental,
@@ -802,14 +795,9 @@ register(
     inc.wallet_components_warm,
     inc.WALLET_COMPONENTS_WARM_ORACLE,
 )
-# band-limited-rescan members of the warm tier: stored pair grain +
-# additive daily fences (motifs), stored final pre-split anchors
-# (rolling distinct) — the refresh scans only the trailing band
-register(
-    "wallet_flow_motifs_warm",
-    inc.wallet_flow_motifs_warm,
-    inc.WALLET_FLOW_MOTIFS_WARM_ORACLE,
-)
+# band-limited-rescan member of the warm tier: stored final
+# pre-split anchors (rolling distinct) — the refresh scans only the
+# trailing 7-day band
 register(
     "wallet_rolling_distinct_warm",
     inc.wallet_rolling_distinct_warm,
@@ -832,17 +820,6 @@ register(
     "wallet_coin_balances_incremental_sql",
     sqls.wallet_coin_balances_incremental_sql,
     sqls.WALLET_COIN_BALANCES_INCR_SQL_ORACLE,
-)
-# warm-start PageRank (VERDICT r12 #2): the graph-build phase (event
-# scan + explosion + |legs|->|E| distinct + degrees) reads back from a
-# stored generation; only the ts >= split delta is classified in and
-# the fixed integer rounds re-run (the global-n base term makes any
-# exact frontier impossible for the fixed-round formulation) — held to
-# the full recompute's value oracle
-register(
-    "wallet_pagerank_warm",
-    inc.wallet_pagerank_warm,
-    inc.WALLET_PAGERANK_WARM_ORACLE,
 )
 # warm SQL twin (VERDICT r12 #7): the stored-state READ path in SQL
 # text — prior snapshot registered as a view over the committed
@@ -884,16 +861,11 @@ register(
     inc.wallet_coin_balances_warm_scaled,
     inc.WALLET_COIN_BALANCES_WARM_SCALED_ORACLE,
 )
-# r15 №5 follow-on: the lazy-leg rewrite made the pagerank and AUC
-# FULL faces fast enough that their warm siblings read as parity/loss
-# at the harness's mid-stream split — same physics as the coin/minhash
-# holdouts above, so the same remedy: re-pair each at the realistic
-# ~1% delta in the paired_warm_scaled tier.
-register(
-    "wallet_pagerank_warm_scaled",
-    inc.wallet_pagerank_warm_scaled,
-    inc.WALLET_PAGERANK_WARM_SCALED_ORACLE,
-)
+# r15 №5 follow-on: the lazy-leg rewrite made the AUC FULL face fast
+# enough that its warm sibling read as parity at the harness's
+# mid-stream split — same physics as the coin/minhash holdouts above,
+# so the same remedy: re-pair it at the realistic ~1% delta in the
+# paired_warm_scaled tier.
 register(
     "wallet_auc_warm_scaled",
     inc.wallet_auc_warm_scaled,

@@ -1952,12 +1952,19 @@ def _fence_anti(legs, busy, leg_key: str, busy_key: str, busy_day: str,
     joined the FULL per-(wallet, day) count table onto the legs —
     shuffling the whole leg stream by (wallet, day) just to read one
     bounded count — and then filtered ``n ≤ FLOW_MAX_DAILY_LEGS``.
-    Because every leg's (wallet, day) has a fence row by construction
-    (the fences are computed over the same legs in every caller — full,
-    incremental, and the warm stored∪delta merge), inner-join+filter ≡
-    anti-join against the complement hot list {(wallet, day): n >
-    fuse}, whose size the fuse algebra bounds at |legs| / 10⁴ — so the
-    big side is never shuffled for the fence at any scale."""
+
+    Caller contract (coverage): ``busy`` holds a row for every
+    (``leg_key``, day) of ``legs``, i.e. the fences are counted over
+    the legs being fenced or a superset of them. Every caller builds
+    them that way: ``_flow_legs_and_fences`` counts over the legs its
+    callers fence (the incremental face fences subsets of them), and
+    the peel chain counts over its own ``raw``. Under the contract
+    inner-join+filter ≡ anti-join against the complement hot list
+    {(wallet, day): n > fuse}, whose size the fuse algebra bounds at
+    |legs| / 10⁴ — so the big side is never shuffled for the fence at
+    any scale. A leg with no fence row would be dropped by the inner
+    join but kept here, so fences counted over fewer legs than they
+    fence silently change the result."""
     hot = busy.filter(F.col(n_col) > FLOW_MAX_DAILY_LEGS).select(busy_key, busy_day)
     if broadcast_fences:
         hot = F.broadcast(hot)

@@ -22,6 +22,7 @@ Generation layout (the snapshot-commit half of the Iceberg gap)::
       gen-000001/part-*.parquet   # immutable once committed
       gen-000002/part-*.parquet   # the next full snapshot
       gen-000002/_TAG             # optional commit tag (epoch fence)
+      gen-000002/_SCHEMA          # a partitioned snapshot's schema (JSON)
 
 Every generation writer (``merge_upsert``, ``erase_from_store``,
 ``commit_generation``) writes the whole new snapshot into a hidden
@@ -54,6 +55,7 @@ _LATEST = "_LATEST"
 _GEN_PREFIX = "gen-"
 _STAGE_PREFIX = ".tmp-gen-"
 _TAG = "_TAG"
+_SCHEMA = "_SCHEMA"
 _MARKER_PREFIX = ".advance-"
 _GENESIS = "genesis"
 
@@ -257,7 +259,25 @@ def read_store(
     """Read a store through its generation pointer (flat stores read
     as-is). The one reader entry point every consumer of a
     merge-written store must use."""
-    return spark.read.parquet(resolve_store(path, generation))
+    return _read_generation(spark, resolve_store(path, generation))
+
+
+def _read_generation(spark: SparkSession, gen_dir: str) -> DataFrame:
+    """Read one resolved generation dir in the schema its commit
+    recorded in ``_SCHEMA`` (partitioned snapshots only): hive partition
+    values are bare dir names, and inference would re-type an all-digit
+    string partition column as int. Without the file (flat generations,
+    plain stores) the schema is inferred from the parquet footers."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    try:
+        with open(os.path.join(gen_dir, _SCHEMA)) as f:
+            schema = StructType.fromJson(json.load(f))
+    except FileNotFoundError:
+        return spark.read.parquet(gen_dir)
+    return spark.read.schema(schema).parquet(gen_dir)
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -1008,12 +1028,13 @@ def commit_generation(
 
     ``partition_by`` (optional) hive-partitions the snapshot's files by
     the named columns — for stores whose readers always filter on a
-    low-cardinality discriminator (the warm-state tables' ``part`` /
-    ``round`` columns), the filter then prunes FILES at planning time
-    instead of re-scanning every row group per logical part. Purely a
-    physical layout choice: the generation protocol (staging, rename,
-    pointer CAS, vacuum, time travel) is unchanged, and ``read_store``
-    reads partitioned and flat generations alike."""
+    low-cardinality discriminator (the LPA warm state's ``round``
+    column), the filter then prunes FILES at planning time instead of
+    re-scanning every row group per round. Purely a physical layout
+    choice: the generation protocol (staging, rename, pointer CAS,
+    vacuum, time travel) is unchanged. The snapshot's schema commits
+    with it as ``_SCHEMA``, so ``read_store`` and ``erase_from_store``
+    read the partition columns in their written types."""
     if clear_fence and tag is not None:
         raise ValueError(
             "clear_fence=True contradicts an explicit tag: a commit "
@@ -1058,6 +1079,11 @@ def _commit_staged(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(staged)
+    if partition_by:
+        # dir names carry no types: record them, to commit or vanish
+        # with the snapshot exactly as _TAG does
+        with open(os.path.join(staged, _SCHEMA), "w") as f:
+            f.write(df.schema.json())
     # Row count from the staged files' parquet footers: exact, and no
     # Spark job (re-executing the plan would redo the MERGE).
     rows = ds.dataset(staged, format="parquet").count_rows()
@@ -1451,7 +1477,7 @@ def _erase_from_store_once(
 
     _ensure_session_confs(spark)
     cur_gen = resolve_store(path)
-    live = spark.read.parquet(cur_gen)
+    live = _read_generation(spark, cur_gen)
     n_erased = live.join(keys.hint("broadcast"), on=key_col, how="left_semi").count()
     if not n_erased:
         return 0
@@ -1482,6 +1508,8 @@ def store_snapshots(spark: SparkSession, path: str) -> DataFrame:
         n_files = n_bytes = 0
         for root, _, files in _os.walk(full):
             for f in files:
+                if f == _SCHEMA:
+                    continue
                 n_files += 1
                 n_bytes += _os.path.getsize(_os.path.join(root, f))
         tag = commit_tag(full)

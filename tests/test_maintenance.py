@@ -663,9 +663,10 @@ def test_evolve_partitioning_adopts_flat_store(spark, tmp_path):
 def test_schema_drift_between_generations(spark, tmp_path):
     """schema_drift reports added/removed/retyped columns between the
     live generation and its predecessor; stable schemas report
-    nothing."""
+    nothing, also when an erase flattens a partitioned snapshot."""
     from wallet_and_risky_features_data_pipeline_spark.sources.writers import (
         commit_generation,
+        erase_from_store,
         schema_drift,
     )
 
@@ -687,6 +688,17 @@ def test_schema_drift_between_generations(spark, tmp_path):
         spark.createDataFrame([(1, 2, 7)], "id long, v long, w long"), store
     )
     assert schema_drift(spark, store) == []  # stable schema: clean
+
+    # all-digit string partition values, flattened by an erase: the
+    # column stays a string, which is no drift
+    parted = str(tmp_path / "parted_store")
+    commit_generation(
+        spark.createDataFrame([(1, "07"), (2, "12")], "id long, part string"),
+        parted,
+        partition_by=["part"],
+    )
+    erase_from_store(spark, spark.createDataFrame([(1,)], "id long"), parted, "id")
+    assert schema_drift(spark, parted) == []
 
 
 import pytest as _pytest_cas

@@ -9,8 +9,8 @@ from __future__ import annotations
 import pytest
 
 from wallet_and_risky_features_data_pipeline_spark.caching import (
-    peek_session_memo,
-    reset_session_memos,
+    cache_scope,
+    persist_tracked,
 )
 from wallet_and_risky_features_data_pipeline_spark.plans.registry import QUERIES
 
@@ -518,7 +518,7 @@ def test_warm_tier_delta_scans_push_ts_predicate(spark, tmp_path, monkeypatch):
     """The warm (stored-prior-state) tier's defining property: NO
     events scan in a warm query's plan may read pre-split history —
     every one must carry the ts >= split pushdown. Guards the
-    CacheManager trap: the memoized full leg table's persist() gets
+    CacheManager trap: a persist() of the full leg table gets
     substituted into any plan-equal fragment, silently turning the
     delta scan into a full cached explosion (the r12 local-delta probe
     read warm/full >= 1 at 100x because of exactly that)."""
@@ -532,11 +532,10 @@ def test_warm_tier_delta_scans_push_ts_predicate(spark, tmp_path, monkeypatch):
     # monkeypatch + tmp_path (ADVICE r12): env var and state dir are
     # cleaned up even when an assertion below fails
     monkeypatch.setenv("SPARK_GRAFT_WARM_STATE_DIR", str(tmp_path))
-    # populate the session memo FIRST so the cache-substitution
-    # hazard is live during the check
-    reset_session_memos(spark)
-    wallet_transactions(spark, SF_MEDIUM).count()
-    try:
+    # persist the full legs FIRST so the cache-substitution hazard is
+    # live during the check
+    with cache_scope():
+        persist_tracked(wallet_transactions(spark, SF_MEDIUM)).count()
         for fn in (
             inc.wallet_coin_balances_warm,
             inc.wallet_auc_warm,
@@ -557,8 +556,6 @@ def test_warm_tier_delta_scans_push_ts_predicate(spark, tmp_path, monkeypatch):
                 f"{fn.__name__}: {len(bad)}/{len(ev_scans)} events scans "
                 f"read pre-split history (no ts pushdown)"
             )
-    finally:
-        reset_session_memos(spark)
 
 
 def test_delta_scan_prunes_date_partitions(spark, tmp_path):
@@ -568,7 +565,7 @@ def test_delta_scan_prunes_date_partitions(spark, tmp_path):
     row-group stats alone cannot shrink the file listing, and at 100 TB
     the listing IS the cost (VERDICT r12 #3)."""
     from wallet_and_risky_features_data_pipeline_spark.plans.wallet_model import (
-        wallet_transactions_delta,
+        wallet_transactions,
     )
     from wallet_and_risky_features_data_pipeline_spark.sources.readers import (
         read_table,
@@ -588,7 +585,7 @@ def test_delta_scan_prunes_date_partitions(spark, tmp_path):
     write_partitioned(ev, store, mode="overwrite")
 
     since = "2024-01-28"
-    delta = wallet_transactions_delta(spark, str(tmp_path), since)
+    delta = wallet_transactions(spark, str(tmp_path), since=since)
     plan = _physical(delta)
     scan = [l for l in plan.splitlines() if "Scan parquet" in l]
     assert scan, "no parquet scan in the delta plan"
@@ -611,14 +608,9 @@ def test_delta_scan_prunes_date_partitions(spark, tmp_path):
 def test_single_consumer_plans_stream_without_memo_cache(spark):
     """The lazy leg-build discipline (VERDICT r13 #5): a plan that
     consumes the role-exploded legs exactly once must NOT read through
-    the memo's InMemoryRelation when the session memo is cold — the
-    cache write + read-back costs ~2× the build it fronts. And the
-    OPPORTUNISTIC readers (flagship chain) must flip to the shared
-    memo frame once a nightly session has warmed it, without building
-    it themselves."""
-    from wallet_and_risky_features_data_pipeline_spark.plans import wallet_model as wm
-
-    reset_session_memos(spark)
+    an InMemoryRelation — the cache write + read-back costs ~2× the
+    build it fronts."""
+    spark.catalog.clearCache()
     for name in (
         "window_ordering",
         "window_partition_totals",
@@ -629,15 +621,17 @@ def test_single_consumer_plans_stream_without_memo_cache(spark):
     ):
         plan = _physical(QUERIES[name](spark, SF_MEDIUM))
         assert "InMemoryTableScan" not in plan, (
-            f"{name} reads a cold-session cache — the lazy build regressed"
+            f"{name} reads a leg cache — the lazy build regressed"
         )
     # window_running_balance_salted left the no-cache list in r16: its
     # input is consumed TWICE (chunk windows + the totals join-back),
     # so it now deliberately persists the PROJECTED nine-column frame —
-    # a query-scoped cache, NOT the full-width memo. Pin both halves:
-    # the cache exists, and it is the narrow frame (no wt-memo columns
-    # like current_value/transaction_type in the cached relation).
-    plan = _physical(QUERIES["window_running_balance_salted"](spark, SF_MEDIUM))
+    # a query-scoped cache, NOT the full-width legs. Pin both halves:
+    # the cache exists, and it is the narrow frame (no full-width leg
+    # columns like current_value/transaction_type in the cached
+    # relation).
+    with cache_scope():
+        plan = _physical(QUERIES["window_running_balance_salted"](spark, SF_MEDIUM))
     assert "InMemoryTableScan" in plan, (
         "salted running balance lost its projected twice-consumed cache"
     )
@@ -645,14 +639,3 @@ def test_single_consumer_plans_stream_without_memo_cache(spark):
     assert "current_value" not in cached_schema, (
         "salted cache carries full-width legs — the projection regressed"
     )
-    # merely PLANNING the queries above must not have built the memo
-    assert peek_session_memo(spark, (wm.WT_MEMO, SF_MEDIUM)) is None
-
-    # warm the memo the way a nightly (runner.run_features) does...
-    wm.wallet_transactions(spark, SF_MEDIUM)
-    # ...and the opportunistic chain now shares it
-    plan = _physical(QUERIES["wallet_features"](spark, SF_MEDIUM))
-    assert "InMemoryTableScan" in plan, (
-        "flagship did not share the warmed nightly leg table"
-    )
-    reset_session_memos(spark)

@@ -458,6 +458,37 @@ def test_nightly_merges_touched_pairs_and_empty_nightly_is_noop(
         assert json.load(f) == marks
 
 
+def test_features_leave_no_cache_and_nightly_scans_past_the_tag(
+    spark, tmp_path, base_sf, monkeypatch
+):
+    """Every cache ``run_features`` takes lives for the run: the
+    CacheManager is empty after the cold run and after the nightly. The
+    nightly's MERGE batch streams from the events scan with the
+    ``ts > tag`` bound pushed onto it, not from a cached full-corpus
+    leg table."""
+    batches = []
+    merge = runner.merge_upsert
+
+    def capture(spark_, batch, *a, **kw):
+        batches.append(batch)
+        return merge(spark_, batch, *a, **kw)
+
+    monkeypatch.setattr(runner, "merge_upsert", capture)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    wd = str(tmp_path)
+    for sf in (base_sf, SF_SMALL):
+        runner.run_stage(spark, sf, wd)
+        runner.run_features(spark, sf, wd)
+        assert cache.isEmpty()
+
+    assert len(batches) == 2
+    plan = batches[-1]._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan
+    scans = [l for l in plan.splitlines() if "Scan parquet" in l and "events.parquet" in l]
+    assert scans and all("GreaterThan(ts" in l for l in scans), scans
+
+
 def test_nightly_flattens_a_partitioned_features_store(spark, tmp_path, base_sf):
     """A features store committed with the 256-way ``address_partition=``
     hive layout is flattened by its first nightly MERGE: the new

@@ -332,30 +332,6 @@ def test_doc_quality_lr_matches_golden(spark):
     assert len(rows) == golden["n_rows"]
 
 
-def test_wallet_transactions_memoized_per_session(spark):
-    """The leg table memo: same (session, sf_dir) returns the SAME
-    persisted frame (the dozen wallet-family queries share one scan +
-    explosion per session); blacklisted variants bypass it; reset
-    drops it."""
-    from wallet_and_risky_features_data_pipeline_spark.plans.llm_ops import (
-        reset_session_memos,
-    )
-    from wallet_and_risky_features_data_pipeline_spark.plans.wallet_model import (
-        wallet_transactions,
-    )
-
-    reset_session_memos(spark)
-    a = wallet_transactions(spark, "/root/testdata/sf0.001")
-    b = wallet_transactions(spark, "/root/testdata/sf0.001")
-    assert a is b
-    assert a.storageLevel.useMemory
-    black = wallet_transactions(spark, "/root/testdata/sf0.001", blacklist=("7",))
-    assert black is not a
-    reset_session_memos(spark)
-    c = wallet_transactions(spark, "/root/testdata/sf0.001")
-    assert c is not a
-
-
 def test_entity_hot_block_collapses_before_fuzzy_match(spark, tmp_path):
     """The mechanical hot-block guard: a block holding 30 identical
     copies of one entity must collapse to ONE representative before

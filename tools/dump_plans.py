@@ -41,9 +41,9 @@ def main() -> None:
     from wallet_and_risky_features_data_pipeline_spark.caching import reset_session_memos
 
     for name in names:
-        # memo reset so each plan shows its ISOLATED (cold-session)
-        # shape — the shape the bench's isolated tier times — rather
-        # than an InMemoryRelation left by a previously dumped query
+        # cache emptied so each plan shows its ISOLATED shape — the
+        # shape the bench's isolated tier times — rather than an
+        # InMemoryRelation left by a previously dumped query
         reset_session_memos(spark)
         df = QUERIES[name](spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(

@@ -348,7 +348,7 @@ def local_delta_probe(spark) -> None:
         # write_partitioned layout), rebuild the warm state for that
         # input once, and time the refresh reading from it — the
         # deployed shape where the ts >= split predicate prunes whole
-        # partition DIRECTORIES (wallet_transactions_delta mirrors the
+        # partition DIRECTORIES (wallet_transactions(since=) mirrors the
         # bound onto date_partition), not just row groups.
         from wallet_and_risky_features_data_pipeline_spark.sources.readers import (
             read_table,
@@ -469,7 +469,7 @@ def main() -> None:
         with cache_scope():
             fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
         for label, d in (("sf0.1", SRC), (f"{COPIES}x", DST)):
-            # isolated like bench.py's tier: memos reset, so a later
+            # isolated like bench.py's tier: cache emptied, so a later
             # query cannot ride an earlier one's cached pipeline
             _dd.LAST_CC_ROUNDS = None
             _rf.LAST_KCORE_ROUNDS = None

@@ -378,7 +378,7 @@ NGRAM_BROADCAST_MAX_DOCS = 20_000_000
 
 def ngram_capped_shingles(
     df: DataFrame, id_col: str, text_col: str, n: int = 3, max_df: int = 100,
-    persist: bool = True, broadcast_dims: bool = False,
+    broadcast_dims: bool = False,
 ) -> DataFrame:
     """The shared base of the n-gram pair family: the df-capped
     ``(doc, shingle)`` stream both measures pair over.
@@ -400,10 +400,9 @@ def ngram_capped_shingles(
     ``broadcast_dims`` FORCES the hot-list broadcast when the caller
     has proven the corpus small (``NGRAM_BROADCAST_MAX_DOCS``) —
     skipping the AQE stage-barrier re-planning that dominated the
-    sf0.1 run; leave False at unknown scale. Persisted because the df
-    count, the per-doc sizes and both self-join sides all read this
-    stream; ``persist=False`` is for callers that memoize it with
-    their own (scope-surviving) persist."""
+    sf0.1 run; leave False at unknown scale. Persisted (query-scoped)
+    because the df count, the per-doc sizes and both self-join sides
+    all read this stream."""
     shingled = df.select(
         F.col(id_col).alias("doc"),
         F.explode(F.array_distinct(word_shingles(text_col, n))).alias("shingle"),
@@ -427,7 +426,7 @@ def ngram_capped_shingles(
     # more than the saved tokenize. The unpartitioned capped persist
     # stays.
     capped = shingled.join(hot, "shingle", "left_anti")
-    return persist_tracked(capped) if persist else capped
+    return persist_tracked(capped)
 
 
 def ngram_sized_pairs(capped: DataFrame, broadcast_dims: bool = False) -> DataFrame:
@@ -476,8 +475,7 @@ def jaccard_pairs_from_capped(
     capped: DataFrame, threshold: float = 0.5, broadcast_dims: bool = False
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs ≥ threshold over a prebuilt
-    ``ngram_capped_shingles`` stream (so a session that already paid
-    for it — e.g. for the containment query — reuses it)."""
+    ``ngram_capped_shingles`` stream."""
     sized = ngram_sized_pairs(capped, broadcast_dims)
     return (
         sized.withColumn(

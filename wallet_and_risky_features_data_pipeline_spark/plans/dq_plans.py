@@ -13,18 +13,15 @@ from .wallet_features import WALLET_FEATURES_ORACLE
 
 
 def dq_feature_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Opportunistic legs (ADVICE r14): this gate consumes the features
-    # exactly ONCE and collapses them to 4 check rows, so when the
-    # session is cold it streams the lazy scan → explode → window →
-    # aggs in one pass (the memo's InMemoryRelation materialization is
-    # pure overhead for a single consumer, ~1 s at sf0.1 — VERDICT r13
-    # #5); but in a warmed nightly session — the runner has already
-    # materialized the leg memo — it reads the cached table instead of
-    # rebuilding the explosion.
+    # Lazy legs (ADVICE r14): this gate consumes the features exactly
+    # ONCE and collapses them to 4 check rows, so it streams the scan
+    # → explode → window → aggs in one pass (an InMemoryRelation
+    # materialization is pure overhead for a single consumer, ~1 s at
+    # sf0.1 — VERDICT r13 #5).
     from .wallet_features import contract_state_from, wallet_features_from
-    from .wallet_model import wallet_transactions_shared_or_lazy
+    from .wallet_model import wallet_transactions
 
-    legs = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    legs = wallet_transactions(spark, sf_dir)
     return feature_constraints(wallet_features_from(contract_state_from(legs)))
 
 
@@ -60,9 +57,9 @@ SELECT 'zero_min_balance_pct', zero_pct, zero_pct > 95.0 FROM agg
 def ledger_reconciliation(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
-    from .wallet_model import wallet_transactions_shared_or_lazy
+    from .wallet_model import wallet_transactions
 
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     per_event = wt.groupBy("event_id", "transaction_type").agg(
         F.sum("signed_value").alias("net"),
         F.max("tx_fee").alias("fee"),

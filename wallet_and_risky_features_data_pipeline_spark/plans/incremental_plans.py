@@ -25,11 +25,7 @@ from ..streaming.incremental import (
 )
 from .risk_features import WALLET_AUC_ROLLUP_ORACLE
 from .wallet_features import contract_state_from
-from .wallet_model import (
-    wallet_transactions,
-    wallet_transactions_delta,
-    wallet_transactions_shared_or_lazy,
-)
+from .wallet_model import wallet_transactions
 from .windows_plans import WALLET_COIN_BALANCES_ORACLE
 
 SPLIT_AT = "2024-01-15"
@@ -39,7 +35,7 @@ LPA_SPLIT_AT = "2024-01-28"
 
 
 def wallet_coin_balances_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     split = F.lit(SPLIT_AT).cast("timestamp")
     prior = contract_state_from(wt.filter(F.col("ts") < split))
     return _upsert_projection(prior, wt.filter(F.col("ts") >= split))
@@ -67,7 +63,7 @@ def wallet_auc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-query, distinct from ``_warm``'s delta-only pushdown scan."""
     from ..sources.writers import read_store
 
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     split = F.lit(SPLIT_AT).cast("timestamp")
     prior = read_store(spark, _ensure_auc_state(spark, sf_dir))
     return incremental_auc_rollup(prior, wt.filter(F.col("ts") >= split))
@@ -115,7 +111,7 @@ def wallet_components_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..caching import persist_tracked
     from ..sources.writers import read_store
 
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     split = F.lit(SPLIT_AT).cast("timestamp")
     sender = (F.col("address_role") == "sender") & F.col("interacted_with").isNotNull()
 
@@ -217,10 +213,9 @@ def wallet_rolling_distinct_incremental(
     7 days of the day-grain table, never history. Held to the FULL-
     recompute oracle (J15/W11 discipline).
     """
-    from ..plans.wallet_model import wallet_transactions as _wt
     from .risk_features import wallet_rolling_distinct_7d  # noqa: F401
 
-    wt = _wt(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     split_day = F.lit(SPLIT_AT).cast("date")
     dg = (
         wt.filter(
@@ -311,7 +306,7 @@ def _lpa_edge_tables(spark: SparkSession, sf_dir: str):
     materialization."""
     from ..caching import persist_tracked
 
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     pairs = persist_tracked(
         _lpa_legs(wt).groupBy("a", "b").agg(F.min("ts").alias("first_seen"))
     )
@@ -755,8 +750,8 @@ def _ensure_lpa_state(spark: SparkSession, sf_dir: str) -> str:
 
 def _lpa_refresh_from_store(spark: SparkSession, sf_dir: str):
     """The stored-state LPA refresh: (und, sym_full, final-labels)
-    with the prior state READ BACK from the generation store, never
-    memoized, so the bench's isolated tier times the real refresh.
+    with the prior state READ BACK from the generation store, so the
+    bench's isolated tier times the real refresh.
     Its inputs are the STORED old edge set + symmetric closure +
     label rounds and a ts ≥ split scan of the events source (the
     predicate reaches the parquet scan). Genuinely new edges = delta
@@ -784,12 +779,9 @@ def _lpa_refresh_from_store(spark: SparkSession, sf_dir: str):
     sym_old = stored.filter(F.col("round") == -1).select(
         F.col("node").alias("s"), F.col("lbl").alias("d")
     )
-    # delta-only source scan: ts ≥ split on the LAZY builder so the
-    # predicate reaches the events scan (the memoized table's persist()
-    # would materialize the FULL explosion first — wallet_model.
-    # wallet_transactions_delta documents the trap)
+    # delta-only source scan: ``since`` filters the events scan itself
     delta_pairs = persist_tracked(
-        _lpa_legs(wallet_transactions_delta(spark, sf_dir, LPA_SPLIT_AT))
+        _lpa_legs(wallet_transactions(spark, sf_dir, since=LPA_SPLIT_AT))
         .select("a", "b")
         .distinct()
     )
@@ -973,7 +965,7 @@ def wallet_coin_balances_warm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.writers import read_store
 
     prior = read_store(spark, _ensure_contract_state(spark, sf_dir))
-    return _upsert_projection(prior, wallet_transactions_delta(spark, sf_dir, SPLIT_AT))
+    return _upsert_projection(prior, wallet_transactions(spark, sf_dir, since=SPLIT_AT))
 
 
 def _upsert_projection(prior: DataFrame, delta: DataFrame) -> DataFrame:
@@ -1007,7 +999,7 @@ def wallet_coin_balances_warm_scaled(spark: SparkSession, sf_dir: str) -> DataFr
         spark, _ensure_contract_state(spark, sf_dir, split_at=SCALED_SPLIT_AT)
     )
     return _upsert_projection(
-        prior, wallet_transactions_delta(spark, sf_dir, SCALED_SPLIT_AT)
+        prior, wallet_transactions(spark, sf_dir, since=SCALED_SPLIT_AT)
     )
 
 
@@ -1051,7 +1043,7 @@ def wallet_auc_warm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     prior = read_store(spark, _ensure_auc_state(spark, sf_dir))
     return incremental_auc_rollup(
-        prior, wallet_transactions_delta(spark, sf_dir, SPLIT_AT)
+        prior, wallet_transactions(spark, sf_dir, since=SPLIT_AT)
     )
 
 
@@ -1070,7 +1062,7 @@ def wallet_auc_warm_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, _ensure_auc_state(spark, sf_dir, split_at=SCALED_SPLIT_AT)
     )
     return incremental_auc_rollup(
-        prior, wallet_transactions_delta(spark, sf_dir, SCALED_SPLIT_AT)
+        prior, wallet_transactions(spark, sf_dir, since=SCALED_SPLIT_AT)
     )
 
 
@@ -1142,7 +1134,7 @@ def wallet_components_warm(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("address_role") == "sender"
     ) & F.col("interacted_with").isNotNull()
     new_edges = (
-        wallet_transactions_delta(spark, sf_dir, SPLIT_AT)
+        wallet_transactions(spark, sf_dir, since=SPLIT_AT)
         .filter(sender)
         .select(
             F.col("wallet_address").alias("w_a"),
@@ -1256,7 +1248,7 @@ def wallet_rolling_distinct_warm(spark: SparkSession, sf_dir: str) -> DataFrame:
         - _dt.timedelta(days=_ROLL7_WINDOW_DAYS - 1)
     ).isoformat()
     dg = (
-        wallet_transactions_delta(spark, sf_dir, since)
+        wallet_transactions(spark, sf_dir, since=since)
         .filter(
             (F.col("address_role") == "sender")
             & F.col("interacted_with").isNotNull()

@@ -9,11 +9,10 @@ value-verified, not just smoke-tested.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import persist_tracked, session_memo
+from ..caching import persist_tracked
 # re-exported: callers that measure the pipeline import it from here
 from ..caching import reset_session_memos  # noqa: F401
 from ..functions.text import (
@@ -63,34 +62,22 @@ def _ngram_dims_broadcastable(sf_dir: str) -> bool:
         return False
 
 
-# Session memo of the df-capped trigram stream SHARED by
-# dedup_ngram_jaccard and dedup_containment (VERDICT r14 #1): within
-# one query the df-capped shingle stream already persists (the df
-# count, the per-doc sizes and both pair-join sides all read it), so
-# memoizing it costs nothing extra cold — the memo just keeps that
-# materialization alive for the sibling query in a warmed session
-# instead of letting cache_scope release it at query end. The memo
-# grain is the CAPPED STREAM, not the aggregated pair table (r15 №2):
-# the pair table is |pairs|-sized and persisting it was the dominant
-# cost of a cold run, while the stream is what both measures actually
-# share.
+# The df-capped trigram stream both dedup_ngram_jaccard and
+# dedup_containment pair over (VERDICT r14 #1). Within one query it is
+# a tracked persist: the df count, the per-doc sizes and both pair-join
+# sides all read it. The cache grain is the CAPPED STREAM, not the
+# aggregated pair table (r15 №2): the pair table is |pairs|-sized and
+# persisting it was the dominant cost of a cold run.
 def _ngram_capped_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The df-capped (doc, shingle) stream at the registry's
-    parameters (n=3, max_df=100), computed once per (session, table)."""
+    parameters (n=3, max_df=100), persisted for the calling query."""
     from ..operators.dedup import ngram_capped_shingles
 
-    def build() -> DataFrame:
-        docs = fan_out(read_table(spark, sf_dir, "documents"))
-        # persist=False + an untracked persist: the memo must survive
-        # the building query's cache_scope so the sibling consumer
-        # reads it (persist_tracked would release it at that query's
-        # end); reset_session_memos unpersists it.
-        return ngram_capped_shingles(
-            docs, "doc_id", "text", n=3, max_df=100, persist=False,
-            broadcast_dims=_ngram_dims_broadcastable(sf_dir),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    return session_memo(spark, ("ngram_capped", sf_dir), build)
+    docs = fan_out(read_table(spark, sf_dir, "documents"))
+    return ngram_capped_shingles(
+        docs, "doc_id", "text", n=3, max_df=100,
+        broadcast_dims=_ngram_dims_broadcastable(sf_dir),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1082,30 +1069,18 @@ WHERE doc_a % 100 = 1 OR doc_b % 100 = 1
 # the iterative Spark propagation is value-checked against an exact
 # declarative rendering.
 def _cluster_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup cluster assignment, computed ONCE per (session, table).
-
-    Both registry consumers — ``dedup_cluster_assign`` (the assignment
-    itself) and ``dedup_decisions`` (the keep/drop table derived from
-    it) — share this session memo, so the expensive MinHash → LSH →
-    connected-components pipeline runs once per session instead of
-    once per consumer (it was the bench's two slowest entries, ~11 s
-    each, purely from the recompute). The memo holds the eagerly
-    ``localCheckpoint``-ed RESULT (one (doc_id, cluster_id) row per
-    doc — corpus-row-count sized, tiny next to the pair table);
-    concurrent first callers (the bench warms both consumers in
-    parallel) wait for one computation rather than racing two.
-    """
+    """Near-dup cluster assignment: MinHash → LSH → connected
+    components, shared by ``dedup_cluster_assign``, ``dedup_decisions``,
+    ``dedup_keep_best`` and the split-leakage audit. The RESULT is
+    eagerly ``localCheckpoint``-ed (one (doc_id, cluster_id) row per
+    doc — corpus-row-count sized, tiny next to the pair table), so a
+    consumer that reads it twice does not rerun the iteration."""
     from ..operators.dedup import connected_components
 
-    def build() -> DataFrame:
-        docs = fan_out(read_table(spark, sf_dir, "documents"))
-        signed = minhash_signature(docs, "doc_id", "text")
-        pairs = lsh_candidate_pairs(signed, "doc_id").filter(
-            F.col("est_jaccard") >= 0.5
-        )
-        return connected_components(pairs, docs, "doc_id").localCheckpoint(eager=True)
-
-    return session_memo(spark, ("cluster_assignment", sf_dir), build)
+    docs = fan_out(read_table(spark, sf_dir, "documents"))
+    signed = minhash_signature(docs, "doc_id", "text")
+    pairs = lsh_candidate_pairs(signed, "doc_id").filter(F.col("est_jaccard") >= 0.5)
+    return connected_components(pairs, docs, "doc_id").localCheckpoint(eager=True)
 
 
 def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3044,7 +3019,7 @@ FROM t LEFT JOIN per_doc p ON p.doc_id = t.doc_id
 # min-id representative (the arbitrary-but-deterministic convention);
 # real curation keeps the BEST member — here the longest (token count,
 # the quality proxy the gate already uses), tie-broken to the smaller
-# id. Composes the memoized MinHash→LSH→CC assignment with one
+# id. Composes the MinHash→LSH→CC assignment with one
 # per-cluster window rank — no new corpus pass, no new pair work; the
 # policy is a projection over the existing cluster table.
 def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4208,7 +4183,7 @@ def corpus_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: every multi-doc cluster with its per-split member counts
     and the integer ``is_leaky`` verdict (≥2 distinct splits). Scale
     shape: the cluster assignment is the existing bounded-candidate
-    iterative pipeline (memoized per session); the audit itself adds
+    iterative pipeline; the audit itself adds
     one doc_id equi join and one hash agg to ≤|clusters| rows — no
     windows, nothing new to buffer.
     """

@@ -380,7 +380,7 @@ register("streaming_dedup_counts", sj.stream_dedup_counts, sj.STREAM_DEDUP_COUNT
 register("streaming_rolling_zscore", sj.stream_rolling_zscore, sk.ROLLING_ZSCORE_ORACLE)
 # Quality-aware cluster selection: keep the LONGEST member per
 # duplicate cluster (curation's policy) — a projection over the
-# memoized assignment, no new pair work
+# cluster assignment, no new pair work
 register("dedup_keep_best", llm.dedup_keep_best, llm.DEDUP_KEEP_BEST_ORACLE)
 # Deterministic epoch-shuffle order (seed-keyed md5 + per-source
 # position; global order is lexicographic (pos, source) — the

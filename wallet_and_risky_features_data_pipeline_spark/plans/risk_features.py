@@ -24,7 +24,7 @@ from .wallet_model import (
     ORDER_COLS,
     WALLET_TX_ORACLE_CTE,
     by_wallet,
-    wallet_transactions_shared_or_lazy,
+    wallet_transactions,
 )
 
 VALUE_CAP = 13_000_000.0  # rugpull_features.sql:75
@@ -32,15 +32,13 @@ BALANCE_CAP = 700_000.0  # ethereum_wallet_features.sql:286-289
 
 
 def risk_flag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # shared_or_lazy throughout this module's SINGLE-consumer plans
-    # (r15 №5): each consumes the leg table through exactly one
-    # downstream chain, so a cold run streams the lazy build instead
-    # of paying the memo's InMemoryRelation write it would read once
-    # (measured 1.0-1.5 s per query at sf0.1 — the cache write is
-    # ~2x the build); a warmed nightly session still shares the memo.
-    # Multi-consumer plans (taint's edges+seeds, wash's triple-fenced
-    # raw, the LPA/flow leg fences) keep the eager memo build.
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    # The lazy legs throughout this module (r15 №5): a plan that
+    # consumes the leg table through one downstream chain streams the
+    # build instead of paying an InMemoryRelation write it would read
+    # once (measured 1.0-1.5 s per query at sf0.1 — the cache write is
+    # ~2x the build). Multi-consumer plans persist their own narrower
+    # projections under the query's cache scope.
+    wt = wallet_transactions(spark, sf_dir)
     # 'internal' legs stand in for risky/rugpull-flagged interactions
     risky = F.col("transaction_type") == "internal"
     capped = F.when(F.col("current_value").cast("double") > VALUE_CAP, F.lit(0.0)).otherwise(
@@ -104,7 +102,7 @@ def wallet_auc_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8 + W11: per wallet, the max running AUC, total time above a
     zero balance, and the FIRST_VALUE of the ordered series (the
     boundary value an incremental batch would stitch against)."""
-    wt = by_wallet(wallet_transactions_shared_or_lazy(spark, sf_dir))
+    wt = by_wallet(wallet_transactions(spark, sf_dir))
     df = running_sum(wt, F.col("signed_value"), ("wallet_address",), ORDER_COLS, out="bal")
     df = lead_delta(df, F.unix_micros("ts"), ("wallet_address",), ORDER_COLS, out="dt_us")
     auc_term = F.col("bal").cast("decimal(20,9)") * F.col("dt_us").cast("decimal(16,0)")
@@ -229,7 +227,7 @@ GROUP BY 1, 2
 # nothing windowed. The reference's risk features flag wallets by
 # volume caps; this is the structural sibling those models add next.
 def wallet_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     out_legs = wt.filter(
         (F.col("address_role") == "sender") & F.col("interacted_with").isNotNull()
     )
@@ -392,16 +390,14 @@ def wallet_taint_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ReusedExchange instead of an InMemoryRelation write per round.
     # Measured 0.846× vs the persisted-round shape ON lazy legs; the
     # legs are lazy too (0.961× alone) because composition only wins
-    # when each reused subtree streams instead of re-reading a memo
-    # cache — the memo'd composed arm measured 1.358×, and persisting
+    # when each reused subtree streams instead of re-reading a leg
+    # cache — the cached-legs composed arm measured 1.358×, and persisting
     # just the distinct edge set measured 1.444× (both rejected; the
     # cache-materialization barrier costs more than the bounded
     # re-derivation — TAINT_MAX_HOPS is fixed, so the composed plan
     # re-derives the pruned two-column edge stream at most 3× and the
     # explosion twice at ANY scale, all |legs|-linear).
-    from .wallet_model import wallet_transactions_shared_or_lazy
-
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     legs = wt.filter(
         (F.col("address_role") == "sender") & F.col("interacted_with").isNotNull()
     )
@@ -482,7 +478,7 @@ def wallet_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 85·inc ≤ 8.5e13 ≪ 2⁶³ — safe in BIGINT at ANY node count by
     # construction, unlike the per-wallet Σv² moments (see
     # wallet_counterparty_hhi), which scale with data values.
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     legs = wt.filter(
         (F.col("address_role") == "sender") & F.col("interacted_with").isNotNull()
     )
@@ -724,7 +720,7 @@ GROUP BY 1, 2
 # nodes; wedge count is Σ deg_hi(v)², the quantity a real deployment
 # audits (same role as lsh's max_bucket).
 def wallet_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     directed = wt.filter(
         (F.col("address_role") == "sender") & F.col("interacted_with").isNotNull()
     ).select(
@@ -800,7 +796,7 @@ GROUP BY 1
 # feature_correlations discipline). Two map-side-combinable hash
 # aggs: (wallet, counterparty) then wallet; no joins, no windows.
 def wallet_counterparty_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     legs = wt.filter(
         (F.col("address_role") == "sender")
         & F.col("interacted_with").isNotNull()
@@ -879,7 +875,7 @@ HAVING SUM(v_c) > 0
 # ((wallet, day) → wallet) and one broadcast of the single-row global
 # max — no windows, no joins on the fact table.
 def wallet_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     per_day = wt.groupBy(
         "wallet_address", F.to_date("ts").alias("day")
     ).agg(F.count(F.lit(1)).alias("n_day"))
@@ -945,7 +941,7 @@ GROUP BY 1
 def wallet_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import connected_components
 
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     legs = wt.filter(
         (F.col("address_role") == "sender") & F.col("interacted_with").isNotNull()
     )
@@ -1043,7 +1039,7 @@ LAST_KCORE_ROUNDS: int | None = None
 
 
 def wallet_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     legs = wt.filter(
         (F.col("address_role") == "sender") & F.col("interacted_with").isNotNull()
     ).select(
@@ -1168,7 +1164,7 @@ EWMA_ALPHA = 0.5  # exactly representable; halving is exact in binary FP
 
 
 def wallet_ewma_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     per_day = wt.groupBy(
         "wallet_address", F.to_date("ts").alias("day")
     ).agg(F.sum("signed_value").cast("double").alias("net"))
@@ -1231,7 +1227,7 @@ AUTOCORR_MIN_PAIRS = 3
 
 
 def wallet_flow_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     per_day = wt.groupBy(
         "wallet_address", F.to_date("ts").alias("day")
     ).agg(
@@ -1328,7 +1324,7 @@ CUSUM_ALARM_C = 500_000  # h: $5,000 cumulative-drift alarm, in cents
 
 
 def wallet_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     per_day = wt.groupBy(
         "wallet_address", F.to_date("ts").alias("day")
     ).agg(
@@ -1437,9 +1433,7 @@ def _lpa_graph(spark: SparkSession, sf_dir: str):
     build, amortized over all rounds; round 1's groupBy(s) and the
     modularity degree agg still combine map-side, so the d-layout
     costs them nothing extra)."""
-    from .wallet_model import wallet_transactions_shared_or_lazy
-
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     legs = wt.filter(
         (F.col("address_role") == "sender") & F.col("interacted_with").isNotNull()
     ).select(
@@ -1680,7 +1674,7 @@ CROSS JOIN m
 
 
 def wallet_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     legs = wt.filter(
         (F.col("address_role") == "sender") & F.col("interacted_with").isNotNull()
     ).select(
@@ -1773,7 +1767,7 @@ def wallet_neighborhood_jaccard(
     ``is_collusive`` verdict is the pure-integer cross-multiplication
     2·shared ≥ |sig_a|+|sig_b|−shared (τ = 0.5), ANSI-safe.
     """
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     legs = wt.filter(
         (F.col("address_role") == "sender")
         & F.col("interacted_with").isNotNull()
@@ -1982,15 +1976,13 @@ def _flow_legs_and_fences(spark: SparkSession, sf_dir: str):
     every (full or incremental) motif scan reads the same fence.
 
     r16: the legs persist as the PROJECTED six-column frame over a
-    LAZY wt build, replacing reads of the full-width explosion memo —
+    LAZY wt build, replacing reads of a full-width explosion cache —
     the chain's 4-6 leg consumers (fence aggs, hop streams, peel's
     depth init and rollup) read a cache that carries only what they
     use (guide §2.3 project-before-reuse). Equivalence-gated
     interleaved A/B on wallet_flow_motifs: 2.65 → 1.81 s median
     (0.68×)."""
-    from .wallet_model import wallet_transactions_shared_or_lazy
-
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     legs = persist_tracked(
         wt.filter(
             (F.col("address_role") == "sender")
@@ -2160,7 +2152,7 @@ def wallet_dormancy_revival(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer (epoch µs, cents, integer-division day counts) — ANSI-safe,
     bit-equal cross-engine.
     """
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     legs = wt.select(
         "wallet_address",
         F.unix_micros("ts").alias("us"),
@@ -2263,10 +2255,8 @@ def wallet_wash_cycles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16: lazy wt + persist the projected five-column frame (the
     # _flow_legs_and_fences discipline) — raw feeds two fence aggs and
     # the fenced leg build, which should read a narrow cache, not the
-    # full-width explosion memo.
-    from .wallet_model import wallet_transactions_shared_or_lazy
-
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    # full-width explosion.
+    wt = wallet_transactions(spark, sf_dir)
     raw = persist_tracked(
         wt.filter(
             (F.col("address_role") == "sender")
@@ -2573,13 +2563,13 @@ def wallet_rolling_distinct_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     days keeps the output join-defined (no data-dependent calendar
     constant) and the row count ≤ |wallet-active-days|.
     """
-    # Legs feed exactly ONE consumer (the day-grain distinct), so a
-    # cold run streams the lazy build instead of materializing the
-    # full-width leg memo; what IS consumed twice (active anchors +
-    # the window explode) is the much smaller day-grain table — that
-    # is the piece worth persisting (r15: 4.6 s → the leg-memo write
-    # was the cold run's largest single cost).
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    # Legs feed exactly ONE consumer (the day-grain distinct), so the
+    # query streams the lazy build instead of materializing the
+    # full-width legs; what IS consumed twice (active anchors + the
+    # window explode) is the much smaller day-grain table — that is
+    # the piece worth persisting (r15: 4.6 s → the full-width leg
+    # cache write was the cold run's largest single cost).
+    wt = wallet_transactions(spark, sf_dir)
     dg = persist_tracked(
         wt.filter(
             (F.col("address_role") == "sender")

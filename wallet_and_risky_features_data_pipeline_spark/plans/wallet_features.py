@@ -38,7 +38,6 @@ from .wallet_model import (
     WALLET_TX_ORACLE_CTE,
     by_wallet,
     wallet_transactions,
-    wallet_transactions_shared_or_lazy,
 )
 
 _KEY = ("wallet_address", "contract_address")
@@ -76,11 +75,9 @@ def contract_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     lifetime stats — the reference's ``last_coin_balances`` shape
     (queries/ethereum_wallet_coin_balances.sql).
 
-    Legs come through the OPPORTUNISTIC memo read: the chain consumes
-    them exactly once, so a standalone run streams the lazy build
-    (no cache write it would read once), while a nightly session that
-    warmed the shared leg table (runner) still shares it."""
-    return contract_state_from(wallet_transactions_shared_or_lazy(spark, sf_dir))
+    The chain consumes the legs exactly once, so it streams the lazy
+    build (no cache write it would read once)."""
+    return contract_state_from(wallet_transactions(spark, sf_dir))
 
 
 def contract_state_from(wt: DataFrame) -> DataFrame:
@@ -123,8 +120,8 @@ def wallet_features_from(cs: DataFrame) -> DataFrame:
     """The A1 rollup over an arbitrary contract-state frame — lets a
     single-consumer caller (the DQ constraint gate) feed a LAZY,
     unpersisted leg build so the whole pipeline streams scan → explode
-    → window → agg in one pass instead of materializing the memoized
-    leg table it will read exactly once."""
+    → window → agg in one pass instead of materializing a leg table it
+    will read exactly once."""
     return (
         cs.groupBy("wallet_address")
         .agg(

@@ -27,11 +27,9 @@ model, shared by every feature-plan oracle.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import peek_session_memo, session_memo
 from ..functions.scalars import VALUE_DECIMAL, bucket_key
 from ..sources.readers import read_table
 
@@ -43,97 +41,26 @@ from ..sources.readers import read_table
 ORDER_COLS = ("ts", "priority", "transaction_index", "role_rank", "event_id")
 
 
-# The memo key of the role-exploded leg table: ~a dozen registry
-# queries (feature rollups, DQ gates, every window family, the
-# incremental engine) all start from the same scan → JSON-extract →
-# inline() explosion; memoizing the persisted legs per (session,
-# sf_dir) computes that base once per session instead of once per
-# query. Blacklisted variants bypass the memo (different row set).
-WT_MEMO = "wallet_transactions"
-
-
 def wallet_transactions(
-    spark: SparkSession, sf_dir: str, blacklist: tuple[str, ...] = ()
+    spark: SparkSession, sf_dir: str, since: str | None = None
 ) -> DataFrame:
-    """events → role-exploded wallet transaction legs (U3).
+    """events → role-exploded wallet transaction legs (U3), lazy and
+    unpersisted: each query streams the scan → JSON-extract → inline()
+    explosion into its own plan, so a filter a caller puts on ``ts``
+    reaches the parquet scan. A plan that reads the legs twice decides
+    itself whether a query-scoped ``persist_tracked`` pays.
 
-    ``blacklist`` drops pathological wallets before any window work —
-    the reference's hot-wallet guard (P8,
-    queries/ethereum_wallet_features.sql:381-390); combine with
-    ``operators.skew.salted_running_sum`` when dropping them isn't
-    acceptable.
-
-    The unblacklisted legs are a session memo (``caching`` module
-    docstring: the source must be immutable in-session)."""
-    if blacklist:
-        return _wallet_transactions_build(spark, sf_dir, blacklist)
-    return session_memo(
-        spark,
-        (WT_MEMO, sf_dir),
-        lambda: _wallet_transactions_build(spark, sf_dir, ()).persist(
-            StorageLevel.MEMORY_AND_DISK
-        ),
-    )
-
-
-def wallet_transactions_shared_or_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Opportunistic memo read for plans that consume the legs once
-    but SHARE them when a nightly session has already materialized the
-    table: return the session's memoized leg frame if one exists for
-    this input (the runner warms it once per nightly — the deployed
-    share), else the lazy unpersisted build (a single-query context
-    cannot amortize a cache write it will read exactly once). Never
-    BUILDS the memo itself — that choice stays with callers that know
-    they fan out (``wallet_transactions``)."""
-    hit = peek_session_memo(spark, (WT_MEMO, sf_dir))
-    return hit if hit is not None else _wallet_transactions_build(spark, sf_dir, ())
-
-
-def wallet_transactions_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNPERSISTED leg build for SINGLE-CONSUMER plans (VERDICT r13
-    #5): a query that streams the legs through one window/agg chain
-    exactly once should not pay the memo's InMemoryRelation
-    materialization (cache write + read-back ≈ 2× the build itself at
-    sf0.1 — measured on window_ordering, 2.0 s memo vs 1.0 s lazy).
-    Multi-consumer and iterative plans (the adaptive running sum's
-    hot-key count + branches, the graph family's edge tables) keep
-    ``wallet_transactions``' shared persisted memo."""
-    return _wallet_transactions_build(spark, sf_dir, ())
-
-
-def wallet_transactions_delta(
-    spark: SparkSession, sf_dir: str, since: str
-) -> DataFrame:
-    """Delta-only leg table for the warm (stored-prior-state) tier:
-    ``ts >= since`` applied to a LAZY, UNPERSISTED build so the
-    predicate reaches the parquet scan. The memoized
-    ``wallet_transactions`` deliberately cannot serve this — its
-    ``persist()`` puts an InMemoryRelation between the filter and the
-    scan, so a "delta" read through the memo materializes (and caches)
-    the FULL role explosion first: exactly the pre-split cost the warm
-    tier exists to avoid (the r12 local-delta probe read warm/full
-    ≥ 1 at 100× BECAUSE of this). On a date-partitioned events table
-    the pushed predicate prunes to the delta's files; on unpartitioned
-    parquet it still prunes row groups by ts stats, and only delta
-    rows pay the explosion."""
-    return _wallet_transactions_build(spark, sf_dir, (), since=since)
-
-
-def _wallet_transactions_build(
-    spark: SparkSession,
-    sf_dir: str,
-    blacklist: tuple[str, ...],
-    since: str | None = None,
-) -> DataFrame:
+    ``since`` keeps only legs at ``ts >= since``, the delta of the warm
+    (stored-prior-state) tier, filtered on the scan itself."""
     ev = read_table(spark, sf_dir, "events")
     if since is not None:
         # Filter BELOW the projections, directly on the scan: besides
         # pushing to parquet, this keeps the delta plan's shape
-        # distinct from the memoized full build, so Spark's
-        # CacheManager can never substitute the cached FULL explosion
-        # for it (plan-fragment equality is the substitution rule —
-        # a filter placed on TOP of an identical build fragment gets
-        # the cache swapped in underneath and reads everything).
+        # distinct from a full build, so Spark's CacheManager can never
+        # substitute a cached FULL explosion (some caller's persist of
+        # it) for the delta: plan-fragment equality is the substitution
+        # rule, and a filter placed on TOP of an identical build
+        # fragment gets the cache swapped in underneath.
         ev = ev.filter(F.col("ts") >= F.lit(since).cast("timestamp"))
         if "date_partition" in ev.columns:
             # Date-partitioned events store (write_partitioned's
@@ -214,9 +141,11 @@ def _wallet_transactions_build(
         "current_value",
         F.inline(F.array(sender_leg, receiver_leg)),
     )
-    if blacklist:
-        wt = wt.filter(~F.col("wallet_address").isin(*blacklist))
     return wt.withColumn("address_partition", bucket_key(F.col("wallet_address")))
+
+
+# perfbench/workloads.py::delta_pairs imports this name
+wallet_transactions_lazy = wallet_transactions
 
 
 def by_wallet(wt: DataFrame) -> DataFrame:

@@ -14,8 +14,6 @@ never RANGE (peer-group scans).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,8 +33,6 @@ from .wallet_model import (
     WALLET_TX_ORACLE_CTE,
     by_wallet,
     wallet_transactions,
-    wallet_transactions_lazy,
-    wallet_transactions_shared_or_lazy,
 )
 
 _KEY = ("wallet_address", "contract_address")
@@ -45,7 +41,7 @@ _KEY = ("wallet_address", "contract_address")
 # --------------------------------------------------------------------------
 # W1 + W2 — deterministic ordering and canonical-leg dedup rank
 def window_ordering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wt = by_wallet(wallet_transactions_lazy(spark, sf_dir))
+    wt = by_wallet(wallet_transactions(spark, sf_dir))
     df = deterministic_order(wt, _KEY, ORDER_COLS, out="row_num_by_contract")
     df = deterministic_order(df, ("wallet_address",), ORDER_COLS, out="row_num_by_wallet")
     df = dedup_rank(df, ("wallet_address", "event_id"), ("priority",), out="hash_rank")
@@ -90,22 +86,22 @@ FROM wallet_tx
 # everything else takes the plain single-pass window. Oracle
 # unchanged — salted ≡ plain is property-tested, and the two branches
 # partition the rows disjointly.
-HOT_KEY_THRESHOLD = int(os.environ.get("SPARK_GRAFT_HOT_KEY_THRESHOLD", "20000000"))
+HOT_KEY_THRESHOLD = 20_000_000
 
 
 def window_running_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16: lazy wt build + persist the PROJECTED frame AFTER the
     # by-wallet repartition — the adaptive router's three consumers
     # (hot-key occupancy agg + both branches) read a narrow
-    # wallet-partitioned cache instead of the full-width explosion
-    # memo, and the windows/aggregate above all reuse that one
+    # wallet-partitioned cache instead of the full-width explosion,
+    # and the windows/aggregate above all reuse that one
     # exchange's layout. Equivalence-gated interleaved A/B:
     # 2.41 → 1.38 s median (0.59×).
     from ..caching import persist_tracked
 
     wt = persist_tracked(
         by_wallet(
-            wallet_transactions_shared_or_lazy(spark, sf_dir).select(
+            wallet_transactions(spark, sf_dir).select(
                 "event_id", "ts", "priority", "transaction_index", "role_rank",
                 "wallet_address", "contract_address", "address_role",
                 "signed_value",
@@ -193,7 +189,7 @@ def window_running_balance_eth(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max(F.col("value").cast("decimal(12,4)")).alias("price"))
     )
     priced_legs = asof_join(
-        wallet_transactions_lazy(spark, sf_dir),
+        wallet_transactions(spark, sf_dir),
         prices.withColumnRenamed("event_type", "contract_address"),
         key=["contract_address"],
         event_id=["event_id"],
@@ -307,7 +303,7 @@ FROM signed
 # clusters on the same (wallet, contract) key the window sorted by, so
 # no additional exchange is needed after the window stage.
 def window_partition_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wt = by_wallet(wallet_transactions_lazy(spark, sf_dir))
+    wt = by_wallet(wallet_transactions(spark, sf_dir))
     df = running_sum(wt, F.col("signed_value"), _KEY, ORDER_COLS, out="balance")
     return df.groupBy(*_KEY).agg(
         F.sum("signed_value").cast("double").alias("partition_total"),
@@ -348,7 +344,7 @@ GROUP BY 1, 2
 # --------------------------------------------------------------------------
 # W9 + W10 — LEAD time-to-next-event and running time-weighted AUC
 def window_lead_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wt = by_wallet(wallet_transactions_lazy(spark, sf_dir))
+    wt = by_wallet(wallet_transactions(spark, sf_dir))
     df = running_sum(wt, F.col("signed_value"), ("wallet_address",), ORDER_COLS, out="wallet_balance")
     df = lead_delta(
         df,
@@ -462,7 +458,7 @@ GROUP BY 1, 2
 # --------------------------------------------------------------------------
 # U3 — role double-entry explosion sanity view
 def union_role_views(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     return wt.groupBy("address_role", "transaction_type").agg(
         F.count("*").alias("legs"),
         F.sum("signed_value").cast("double").alias("net_flow"),
@@ -508,7 +504,7 @@ def union_whitelist_literal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("contract_address")
         .unionByName(spark.range(1).select(F.lit("purchase").alias("contract_address")))
     )
-    wt = wallet_transactions_shared_or_lazy(spark, sf_dir)
+    wt = wallet_transactions(spark, sf_dir)
     joined = wt.join(F.broadcast(whitelist), "contract_address")
     return joined.groupBy("contract_address", "transaction_type").agg(
         F.count(F.lit(1)).alias("legs"),
@@ -555,7 +551,7 @@ def window_running_balance_salted(spark: SparkSession, sf_dir: str) -> DataFrame
 
     wt = persist_tracked(
         by_wallet(
-            wallet_transactions_shared_or_lazy(spark, sf_dir).select(
+            wallet_transactions(spark, sf_dir).select(
                 "event_id", "ts", "priority", "transaction_index", "role_rank",
                 "wallet_address", "contract_address", "address_role",
                 "signed_value",

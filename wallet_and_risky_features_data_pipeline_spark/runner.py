@@ -76,7 +76,9 @@ def run_features(spark, sf_dir: str, work_dir: str) -> None:
     committed state and MERGE only the pairs they touched
     (``merge_upsert`` carries every other row forward) into one flat
     generation: a few files, no per-bucket directories to write or
-    list. With no new events the run returns before reading the store."""
+    list. With no new events the run returns before reading the store.
+    The legs are built lazily, so the ``ts > tag`` bound reaches the
+    events scan and a nightly explodes only the delta's rows."""
     target = f"{work_dir}/features/contract_state"
     wt = wallet_transactions(spark, sf_dir)
     wm = generation_tag(target)

@@ -6,9 +6,6 @@ tables with MERGE INTO (features). Spark equivalents:
 
 - ``write_partitioned``  → ``df.write.partitionBy(...).mode(...)``
   (reference raw_data_ingestion_pipeline.py:110-118).
-- ``insert_incremental`` → anti-join dedup then append — the
-  ``INSERT INTO ... WHERE NOT EXISTS`` half of every stage template
-  (reference stage/transformations/ethereum_transactions.sql:40-77).
 - ``merge_upsert``       → join-based MERGE in plain parquet with an
   ATOMIC GENERATION COMMIT; stands in for Iceberg ``MERGE INTO``
   (reference queries/ethereum_wallet_features.sql:760-833) without a
@@ -107,29 +104,6 @@ def write_range_clustered(
         .write.mode(mode)
         .parquet(path)
     )
-
-
-def insert_incremental(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    natural_key: Sequence[str],
-    partition_cols: Sequence[str] = ("date_partition",),
-) -> None:
-    """Append only rows whose natural key is absent from the target
-    (anti-join dedup, SURVEY.md §2.3 J9). First write degrades to a
-    plain partitioned write (table-existence probe, §2.1 S13).
-    """
-    from pyspark.errors import AnalysisException
-
-    try:
-        existing = spark.read.parquet(path).select(*natural_key)
-    except AnalysisException:
-        # table-absent first write only; transient IO errors propagate
-        write_partitioned(df, path, partition_cols, mode="append")
-        return
-    fresh = df.join(existing, on=list(natural_key), how="left_anti")
-    write_partitioned(fresh, path, partition_cols, mode="append")
 
 
 def generation_tag(path: str) -> str | None:
@@ -1534,7 +1508,9 @@ def schema_drift(spark: SparkSession, path: str) -> list[dict]:
     are human-scale). Empty list = no drift (or fewer than two
     generations). Parquet is self-describing, so this needs no
     registered schema — the generations themselves are the contract's
-    history."""
+    history. Both generations are read in their committed schemas
+    (``_read_generation``), so a flattened partitioned snapshot does
+    not read as a retype of its all-digit string partition column."""
     gens = list_generations(path)
     if len(gens) < 2:
         return []
@@ -1542,10 +1518,11 @@ def schema_drift(spark: SparkSession, path: str) -> list[dict]:
     if live not in gens or gens.index(live) == 0:
         return []
     prev = gens[gens.index(live) - 1]
-    old = {f.name: f.dataType.simpleString()
-           for f in spark.read.parquet(os.path.join(path, prev)).schema.fields}
-    new = {f.name: f.dataType.simpleString()
-           for f in spark.read.parquet(os.path.join(path, live)).schema.fields}
+    old, new = (
+        {f.name: f.dataType.simpleString()
+         for f in _read_generation(spark, os.path.join(path, g)).schema.fields}
+        for g in (prev, live)
+    )
     drift = []
     for col in sorted(set(old) | set(new)):
         if col not in old:

@@ -1,15 +1,24 @@
-"""Cache lifetimes and the isolated-run recipe, on the shared test
-session: every cache lives for one query, and ``reset_session_memos``
-empties whatever an unscoped ``persist()`` left behind."""
+"""Block lifetimes and the isolated-run recipe, on the shared test
+session: every cache and local checkpoint lives for one query, and
+``reset_session_memos`` empties whatever an unscoped ``persist()`` left
+behind."""
 
 from __future__ import annotations
 
 import gc
+import os
+import re
 import time
 
 import pytest
 
-from wallet_and_risky_features_data_pipeline_spark.caching import reset_session_memos
+import wallet_and_risky_features_data_pipeline_spark as pkg
+from wallet_and_risky_features_data_pipeline_spark.caching import (
+    cache_scope,
+    checkpoint_tracked,
+    reset_session_memos,
+    timed_isolated,
+)
 
 from .conftest import SF_SMALL
 
@@ -23,10 +32,11 @@ def _cached_blocks(spark) -> dict[int, int]:
 def _settled_blocks(spark, done, timeout: float = 30.0) -> dict[int, int]:
     """Cached blocks once ``done(blocks, previous)`` holds or
     ``timeout`` passes: unpersists run async, and JVM GC lets the
-    context cleaner drop the blocks of unreachable RDDs (iterative
-    rounds' lineage-cut checkpoints). A Python DataFrame caught in a
-    reference cycle keeps its JVM plan reachable until Python's cycle
-    collector runs, so that runs first."""
+    context cleaner drop the blocks of unreachable RDDs that no scope
+    released (an unscoped ``persist()`` or checkpoint of an earlier
+    test). A Python DataFrame caught in a reference cycle keeps its JVM
+    plan reachable until Python's cycle collector runs, so that runs
+    first."""
     deadline = time.monotonic() + timeout
     last = None
     while True:
@@ -78,3 +88,59 @@ def test_ab_tool_times_equal_pair_and_refuses_differing_outputs(spark):
     with pytest.raises(SystemExit) as refused:
         ab.ab(spark, "dedup_exact", "dedup_minhash_lsh", SF_SMALL, pairs=1)
     assert refused.value.code not in (0, None)
+
+
+def test_scope_releases_local_checkpoints(spark):
+    """A ``checkpoint_tracked`` frame, eager or lazy, gives its RDD up
+    when its scope exits, and reading it afterwards fails loudly. With
+    no scope active it is a plain ``localCheckpoint``."""
+
+    def persistent(df) -> bool:
+        rdd = df._jdf.queryExecution().logical().rdd()
+        return rdd.id() in spark.sparkContext._jsc.getPersistentRDDs()
+
+    with cache_scope():
+        eager = checkpoint_tracked(spark.range(20))
+        lazy = checkpoint_tracked(spark.range(10).select("id"), eager=False)
+        assert (eager.count(), lazy.count()) == (20, 10)
+        assert persistent(eager) and persistent(lazy)
+    assert not persistent(eager) and not persistent(lazy)
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        lazy.collect()
+
+    unscoped = checkpoint_tracked(spark.range(5))
+    assert unscoped.count() == 5
+    assert persistent(unscoped)
+    unscoped._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
+def test_isolated_runs_leave_no_persistent_rdd(spark):
+    """An isolated run of an iterative query (connected components'
+    per-round checkpoints, the persisted edge lists) holds no more
+    persistent RDDs after its scope exits than before it, with no GC
+    forced in between."""
+    from wallet_and_risky_features_data_pipeline_spark.plans.registry import QUERIES
+
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    for name in ("dedup_keep_best", "wallet_components"):
+        before = len(rdds())
+        timed_isolated(spark, QUERIES[name], SF_SMALL)
+        assert len(rdds()) <= before, name
+
+
+def test_only_caching_persists_or_checkpoints():
+    """Every block a query pins goes through ``caching.py``: no other
+    module of the package calls ``.persist(`` or ``.localCheckpoint(``,
+    so each one is released by the query's ``cache_scope``."""
+    root = os.path.dirname(pkg.__file__)
+    offenders = []
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            path = os.path.join(dirpath, f)
+            if not f.endswith(".py") or path == os.path.join(root, "caching.py"):
+                continue
+            with open(path) as fh:
+                for i, line in enumerate(fh, 1):
+                    if re.search(r"\.(persist|localCheckpoint)\(", line):
+                        offenders.append(f"{os.path.relpath(path, root)}:{i}")
+    assert not offenders, offenders

@@ -111,6 +111,34 @@ def test_incremental_append_idempotent(spark, tmp_path):
     assert spark.read.parquet(target).count() == events.count()
 
 
+def test_incremental_append_releases_its_batch_when_the_write_raises(
+    spark, tmp_path, monkeypatch
+):
+    """The batch ``incremental_append`` caches for its count and write
+    is released even when the write raises: a failed append leaves
+    nothing in the CacheManager for the rest of the session."""
+    from wallet_and_risky_features_data_pipeline_spark.streaming import incremental
+
+    def failing_write(*a, **kw):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(incremental, "write_partitioned", failing_write)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    events = (
+        spark.read.parquet(f"{SF_SMALL}/events.parquet")
+        .transform(normalize_event_ts)
+        .withColumn("date_partition", F.date_format("ts", "yyyy-MM"))
+    )
+    store = WatermarkStore(str(tmp_path / "wm.json"))
+    with pytest.raises(OSError, match="disk full"):
+        incremental_append(
+            spark, events, str(tmp_path / "stage"), "t", ["event_id"], "ts", store
+        )
+    assert cache.isEmpty()
+    assert store.get("t") is None
+
+
 def test_incremental_append_watermark_ignores_python_timezone(
     spark, tmp_path, monkeypatch
 ):

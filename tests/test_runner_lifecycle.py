@@ -461,8 +461,9 @@ def test_nightly_merges_touched_pairs_and_empty_nightly_is_noop(
 def test_features_leave_no_cache_and_nightly_scans_past_the_tag(
     spark, tmp_path, base_sf, monkeypatch
 ):
-    """Every cache ``run_features`` takes lives for the run: the
-    CacheManager is empty after the cold run and after the nightly. The
+    """Every cache and checkpoint ``run_stage`` and ``run_features``
+    take lives for the run: the CacheManager is empty after the cold
+    run and after the nightly, and no persistent RDD is left over. The
     nightly's MERGE batch streams from the events scan with the
     ``ts > tag`` bound pushed onto it, not from a cached full-corpus
     leg table."""
@@ -476,11 +477,14 @@ def test_features_leave_no_cache_and_nightly_scans_past_the_tag(
     monkeypatch.setattr(runner, "merge_upsert", capture)
     cache = spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    n_rdds = len(rdds())
     wd = str(tmp_path)
     for sf in (base_sf, SF_SMALL):
         runner.run_stage(spark, sf, wd)
         runner.run_features(spark, sf, wd)
         assert cache.isEmpty()
+        assert len(rdds()) <= n_rdds
 
     assert len(batches) == 2
     plan = batches[-1]._jdf.queryExecution().executedPlan().toString()

@@ -1,31 +1,39 @@
-"""Query-scoped cache tracking and the isolated run.
+"""Query-scoped block tracking and the isolated run.
 
 Several operators ``persist()`` an intermediate that feeds two or more
 consumers inside one query plan (the LSH exploded band table, the
-n-gram inverted index, the contamination bench index). Spark's
-``CacheManager`` holds those entries by logical plan, so they are
-never garbage-collected: under a long-lived session running many
-queries (the 84-query bench, a notebook, a service) each run would
-permanently accumulate executor storage memory.
+n-gram inverted index, the contamination bench index), and iterative
+plans ``localCheckpoint`` each round to cut their lineage. Spark's
+``CacheManager`` holds the caches by logical plan, so they are never
+garbage-collected, and a checkpoint's blocks stay until JVM GC lets
+the ContextCleaner drop its RDD: under a long-lived session running
+many queries (the bench, a notebook, the nightly chain) each run would
+accumulate executor storage.
 
-``persist_tracked`` is a drop-in replacement for ``DataFrame.persist``
-that registers the cache with the innermost active ``cache_scope``;
-the scope unpersists everything it collected when it exits. Scoping is
-per-thread (``threading.local``) so concurrently-benched queries never
-release each other's live caches. With no scope active the behavior
-is identical to a plain ``persist()`` — library callers who manage
-their own lifecycle see no change.
+``persist_tracked`` and ``checkpoint_tracked`` are drop-in replacements
+for ``DataFrame.persist`` and ``DataFrame.localCheckpoint`` that
+register the frame with the innermost active ``cache_scope``; the
+scope releases everything it collected when it exits. That is the one
+lifetime of every block a query pins: it goes when the query's scope
+exits. A checkpointed frame read after its scope exited fails with
+``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` instead of recomputing silently.
+Scoping is per-thread (``threading.local``) so concurrently-benched
+queries never release each other's live blocks. With no scope active
+the behavior is identical to a plain ``persist()`` or
+``localCheckpoint()`` — library callers who manage their own lifecycle
+see no change.
 
 Usage (the bench wraps every query run):
 
     with cache_scope():
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    # all persists taken during the run are released here
+    # all persists and checkpoints taken during the run are released here
 
-No cache is shared between queries, so a source may be rewritten
-in-session and the next query reads it afresh. (A ``localCheckpoint``
-is not a cache here: its blocks go when Spark's ContextCleaner drops
-the unreachable RDD.)
+A writer that is done with its input when it returns (``merge_upsert``,
+the store erase, ``incremental_append``, ``runner.run_curate``) is
+decorated ``@cache_scope()``, so a chain of them releases its blocks
+per call. No cache is shared between queries, so a source may be
+rewritten in-session and the next query reads it afresh.
 """
 
 from __future__ import annotations
@@ -41,35 +49,50 @@ from pyspark.sql import DataFrame, SparkSession
 _scopes = threading.local()
 
 
+def _track(release: Callable[[], object]) -> None:
+    stack = getattr(_scopes, "stack", None)
+    if stack:
+        stack[-1].append(release)
+
+
 def persist_tracked(df: DataFrame) -> DataFrame:
     """``df.persist()`` registered with the active cache scope (if any)."""
     df = df.persist()
-    stack = getattr(_scopes, "stack", None)
-    if stack:
-        stack[-1].append(df)
+    _track(lambda: df.unpersist(blocking=False))
+    return df
+
+
+def checkpoint_tracked(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)`` registered with the active cache
+    scope (if any), which unpersists the checkpoint's RDD."""
+    df = df.localCheckpoint(eager)
+    # the checkpointed frame's logical plan is the LogicalRDD over the
+    # checkpointed RDD; no DataFrame API reaches that RDD
+    _track(lambda: df._jdf.queryExecution().logical().rdd().unpersist(False))
     return df
 
 
 @contextmanager
 def cache_scope() -> Iterator[None]:
-    """Unpersist every ``persist_tracked`` cache taken inside the block.
+    """Release every ``persist_tracked`` cache and ``checkpoint_tracked``
+    checkpoint taken inside the block.
 
-    ``blocking=False``: release is async block-dropping on the
-    executors — the caller doesn't wait, and in-flight tasks holding a
-    block finish from the partially-dropped cache or recompute.
+    Non-blocking: release is async block-dropping on the executors —
+    the caller doesn't wait, and in-flight tasks holding a block finish
+    from the partially-dropped cache or recompute.
     """
     stack = getattr(_scopes, "stack", None)
     if stack is None:
         stack = _scopes.stack = []
-    scope: list[DataFrame] = []
+    scope: list[Callable[[], object]] = []
     stack.append(scope)
     try:
         yield
     finally:
         stack.pop()
-        for df in scope:
+        for release in scope:
             try:
-                df.unpersist(blocking=False)
+                release()
             except Exception:
                 pass  # session already stopped — nothing to release
 
@@ -84,8 +107,8 @@ def timed_isolated(
     spark: SparkSession, fn: Callable[[SparkSession, str], DataFrame], sf_dir: str
 ) -> float:
     """Seconds for one isolated run of ``fn(spark, sf_dir)``: cache
-    emptied first, the run's own persists released on exit, ``noop``
-    sink."""
+    emptied first, the run's own persists and checkpoints released on
+    exit, ``noop`` sink."""
     reset_session_memos(spark)
     t0 = time.perf_counter()
     with cache_scope():

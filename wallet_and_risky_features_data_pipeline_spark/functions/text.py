@@ -28,16 +28,6 @@ def tokens(col: str) -> Column:
     return F.expr(rf"array_remove(split(trim({col}), '\\s+'), '')")
 
 
-def char_shingles(col: str, n: int = 8) -> Column:
-    """Character n-gram shingles over lower(trim(text)); at least one
-    shingle per doc (short docs shingle to themselves)."""
-    t = f"lower(trim({col}))"
-    return F.expr(
-        f"transform(sequence(1, greatest(length({t}) - {n - 1}, 1)),"
-        f" i -> substring({t}, i, {n}))"
-    )
-
-
 def token_count(col: str) -> Column:
     return F.size(tokens(col))
 

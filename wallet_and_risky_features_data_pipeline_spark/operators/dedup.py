@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..caching import persist_tracked
+from ..caching import checkpoint_tracked, persist_tracked
 
 N_HASHES = 16
 BAND_SIZE = 8  # 2 bands × 8 rows — b·r = N_HASHES
@@ -277,19 +277,19 @@ def connected_components(
     edges = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
-    edges = edges.localCheckpoint(eager=False)
+    edges = checkpoint_tracked(edges, eager=False)
     # Round 1's propagation folded into initialization: label =
     # min(node, neighbors) is one aggregation over the edge list — no
     # join against a label table and no convergence probe (it always
     # changes when edges exist). The loop below starts from round 2.
-    labels = (
+    labels = checkpoint_tracked(
         edges.groupBy("src")
         .agg(F.min("dst").alias("__mn"))
         .select(
             F.col("src").alias("node"),
             F.least(F.col("src"), F.col("__mn")).alias("label"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
 
     def _one_round(lbl: DataFrame, escalate: bool, doubling: DataFrame) -> DataFrame:
@@ -324,7 +324,7 @@ def connected_components(
     for it in range(0, round_budget, 2):
         half_a = _one_round(labels, it >= escalate_after, labels).drop("__changed")
         half_b = _one_round(half_a, it + 1 >= escalate_after, labels)
-        new_labels = half_b.localCheckpoint(eager=False)
+        new_labels = checkpoint_tracked(half_b, eager=False)
         changed = new_labels.agg(F.max(F.coalesce("__changed", F.lit(False)))).first()[0]
         labels = new_labels.drop("__changed")
         if not changed:
@@ -518,18 +518,6 @@ def ngram_jaccard_pairs(
     df-capped pair core (``ngram_capped_shingles`` /
     ``ngram_sized_pairs`` for the scale notes)."""
     return jaccard_pairs_from_capped(
-        ngram_capped_shingles(df, id_col, text_col, n, max_df), threshold
-    )
-
-
-def ngram_containment_pairs(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, threshold: float = 0.8,
-    max_df: int = 100,
-) -> DataFrame:
-    """Containment pairs ≥ threshold via the shared df-capped pair
-    core — same candidate-pair bound and in-row measure as
-    ``ngram_jaccard_pairs`` (see ``ngram_sized_pairs``)."""
-    return containment_pairs_from_capped(
         ngram_capped_shingles(df, id_col, text_col, n, max_df), threshold
     )
 

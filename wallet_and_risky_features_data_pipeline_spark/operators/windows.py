@@ -63,24 +63,6 @@ def running_sum(
     return df.withColumn(out, F.sum(value).over(w))
 
 
-def partition_totals(
-    df: DataFrame, partition: Sequence[str], aggs: dict[str, Column]
-) -> DataFrame:
-    """W5/W6 — whole-partition analytics (no ORDER BY ⇒ full frame):
-    totals, counts, min/max-ever (queries/ethereum_wallet_features.sql:122-135,164-167).
-
-    SCALE CAVEAT: a full-frame window buffers the entire partition per
-    task (the weighted-median 100× OOM class, PLANS.md §probe-caught
-    OOM). This operator exists for reference parity at ROW granularity;
-    rollup-grain plans must use a hash AGGREGATE instead — the r8
-    flagship rewrite (plans/wallet_features.py) is the template, and
-    mega-partition row-grain callers should take groupBy + join-back."""
-    w = _w(partition)
-    for out, expr in aggs.items():
-        df = df.withColumn(out, expr.over(w))
-    return df
-
-
 def latest_per_key(
     df: DataFrame,
     partition: Sequence[str],

@@ -17,6 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import checkpoint_tracked, persist_tracked
 from ..operators.joins import upsert_rows
 from ..streaming.incremental import (
     incremental_auc_rollup,
@@ -108,7 +109,6 @@ def wallet_components_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     ``ts >= split`` delta through the lazy pushdown builder.
     """
     from ..operators.dedup import connected_components
-    from ..caching import persist_tracked
     from ..sources.writers import read_store
 
     wt = wallet_transactions(spark, sf_dir)
@@ -304,7 +304,6 @@ def _lpa_edge_tables(spark: SparkSession, sf_dir: str):
     frontier) and its persisted symmetric closure carrying first_seen,
     so the old graph is a cheap filter, not a second |2E|
     materialization."""
-    from ..caching import persist_tracked
 
     wt = wallet_transactions(spark, sf_dir)
     pairs = persist_tracked(
@@ -347,11 +346,10 @@ def _lpa_dirty_refresh(
     # InMemoryTableScans / 44k exchanges, and codegen+task
     # serialization of that tree, not data, was 90% of the refresh's
     # wall time (31 s for a 1.5k-row round).
-    dirty = (
+    dirty = checkpoint_tracked(
         new_edges.select(F.col("a").alias("node"))
         .unionByName(new_edges.select(F.col("b").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # mode(lbl, deterministic=true) = most frequent label, ties to the
     # LOWEST — the LPA pick as ONE hash aggregate (same rewrite as
@@ -361,9 +359,9 @@ def _lpa_dirty_refresh(
     for r in range(1, rounds + 1):
         # checkpointed: consumed by the counts AND by the next frontier
         # expansion (neighbors of the dirty set ARE this join's d side)
-        edges_r = sym_full.join(
-            dirty.withColumnRenamed("node", "s"), "s", "left_semi"
-        ).localCheckpoint(eager=True)
+        edges_r = checkpoint_tracked(
+            sym_full.join(dirty.withColumnRenamed("node", "s"), "s", "left_semi")
+        )
         if r == 1:
             # round-0 label of any node is the node id — no lookup table
             picked = edges_r.groupBy("s").agg(
@@ -390,15 +388,11 @@ def _lpa_dirty_refresh(
                 .groupBy("s")
                 .agg(F.mode("lbl", True).alias("lbl"))
             )
-        recomputed = picked.select(
-            F.col("s").alias("node"), "lbl"
-        ).localCheckpoint(eager=True)
+        recomputed = checkpoint_tracked(picked.select(F.col("s").alias("node"), "lbl"))
         prev_dirty = dirty
         if r < rounds:
-            dirty = (
-                dirty.unionByName(edges_r.select(F.col("d").alias("node")))
-                .distinct()
-                .localCheckpoint(eager=True)
+            dirty = checkpoint_tracked(
+                dirty.unionByName(edges_r.select(F.col("d").alias("node"))).distinct()
             )
 
     return recomputed.unionByName(
@@ -762,7 +756,6 @@ def _lpa_refresh_from_store(spark: SparkSession, sf_dir: str):
     dirties most of the graph restarts the rounds from the stored
     closure instead of paying the frontier machinery's per-round
     semi/anti tax (measured 5× at sf0.1's ~10% delta)."""
-    from ..caching import persist_tracked
     from ..sources.writers import read_store
     from .risk_features import LPA_ROUNDS
 
@@ -830,13 +823,12 @@ def _lpa_refresh_from_store(spark: SparkSession, sf_dir: str):
     n_old = int(warm_state_meta(store).get("n_old", 0))
     n_delta = delta_pairs.count()
     if n_delta > _LPA_DIRTY_MAX_FRACTION * max(n_old, 1):
-        from ..caching import persist_tracked as _pt
         from .risk_features import _lpa_rounds
 
         # consumed by every round + modularity; persisted partitioned
         # on d so each round's join reads the cache's layout instead of
         # re-exchanging |2E| rows (r16 — the _lpa_graph rule)
-        sym_full = _pt(sym_full.repartition("d"))
+        sym_full = persist_tracked(sym_full.repartition("d"))
         final = persist_tracked(
             _lpa_rounds(sym_full, LPA_ROUNDS, persist_rounds=False)[-1]
         )
@@ -1081,7 +1073,6 @@ def _ensure_cc_state(spark: SparkSession, sf_dir: str) -> str:
     connectivity, so the refresh never stores or re-reads the old EDGE
     set — |V| state for an |E| graph."""
     from ..operators.dedup import connected_components
-    from ..caching import persist_tracked
 
     def build():
         wt = wallet_transactions(spark, sf_dir)
@@ -1123,7 +1114,6 @@ def wallet_components_warm(spark: SparkSession, sf_dir: str) -> DataFrame:
     build pushes ``ts >= SPLIT_AT`` to the events scan), no prior CC
     re-run. Held to the same FULL-recompute oracle."""
     from ..operators.dedup import connected_components
-    from ..caching import persist_tracked
     from ..sources.writers import read_store
 
     prior = read_store(spark, _ensure_cc_state(spark, sf_dir))

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..caching import persist_tracked
+from ..caching import checkpoint_tracked, persist_tracked
 from ..operators.windows import lead_delta, running_sum
 from ..sources.readers import read_table
 from .wallet_model import (
@@ -1058,7 +1058,7 @@ def wallet_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # lazy checkpoints: the count that follows each one is the action
     # that materializes it — one job per round, same lineage cut
-    alive = sym.localCheckpoint(eager=False)
+    alive = checkpoint_tracked(sym, eager=False)
     nodes = persist_tracked(alive.select("s").distinct())
     n_edges = alive.count()
     global LAST_KCORE_ROUNDS
@@ -1072,7 +1072,7 @@ def wallet_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         pruned = alive.join(keep, "s", "left_semi").join(
             keep.select(F.col("s").alias("d")), "d", "left_semi"
         )
-        alive = pruned.select("s", "d").localCheckpoint(eager=False)
+        alive = checkpoint_tracked(pruned.select("s", "d"), eager=False)
         n_now = alive.count()
         if n_now == n_edges:
             LAST_KCORE_ROUNDS = _round + 1

@@ -40,6 +40,7 @@ import sys
 
 from pyspark.sql import functions as F
 
+from .caching import cache_scope, checkpoint_tracked
 from .functions.scalars import bucket_key
 from .operators.quality import enforce, feature_constraints
 from .plans.wallet_features import contract_state_from, wallet_features_from
@@ -358,6 +359,7 @@ def run_stats(spark, sf_dir: str, work_dir: str) -> None:
     )
 
 
+@cache_scope()
 def run_curate(spark, sf_dir: str, work_dir: str) -> None:
     """Training-set snapshot (the curation DAG of an LLM data
     pipeline): quality gate → exact dedup → C4 boilerplate-passage
@@ -383,7 +385,7 @@ def run_curate(spark, sf_dir: str, work_dir: str) -> None:
     # changed snapshot advances the generation.
     gen = None
     if store_committed(store):
-        snapshot = snapshot.localCheckpoint(eager=True)
+        snapshot = checkpoint_tracked(snapshot)
         live = read_store(spark, store).select(snapshot.columns)
         if snapshot.exceptAll(live).isEmpty() and live.exceptAll(snapshot).isEmpty():
             gen = f"{os.path.basename(resolve_store(store))} (unchanged, no commit)"

@@ -46,6 +46,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import cache_scope, checkpoint_tracked
 from ..operators.joins import upsert_rows
 
 _LATEST = "_LATEST"
@@ -813,10 +814,7 @@ def _next_gen_number(path: str) -> int:
 # inside the TTL — trivially true for directory removals. "__vacuum-"
 # can never collide with a real generation intent ("gen-" prefix).
 _VFENCE_PREFIX = "__vacuum-"
-
-
-def _vacuum_fence_ttl() -> float:
-    return float(os.environ.get("SPARK_GRAFT_VACUUM_FENCE_TTL", "900"))
+_VACUUM_FENCE_TTL_S = 900.0
 
 
 def _make_vacuum_fence() -> str:
@@ -833,7 +831,7 @@ def _vacuum_fence_stale(intent: str) -> bool:
         born = float(intent[len(_VFENCE_PREFIX) :].split("-", 1)[0])
     except ValueError:
         return True  # unparseable fence: treat as stale, let it be broken
-    return _time.time() - born > _vacuum_fence_ttl()
+    return _time.time() - born > _VACUUM_FENCE_TTL_S
 
 
 def _flip_latest(path: str, gen_name: str, expected_base: str | None = None) -> None:
@@ -1209,9 +1207,8 @@ def vacuum_generations(
       FORWARD by the next writer, after which it is history and a
       later sweep reclaims it. The fence is released when the sweep
       still owns it; a fence orphaned by a crashed sweep is broken by
-      writers/sweeps after ``SPARK_GRAFT_VACUUM_FENCE_TTL`` (900 s
-      default — a sweep is directory removals and must finish far
-      inside it).
+      writers/sweeps after ``_VACUUM_FENCE_TTL_S`` (900 s — a sweep is
+      directory removals and must finish far inside it).
     - Staging dirs get an mtime grace window because staging happens
       BEFORE the fence-visible protocol starts: a live writer's
       in-flight Spark output is indistinguishable from a crash
@@ -1312,6 +1309,7 @@ def vacuum_generations(
     return removed
 
 
+@cache_scope()
 def merge_upsert(
     spark: SparkSession,
     updates: DataFrame,
@@ -1343,7 +1341,7 @@ def merge_upsert(
     # probe, the anti-join and the final union — for monotone upserts
     # that plan embeds a join against the whole store and would
     # otherwise re-execute per consumer (ADVICE r02).
-    updates = updates.localCheckpoint(eager=True)
+    updates = checkpoint_tracked(updates)
     # Defense in depth: an empty batch (e.g. the trailing availableNow
     # micro-batch of a stream) must be a no-op, never a new generation.
     if updates.isEmpty():
@@ -1441,10 +1439,11 @@ def erase_from_store(
         raise
 
 
+@cache_scope()
 def _erase_from_store_once(
     spark: SparkSession, keys: DataFrame, path: str, key_col: str
 ) -> int:
-    keys = keys.select(key_col).distinct().localCheckpoint(eager=True)
+    keys = checkpoint_tracked(keys.select(key_col).distinct())
     if keys.isEmpty():
         return 0
     from .readers import _ensure_session_confs

@@ -35,6 +35,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import cache_scope, persist_tracked
 from ..operators.joins import anti_dedup
 from ..sources.writers import write_partitioned
 
@@ -72,6 +73,7 @@ class WatermarkStore:
         os.replace(tmp, self.path)
 
 
+@cache_scope()
 def incremental_append(
     spark: SparkSession,
     source: DataFrame,
@@ -101,7 +103,7 @@ def incremental_append(
         # (skipping the anti-join on a transient failure would re-append
         # already-present rows)
         fresh = batch
-    fresh = fresh.persist()
+    fresh = persist_tracked(fresh)
     n = fresh.count()
     if n:
         write_partitioned(fresh, target_path, partition_cols, mode="append")
@@ -109,7 +111,6 @@ def incremental_append(
         new_wm = batch.agg(F.max(watermark_col).cast("string")).first()[0]
         if new_wm is not None:
             store.set(table, new_wm)
-    fresh.unpersist()
     return n
 
 

@@ -19,6 +19,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import checkpoint_tracked
 from ..sources.readers import _ensure_session_confs, normalize_event_ts
 
 
@@ -2111,15 +2112,14 @@ def stream_source_psi(
     from pyspark.sql import Window
 
     latest = Window.partitionBy("source", "bin").orderBy(F.col("n_docs").desc())
-    per = (
+    # MemoryPlan scans reuse attribute ids (no newInstance), so the
+    # PSI tail's self-joins over this lineage would conflict — pin the
+    # tiny sources×16 histogram to a LogicalRDD first (the transitions
+    # rollup's toDF trick, in checkpoint form)
+    per = checkpoint_tracked(
         snaps.withColumn("__rk", F.row_number().over(latest))
         .filter(F.col("__rk") == 1)
         .select("source", "bin", "ca")
-        # MemoryPlan scans reuse attribute ids (no newInstance), so the
-        # PSI tail's self-joins over this lineage would conflict — pin
-        # the tiny sources×16 histogram to a LogicalRDD first (the
-        # transitions rollup's toDF trick, in checkpoint form)
-        .localCheckpoint()
     )
     return psi_from_histogram(per)
 
@@ -2213,11 +2213,10 @@ def stream_embedding_drift(
     latest = Window.partitionBy("label", "dim").orderBy(F.col("n_vectors").desc())
     # labels×64 — tiny; LogicalRDD pin for the same MemoryPlan
     # self-join reason as the PSI rollup
-    label_sums = (
+    label_sums = checkpoint_tracked(
         snaps.withColumn("__rk", F.row_number().over(latest))
         .filter(F.col("__rk") == 1)
         .select("label", "dim", "s", F.col("n_vectors").alias("n_rows"))
-        .localCheckpoint()
     )
     global_sums = label_sums.groupBy("dim").agg(F.sum("s").alias("g"))
     s19 = F.col("s").cast("decimal(19,0)")

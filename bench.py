@@ -41,7 +41,10 @@ from wallet_and_risky_features_data_pipeline_spark.caching import (
     timed_isolated,
 )
 from wallet_and_risky_features_data_pipeline_spark.plans.registry import QUERIES
-from wallet_and_risky_features_data_pipeline_spark.session import get_spark
+from wallet_and_risky_features_data_pipeline_spark.session import (
+    codegen_compiles,
+    get_spark,
+)
 
 # 8 concurrent queries balances slot contention against scheduler
 # utilization here: iteration-heavy plans (MLlib fits, streaming
@@ -103,7 +106,11 @@ def main() -> None:
 
     # Warm every plan once at the smallest SF so the timed pass
     # measures the plans' execution, not session startup or first-run
-    # whole-stage-codegen compilation (which is per-plan, per-JVM).
+    # codegen compilation. That holds only while the codegen cache
+    # keeps the warm-up's classes: at Spark's defaults (100 entries)
+    # the warm-up compiled 4,690 classes and the first sf0.1 pass
+    # 5,447 more; with session.get_spark's cache, 2,613 and 67. The
+    # timed pass still compiles what AQE plans differently at sf0.1.
     warm_dir = os.environ.get("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     errors: dict[str, str] = {}
 
@@ -119,8 +126,10 @@ def main() -> None:
             errors[name] = traceback.format_exc(limit=3)
         warm_times[name] = time.perf_counter() - start
 
+    compiles0 = codegen_compiles(spark)
     with ThreadPoolExecutor(CONCURRENCY) as pool:
         list(pool.map(warm, sorted(QUERIES.items())))
+    warm_compiles = codegen_compiles(spark) - compiles0
 
     def run(item: tuple[str, object]) -> tuple[str, float] | None:
         name, fn = item
@@ -156,11 +165,14 @@ def main() -> None:
     # Every query's caches are released when it finishes (cache_scope),
     # so the concurrent tier shares no result across queries and each
     # pass executes the full pipelines.
+    pass_compiles: list[int] = []
     for _ in range(max(1, int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2")))):
+        compiles0 = codegen_compiles(spark)
         start = time.perf_counter()
         with ThreadPoolExecutor(CONCURRENCY) as pool:
             passes.append(dict(t for t in pool.map(run, order) if t))
         wall_runs.append(round(time.perf_counter() - start, 4))
+        pass_compiles.append(codegen_compiles(spark) - compiles0)
     # best pass = min wall AMONG the most-complete passes: a pass where
     # a query errored out early has an artificially low wall and must
     # not beat a complete one
@@ -190,17 +202,23 @@ def main() -> None:
     iso_threshold = float(os.environ.get("SPARK_GRAFT_BENCH_ISOLATED_MIN_SEC", "0"))
     isolated: dict[str, float] = {}
     isolated_errors: dict[str, str] = {}
+    # Classes each query's first isolated run compiled. Every plan ran
+    # three times before it at two scales, so a nonzero count is a plan
+    # that defeats the codegen cache: its generated code differs per run.
+    isolated_compiles: dict[str, int] = {}
     by_weight = sorted(timings, key=lambda k: -timings[k])
     first_round = [k for k in by_weight if timings[k] >= iso_threshold]
 
     def run_isolated(name: str, runs: int) -> None:
         best = None
         for _ in range(runs):
+            compiles0 = codegen_compiles(spark)
             try:
                 took = timed_isolated(spark, QUERIES[name], sf_dir)
             except Exception:
                 isolated_errors[name] = traceback.format_exc(limit=3).splitlines()[-1]
                 break  # keep any timing already measured
+            isolated_compiles.setdefault(name, codegen_compiles(spark) - compiles0)
             best = took if best is None else min(best, took)
         if best is not None:
             prior = isolated.get(name)
@@ -565,6 +583,12 @@ def main() -> None:
         },
         "bench_delta": bench_delta,
         "isolated_errors": isolated_errors,
+        # codegen cache misses (classes compiled): the sf0.001 warm-up,
+        # each concurrent pass, and each query's first isolated run
+        "warm_compiles": warm_compiles,
+        "pass_compiles": pass_compiles,
+        "isolated_compiles": {k: isolated_compiles[k] for k in sorted(isolated_compiles)},
+        "isolated_compiles_total": sum(isolated_compiles.values()),
         "wall_runs": wall_runs,
         "errors": {k: errors[k].splitlines()[-1] for k in sorted(errors)},
         "sf": sf,
@@ -626,6 +650,7 @@ def main() -> None:
         "paired_warm_n": paired_warm_n,
         "paired_warm_wins": paired_warm_wins,
         "errors": detail["errors"],
+        "isolated_compiles_total": detail["isolated_compiles_total"],
         "sf": sf,
         "concurrency": CONCURRENCY,
         "passes": len(wall_runs),

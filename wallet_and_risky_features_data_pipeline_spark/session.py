@@ -7,6 +7,16 @@ driver-side chunking — reference features_pipeline.py:96-126); dynamic
 partition-overwrite gives us an Iceberg-MERGE-like idempotent writer in
 plain parquet; UTC session time keeps timestamp semantics engine-neutral
 so results hash-match the DuckDB oracle.
+
+Every plan also passes through one cache: Spark compiles each distinct
+generated class (whole-stage codegen, projections, predicates) once
+and keeps it in a per-JVM class cache. At Spark's defaults (100
+entries, class names that carry the codegen stage id) a long-lived
+session thrashes it: perfbench's 7-query ``graph_dedup`` pass compiled
+344 classes cold and 339 on every warm pass. Keying classes on plan
+shape and sizing the cache to the query registry's working set cut
+that to 233 cold and 0-2 warm. ``codegen_compiles`` counts compiles,
+so a plan that defeats the cache shows up in bench.py's isolated tier.
 """
 
 from __future__ import annotations
@@ -14,6 +24,24 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Codegen class cache size (Spark's default is 100). Run one at a time
+# in one session, the 212-query registry compiles 2,607 distinct classes
+# at sf0.001, 29 more at sf0.01, and 29 per rerun from plans whose
+# generated code differs per run (streaming encoders' lambda-variable
+# ids, AQE join-side flips). 4,096 holds that with ~50% headroom.
+# Measured after a full-registry warm and a GC, against 100 entries:
+# +25 MB Metaspace, +107 MB heap.
+CODEGEN_CACHE_MAX_ENTRIES = 4096
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Cumulative count of classes this JVM's code generator compiled,
+    i.e. codegen cache misses. Take deltas around a run. This is the
+    compile-time histogram's event count, which is exact; summing its
+    reservoir is not (it keeps 1,028 samples)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def get_spark(
@@ -60,5 +88,10 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        # Generated classes keyed on plan shape, not stage id: two stages
+        # of the same shape share one compiled class.
+        .config("spark.sql.codegen.useIdInClassName", "false")
+        # Static: read once, when the JVM's code generator first runs.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
     )
     return builder.getOrCreate()
